@@ -41,6 +41,37 @@ def _get_embedder(model_path: str | None, dim: int):
     return lambda c: mock_embedding_expr(c, dim=dim, normalize=True)
 
 
+def _observe(df, name: str):
+    """Count ``df``'s rows during the first action that runs it, instead
+    of a separate ``.count()`` that re-executes its whole lineage.
+
+    Returns ``(observed, count)``: ``observed`` must replace ``df`` in
+    the plan, and ``count()`` returns the row count once an action over
+    ``observed`` has finished. That first action must consume every row
+    (a write, an aggregate, an eager checkpoint), never a ``limit``.
+    When a join side comes back empty, AQE prunes the subtree holding
+    the observation and Spark has no metrics row for it (``toPyRow``
+    fails); ``count()`` then falls back to an exact ``df.count()``,
+    which is cheap there because the pipeline is empty.
+    """
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation(name)
+    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    def count() -> int:
+        try:
+            return obs.get["n"]
+        except Py4JJavaError as exc:
+            if exc.java_exception.getClass().getName() != "java.lang.AssertionError":
+                raise
+            return df.count()
+
+    return observed, count
+
+
 def cmd_build(args: argparse.Namespace) -> int:
     from rag_content_spark.plans.build_pipeline import BuildConfig, build_chunks
     from rag_content_spark.session import get_spark
@@ -675,10 +706,27 @@ def cmd_ann_query(args: argparse.Namespace) -> int:
 
 
 def cmd_curate(args: argparse.Namespace) -> int:
-    """Curation pipeline as one lazy plan: (optional passage scrub) ->
-    Gopher gate -> exact dedup -> (optional MinHash near-dedup) ->
-    (optional mix rebalance) -> sequence packing -> shard-partitioned
-    parquet + a stats.json of per-stage counts."""
+    """Curation pipeline: (optional passage scrub) -> Gopher gate ->
+    exact dedup -> (optional MinHash near-dedup) -> (optional DSIR
+    select) -> (optional mix rebalance) -> sequence packing ->
+    shard-partitioned parquet + a stats.json of per-stage counts.
+
+    Each stage runs once. The exact-deduped corpus is where the plan
+    fans out: LSH candidates, the overflow report, the shingle table,
+    the near-dup anti-join, DSIR, packing and the join-back all read
+    it. So it is ``localCheckpoint(eager=True)``'d once, and every
+    consumer reads the checkpoint instead of recomputing scan -> gate
+    -> hash-group -> semi-join.
+
+    The stats.json counts are ``Observation``s (:func:`_observe`), not
+    ``.count()`` calls that would each re-run the lineage. ``input``,
+    ``after_quality_gate`` and ``after_exact_dedup`` fill during the
+    checkpoint, in time for DSIR's default ``k``; ``after_near_dedup``,
+    ``after_dsir_select``, ``after_rebalance`` and ``output`` fill
+    during the final write (the near-dedup one earlier, during DSIR's
+    feature checkpoint, when both run). ``output`` counts the rows
+    written, so an empty result needs no read-back of an empty
+    ``partitionBy`` directory."""
     from pyspark.sql import functions as F
 
     from rag_content_spark.operators.dedup import (
@@ -703,7 +751,14 @@ def cmd_curate(args: argparse.Namespace) -> int:
         docs = warc_responses_to_documents(read_warc_records(spark, args.input))
     else:
         docs = spark.read.parquet(args.input)
-    stats = {"input": docs.count()}
+    # stage -> count, or the observation's count() until the write
+    stats: dict = {}
+
+    def observe(key, df):
+        df, stats[key] = _observe(df, key)
+        return df
+
+    docs = observe("input", docs)
 
     if args.scrub_passages:
         scrubbed = remove_crossdoc_passages(docs)
@@ -712,12 +767,12 @@ def cmd_curate(args: argparse.Namespace) -> int:
             "doc_id",
         )
 
-    gated = docs.filter(gopher_rules("text")["keep"])
-    stats["after_quality_gate"] = gated.count()
+    gated = observe("after_quality_gate", docs.filter(gopher_rules("text")["keep"]))
 
     survivors = exact_dedup(gated).select(F.col("keep_id").alias("doc_id"))
-    deduped = gated.join(survivors, "doc_id", "leftsemi")
-    stats["after_exact_dedup"] = deduped.count()
+    deduped = observe(
+        "after_exact_dedup", gated.join(survivors, "doc_id", "leftsemi")
+    ).localCheckpoint(eager=True)
 
     if args.near_dedup:
         # exact_dedup above already collapsed identical texts to one
@@ -744,37 +799,35 @@ def cmd_curate(args: argparse.Namespace) -> int:
                 "n_dropped_ids": int(row["n_dropped_ids"]),
             }
         pairs = jaccard_pairs(deduped, cand, threshold=args.jaccard)
-        deduped = apply_dedup(deduped, pairs)
-        stats["after_near_dedup"] = deduped.count()
+        deduped = observe("after_near_dedup", apply_dedup(deduped, pairs))
 
     if getattr(args, "dsir_target", None):
         from rag_content_spark.operators.selection import dsir_select
 
         target = spark.read.parquet(args.dsir_target)
-        k = args.dsir_keep or max(1, stats["after_exact_dedup"] // 2)
+        # filled by the checkpoint above
+        k = args.dsir_keep or max(1, stats["after_exact_dedup"]() // 2)
         sel = dsir_select(deduped, target, k=k).select("doc_id")
-        deduped = deduped.join(sel, "doc_id", "leftsemi")
-        stats["after_dsir_select"] = deduped.count()
+        deduped = observe(
+            "after_dsir_select", deduped.join(sel, "doc_id", "leftsemi")
+        )
 
     if args.mix:
         mix = {
             k: float(v)
             for k, v in (kv.split("=") for kv in args.mix.split(","))
         }
-        deduped = rebalance_to_mix(deduped, mix)
-        stats["after_rebalance"] = deduped.count()
+        deduped = observe("after_rebalance", rebalance_to_mix(deduped, mix))
 
     packed = pack_sequences(deduped, budget=args.pack_budget)
     out_cols = [c for c in deduped.columns if c != "doc_id"]
     (
-        packed.join(deduped.select("doc_id", *out_cols), "doc_id")
+        observe("output", packed.join(deduped.select("doc_id", *out_cols), "doc_id"))
         .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(os.path.join(args.output, "curated"))
     )
-    stats["output"] = spark.read.parquet(
-        os.path.join(args.output, "curated")
-    ).count()
+    stats = {k: v() if callable(v) else v for k, v in stats.items()}
     with open(os.path.join(args.output, "stats.json"), "w") as f:
         json.dump(stats, f, indent=2)
     print(json.dumps(stats))
@@ -795,11 +848,13 @@ def cmd_tokenize(args: argparse.Namespace) -> int:
 
     spark = get_spark("rag-spark-tokenize")
     ensure_reader_confs(spark)
-    docs = spark.read.parquet(args.input)
+    # the docs count fills during the merge-learning collect, the vocab
+    # count during the vocab write
+    docs, n_docs = _observe(spark.read.parquet(args.input), "docs")
     # TRUE iterative BPE (count -> merge -> recount) over the
     # vocabulary-sized word-frequency table
     merges = learn_bpe_merges(docs, n_merges=args.merges)
-    vocab = bpe_vocab(docs, merges)
+    vocab, vocab_size = _observe(bpe_vocab(docs, merges), "vocab_size")
     encoded = bpe_encode_corpus(docs, merges, vocab=vocab)
     os.makedirs(args.output, exist_ok=True)
     vocab.write.mode("overwrite").parquet(os.path.join(args.output, "vocab.parquet"))
@@ -813,8 +868,8 @@ def cmd_tokenize(args: argparse.Namespace) -> int:
         dtype=args.dtype,
     ).collect()
     stats = {
-        "docs": docs.count(),
-        "vocab_size": vocab.count(),
+        "docs": n_docs(),
+        "vocab_size": vocab_size(),
         "merges": len(merges),
         "shards": len(manifest),
         "total_tokens": sum(m["n_tokens"] for m in manifest),
@@ -955,24 +1010,26 @@ def cmd_datasheet(args: argparse.Namespace) -> int:
     docs = spark.read.parquet(args.input)
     tok = tokens(F.col("text"))
     t = docs.select(
-        F.size(tok).alias("n_tok"), stable_hash64(F.col("text")).alias("h")
+        F.size(tok).alias("n_tok"),
+        stable_hash64(F.col("text")).alias("h"),
+        gopher_rules("text")["keep"].alias("keep"),
     )
     base = t.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("total_tokens"),
         F.count_distinct("h").alias("n_distinct"),
+        F.count_if("keep").alias("n_keep"),
     ).collect()[0]
     vocab = docs.select(F.explode(tok).alias("tk")).agg(
         F.count_distinct("tk").alias("v")
     ).collect()[0]["v"]
-    keep = docs.filter(gopher_rules("text")["keep"]).count()
     out = {
         "n_docs": base["n_docs"],
         "total_tokens": base["total_tokens"],
         "vocab_size": vocab,
         "mean_doc_tokens": round(base["total_tokens"] / max(base["n_docs"], 1), 2),
         "exact_dup_rate": round(1.0 - base["n_distinct"] / max(base["n_docs"], 1), 6),
-        "gopher_keep_rate": round(keep / max(base["n_docs"], 1), 6),
+        "gopher_keep_rate": round(base["n_keep"] / max(base["n_docs"], 1), 6),
     }
     if "lang" in docs.columns:
         out["langs"] = {

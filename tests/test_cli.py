@@ -1,6 +1,8 @@
 import json
 import os
 
+import pytest
+
 
 def _write_corpus(root):
     docs = root / "docs"
@@ -206,6 +208,177 @@ def test_cli_curate_warc_input(spark, tmp_path):
     assert curated.collect()[0]["source"] == "http://example.com/a"
 
 
+_PROSE = (
+    "the a of and to with that be data query vector stream window merge "
+    "table column value join filter group hash order sort key scan batch"
+).split()
+
+
+def _prose(seed, n=60):
+    import random
+
+    rng = random.Random(seed)
+    return " ".join(rng.choice(_PROSE) for _ in range(n))
+
+
+def _write_parity_input(spark, root, flag):
+    """Input for one parity case. The parquet corpora plant an exact and
+    a near duplicate, the WARC crawl an exact one. The scrub corpus
+    shares a boilerplate passage instead, since scrubbing an exact
+    duplicate leaves a doc with no tokens."""
+    if flag == "warc":
+        import gzip
+
+        from tests.test_warc import _http_response, _record
+
+        src = root / "crawl"
+        src.mkdir()
+        texts = [_prose(i) for i in range(6)] + [_prose(0), "!!!! ???? ...."]
+        for i, text in enumerate(texts):
+            body = f"<html><body><p>{text}</p></body></html>".encode()
+            rec = _record("response", f"http://example.com/{i}",
+                          _http_response(body),
+                          extra="Content-Type: application/http\r\n")
+            (src / f"{i}.warc.gz").write_bytes(gzip.compress(rec))
+        return str(src)
+    langs = ["en", "es", "fr"]
+    if flag == "scrub":
+        boiler = "copyright the data team all rights reserved see the terms of use"
+        rows = [(i, f"{boiler} {_prose(i)}", langs[i % 3]) for i in range(8)]
+    else:
+        rows = [(i, _prose(i), langs[i % 3]) for i in range(10)]
+        rows += [
+            (10, _prose(1), "es"),                    # exact dup of 1
+            (11, _prose(2, 59) + " merge", "fr"),     # near dup of 2
+        ]
+    rows.append((99, "!!!! ???? ....", "en"))         # gate drops
+    src = str(root / "docs.parquet")
+    spark.createDataFrame(rows, ["doc_id", "text", "lang"]).write.parquet(src)
+    return src
+
+
+def _stage_counts(spark, src, flags):
+    """stats.json for ``curate`` as ``.count()``s of each stage, composed
+    from the public operators the way the command composes them, plus
+    the frame the command writes."""
+    from pyspark.sql import functions as F
+
+    from rag_content_spark.operators.dedup import (
+        apply_dedup,
+        exact_dedup,
+        jaccard_pairs,
+        minhash_lsh_candidates,
+        minhash_lsh_overflow,
+        overflow_summary,
+        remove_crossdoc_passages,
+    )
+    from rag_content_spark.operators.packing import pack_sequences
+    from rag_content_spark.operators.quality import gopher_rules, rebalance_to_mix
+    from rag_content_spark.operators.selection import dsir_select
+    from rag_content_spark.sources.warc import (
+        read_warc_records,
+        warc_responses_to_documents,
+    )
+
+    opt = dict(zip(flags, flags[1:] + [None]))  # flag -> the token after it
+    if opt.get("--input-format") == "warc":
+        docs = warc_responses_to_documents(read_warc_records(spark, src))
+    else:
+        docs = spark.read.parquet(src)
+    exp = {"input": docs.count()}
+    if "--scrub-passages" in flags:
+        scrubbed = remove_crossdoc_passages(docs)
+        docs = docs.drop("text").join(
+            scrubbed.select("doc_id", F.col("clean_text").alias("text")), "doc_id"
+        )
+    gated = docs.filter(gopher_rules("text")["keep"])
+    exp["after_quality_gate"] = gated.count()
+    deduped = gated.join(
+        exact_dedup(gated).select(F.col("keep_id").alias("doc_id")),
+        "doc_id",
+        "leftsemi",
+    )
+    exp["after_exact_dedup"] = deduped.count()
+    if "--near-dedup" in flags:
+        cap = int(opt.get("--max-bucket-size", 1000)) or None
+        cand = minhash_lsh_candidates(deduped, max_bucket_size=cap)
+        if cap:
+            row = overflow_summary(minhash_lsh_overflow(deduped, cap)).collect()[0]
+            exp["lsh_overflow"] = {"max_bucket_size": cap, **row.asDict()}
+        deduped = apply_dedup(deduped, jaccard_pairs(deduped, cand, threshold=0.7))
+        exp["after_near_dedup"] = deduped.count()
+    if "--dsir-target" in opt:
+        k = int(opt.get("--dsir-keep", 0)) or max(1, exp["after_exact_dedup"] // 2)
+        sel = dsir_select(deduped, spark.read.parquet(opt["--dsir-target"]), k=k)
+        deduped = deduped.join(sel.select("doc_id"), "doc_id", "leftsemi")
+        exp["after_dsir_select"] = deduped.count()
+    if "--mix" in opt:
+        mix = {k: float(v) for k, v in (kv.split("=") for kv in opt["--mix"].split(","))}
+        deduped = rebalance_to_mix(deduped, mix)
+        exp["after_rebalance"] = deduped.count()
+    out = pack_sequences(deduped, budget=64).join(
+        deduped.select("doc_id", *[c for c in deduped.columns if c != "doc_id"]),
+        "doc_id",
+    )
+    exp["output"] = out.count()
+    return exp, out
+
+
+@pytest.mark.parametrize(
+    "flag",
+    ["near_mix", "dsir", "dsir_default_k", "scrub", "warc", "no_bucket_cap"],
+)
+def test_cli_curate_stats_parity(spark, tmp_path, flag):
+    """Every stats.json value equals a ``.count()`` of the same stage, in
+    the old key order with ``output`` last, and the written rows and
+    packing slots equal the lazily composed plan's. The cases cover an
+    observed frame consumed twice (the scrub self-join; packing plus the
+    join-back) and one under DSIR's ``orderBy().limit()``."""
+    from rag_content_spark.cli import main
+
+    src = _write_parity_input(spark, tmp_path, flag)
+    flags = {
+        "near_mix": ["--near-dedup", "--mix", "en=0.5,es=0.25,fr=0.25"],
+        "dsir": ["--dsir-target", src, "--dsir-keep", "4"],
+        "dsir_default_k": ["--dsir-target", src, "--near-dedup"],
+        "scrub": ["--scrub-passages", "--near-dedup"],
+        "warc": ["--input-format", "warc", "--near-dedup"],
+        "no_bucket_cap": ["--near-dedup", "--max-bucket-size", "0"],
+    }[flag]
+    out = str(tmp_path / "out")
+    assert main(["curate", "-i", src, "-o", out, "--pack-budget", "64", *flags]) == 0
+    stats = json.load(open(f"{out}/stats.json"))
+    exp, frame = _stage_counts(spark, src, flags)
+    assert list(stats) == list(exp) and list(stats)[-1] == "output"
+    assert stats == exp
+    cols = ["doc_id", "shard", "seq_bucket"]
+    written = spark.read.parquet(f"{out}/curated").select(*cols).collect()
+    assert sorted(written) == sorted(frame.select(*cols).collect())
+
+
+@pytest.mark.parametrize("kind", ["empty", "gated_out"])
+def test_cli_curate_empty_result(spark, tmp_path, kind):
+    """An empty input, or one the Gopher gate drops whole, exits 0 with
+    zero counts instead of failing to read back an empty output."""
+    from rag_content_spark.cli import main
+
+    rows = [] if kind == "empty" else [(i, "!!!! ???? ....", "en") for i in range(5)]
+    src = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(src)
+    out = str(tmp_path / "out")
+    assert main(["curate", "-i", src, "-o", out, "--near-dedup", "--mix", "en=1.0"]) == 0
+    stats = json.load(open(f"{out}/stats.json"))
+    assert stats.pop("input") == len(rows)
+    assert stats.pop("lsh_overflow")["n_dropped_ids"] == 0
+    assert stats == {
+        "after_quality_gate": 0,
+        "after_exact_dedup": 0,
+        "after_near_dedup": 0,
+        "after_rebalance": 0,
+        "output": 0,
+    }
+
+
 def test_cli_ann_build_and_query(spark, tmp_path, capsys):
     import json
 
@@ -235,17 +408,28 @@ def test_cli_datasheet(spark, tmp_path, capsys):
 
     from rag_content_spark.cli import main
 
+    from rag_content_spark.operators.quality import gopher_rules
+
     base = "the quick brown fox jumps to be sure of the answer and that " * 10
-    rows = [(1, base, "en"), (2, base, "en"), (3, base + "x", "fr")]
+    rows = [
+        (1, base, "en"), (2, base, "en"), (3, base + "x", "fr"),
+        (4, "!!!! ???? ....", "en"),                     # gate drops
+    ]
     src = str(tmp_path / "docs.parquet")
     spark.createDataFrame(rows, ["doc_id", "text", "lang"]).write.parquet(src)
     rc = main(["datasheet", "-i", src])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["n_docs"] == 3
-    assert abs(out["exact_dup_rate"] - 1 / 3) < 1e-6   # one exact dup
-    assert out["langs"] == {"en": 2, "fr": 1}
-    assert out["gopher_keep_rate"] == 1.0
+    assert out["n_docs"] == 4
+    assert abs(out["exact_dup_rate"] - 1 / 4) < 1e-6   # one exact dup
+    assert out["langs"] == {"en": 3, "fr": 1}
+    assert out["gopher_keep_rate"] == 0.75
+    # the keep rate folded into the base aggregate equals the old
+    # separate filtered count
+    docs = spark.read.parquet(src)
+    assert out["gopher_keep_rate"] == round(
+        docs.filter(gopher_rules("text")["keep"]).count() / docs.count(), 6
+    )
 
 
 def test_cli_table_lifecycle(spark, tmp_path, capsys):

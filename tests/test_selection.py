@@ -237,7 +237,7 @@ def test_bpe_encode_corpus_roundtrip(spark):
     assert vocab["low</w>"] == 0
 
 
-def test_cli_tokenize_megatron(spark, tmp_path):
+def test_cli_tokenize_megatron(spark, tmp_path, capsys):
     import json
 
     from rag_content_spark.cli import main
@@ -250,6 +250,7 @@ def test_cli_tokenize_megatron(spark, tmp_path):
     out = str(tmp_path / "tok")
     rc = main(["tokenize", "-i", src, "-o", out, "--merges", "20", "--shards", "2"])
     assert rc == 0
+    printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     stats = json.load(open(f"{out}/merges.json"))
     assert len(stats) == 20
     total = 0
@@ -261,6 +262,11 @@ def test_cli_tokenize_megatron(spark, tmp_path):
     vocab = spark.read.parquet(f"{out}/vocab.parquet")
     assert vocab.count() > 0
     assert total > 0
+    # the observed counts print exactly what separate counts printed
+    assert printed == {
+        "docs": 10, "vocab_size": 12, "merges": 20, "shards": 2, "total_tokens": 390,
+    }
+    assert printed["vocab_size"] == vocab.count() and printed["total_tokens"] == total
 
 
 def test_dsir_weights_plan_broadcasts_ratio_table(spark):
