@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from rag_content_spark.functions.vector import double_array_lit
+
 SCALE6 = 1_000_000
 
 
@@ -330,7 +332,7 @@ def pca_project(
         dot = F.aggregate(
             F.zip_with(
                 F.col(embedding_col),
-                F.array(*[F.lit(float(v)) for v in vec]),
+                double_array_lit(vec),
                 lambda x, v: x.cast("double") * v,
             ),
             F.lit(0.0),

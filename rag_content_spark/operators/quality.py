@@ -360,11 +360,15 @@ def gopher_rules(text_col: Column | str = "text") -> dict[str, Column]:
     bounds, mean word length bounds, symbol-to-word ratio (``#``/``...``),
     alphabetic-word ratio, and stopword presence. Integer aggregates +
     one double division each, so the booleans are engine-reproducible.
+
+    A document with no tokens gets ``keep = false`` (it fails the word
+    count) and NULL ratio rules, as DuckDB's x/0 gives; its divisor is
+    NULL rather than 0, which ANSI mode would raise DIVIDE_BY_ZERO on.
     """
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     tok = tokens(c)
     n = F.size(tok)
-    nd = n.cast("double")
+    nd = F.when(n > 0, n.cast("double"))
 
     char_sum = F.aggregate(
         tok, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)

@@ -154,7 +154,7 @@ def hybrid_scores(
     into the plan — no driver collect; the (bounded) keyword table is
     materialized once and reused by both the normalizer and the join.
     """
-    from rag_content_spark.functions.vector import dot
+    from rag_content_spark.functions.vector import dot, double_array_lit
 
     kw = keyword_scores(
         docs_with_vectors, terms, id_col, text_col, round_to=9, stats=stats
@@ -170,7 +170,7 @@ def hybrid_scores(
             F.nullif(F.max("kw_score"), F.lit(0.0)), F.lit(1.0)
         ).alias("kw_max")
     )
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = double_array_lit(query_vec)
     vec = docs_with_vectors.select(
         F.col(id_col),
         F.round(dot(F.col(embedding_col), qv, len(query_vec)), 9).alias("cos_score"),
@@ -242,7 +242,7 @@ def hybrid_scores_rrf(
     identical ranks give bit-identical doubles on any engine — no
     rounding-grid snap needed.
     """
-    from rag_content_spark.functions.vector import dot
+    from rag_content_spark.functions.vector import dot, double_array_lit
 
     if keyword_ranker == "fts5":
         kw = bm25_scores(
@@ -259,7 +259,7 @@ def hybrid_scores_rrf(
     kw_ranked = shortlist_ranks(
         kw, n=top_n, score_col="kw_score", id_col=id_col
     ).withColumnRenamed("rank", "kw_rank")
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = double_array_lit(query_vec)
     vec = docs_with_vectors.select(
         F.col(id_col),
         F.round(

@@ -6,9 +6,11 @@ Reference query surface: exact FAISS IndexFlatIP top-k over every vector
 node lookup by id (query_rag.py:37-64).
 
 Spark-first design:
-- single query  : broadcast the query vector as a literal, score with a
-  codegen'd expression, TakeOrderedAndProject for the limit. One scan, no
-  shuffle — this is the plan you want at 100 TB.
+- single query  : the query vector is an array literal in the plan (a
+  constant, not a broadcast; built in one call by
+  functions.vector.double_array_lit), scored with
+  functions.vector.dot, TakeOrderedAndProject for the limit. One scan,
+  no shuffle — this is the plan you want at 100 TB.
 - batch queries : crossJoin(broadcast(queries)) + per-query window top-k.
 - IVF           : assign vectors to nearest centroid once (a narrow map),
   partition-prune the scan to the probed centroid's cluster at query time.
@@ -21,11 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from rag_content_spark.functions.hashing import stable_hash64
-from rag_content_spark.functions.vector import cosine, dot, euclidean
-
-
-def _vec_lit(vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
+from rag_content_spark.functions.vector import (
+    cosine,
+    dot,
+    double_array_lit,
+    euclidean,
+)
 
 
 def top_k(
@@ -43,7 +46,7 @@ def top_k(
     IndexFlatIP path) or 'l2' (IndexFlatL2: smaller distance is better).
     Deterministic total order: (score desc|asc, id) so ties are stable.
     """
-    q = _vec_lit(query_vec)
+    q = double_array_lit(query_vec)
     dim = len(query_vec)
     if metric == "ip":
         score = dot(F.col(embedding_col), q, dim)
@@ -179,7 +182,7 @@ def nearest_centroid_expr(
         *[
             F.struct(
                 F.lit(int(cid)).cast("bigint").alias("id"),
-                F.array(*[F.lit(float(x)) for x in vec]).alias("v"),
+                double_array_lit(vec).alias("v"),
             )
             for cid, vec in centroids
         ]
@@ -271,7 +274,7 @@ def lsh_signature(
         # fold over a literal plane array: an unrolled dim-64 expression
         # per bit overflows codegen method limits and drops the whole
         # stage to interpreted (measured slower than the fold island)
-        plane = F.array(*[F.lit(v) for v in srp_plane(seed, j, dim)])
+        plane = double_array_lit(srp_plane(seed, j, dim))
         proj = F.aggregate(
             F.zip_with(c, plane, lambda x, r: x.cast("double") * r),
             F.lit(0.0),
@@ -423,7 +426,7 @@ def pq_rerank_topk(
         .orderBy(F.asc("adc"), F.asc(id_col))
         .limit(k * shortlist_factor)
     )
-    q = _vec_lit(query_vec)
+    q = double_array_lit(query_vec)
     exact = F.round(
         euclidean(F.col(embedding_col), q, len(query_vec)), round_to
     )
@@ -761,7 +764,7 @@ def srp_reduce(
     c = F.col(embedding_col)
     comps = []
     for j in range(out_dim):
-        plane = F.array(*[F.lit(v) for v in srp_plane(seed, j, dim)])
+        plane = double_array_lit(srp_plane(seed, j, dim))
         comps.append(
             F.aggregate(
                 F.zip_with(c, plane, lambda x, r: x.cast("double") * r),
@@ -817,7 +820,7 @@ def srp_rerank_topk(
     else:
         scored = srp_reduce(index, out_dim, dim, seed, embedding_col, "_red")
         rscore = F.round(
-            dot(F.col("_red"), F.array(*[F.lit(v) for v in rq]), out_dim),
+            dot(F.col("_red"), double_array_lit(rq), out_dim),
             6,
         )
     short = (
@@ -826,7 +829,7 @@ def srp_rerank_topk(
         .limit(shortlist)
     )
     exact = F.round(
-        dot(F.col(embedding_col), F.array(*[F.lit(float(v)) for v in query_vec]), dim), 6
+        dot(F.col(embedding_col), double_array_lit(query_vec), dim), 6
     )
     return (
         short.select(id_col, exact.alias("score"))

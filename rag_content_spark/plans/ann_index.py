@@ -228,6 +228,23 @@ def load_ann_meta(out_dir: str) -> tuple[dict, list]:
     return meta, codebook
 
 
+def load_centroids(out_dir: str) -> list[tuple[int, list[float]]]:
+    """The frozen IVF centroids as ``[(centroid_id, vec)]`` sorted by id.
+
+    Read on the driver with pyarrow, as ``codebook.json`` is read: the
+    sidecar holds ``nlist`` rows, so a Spark read would cost two jobs
+    (schema, collect) on every query and add for no parallelism."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(
+        os.path.join(out_dir, "centroids.parquet"),
+        columns=["centroid_id", "centroid_vec"],
+    )
+    return sorted(
+        zip(t.column("centroid_id").to_pylist(), t.column("centroid_vec").to_pylist())
+    )
+
+
 def query_ann_index(
     spark: SparkSession,
     out_dir: str,
@@ -243,6 +260,7 @@ def query_ann_index(
     filter); with ``refine`` the full vectors are read ONLY for the
     ``4 * topk`` ADC shortlist (broadcast self-join on the id)."""
     from rag_content_spark.functions.vector import (
+        double_array_lit,
         euclidean,
         pq_adc_score,
         pq_adc_table,
@@ -250,16 +268,14 @@ def query_ann_index(
 
     meta, codebook = load_ann_meta(out_dir)
     id_col, embedding_col = meta["id_col"], meta["embedding_col"]
-    cents = spark.read.parquet(
-        os.path.join(out_dir, "centroids.parquet")
-    ).collect()
     import math
 
     def d2(a, b):
         return sum((x - y) * (x - y) for x, y in zip(a, b))
 
     probes = sorted(
-        ((round(math.sqrt(d2(query_vec, r["centroid_vec"])), 6), r["centroid_id"]) for r in cents)
+        (round(math.sqrt(d2(query_vec, vec)), 6), cid)
+        for cid, vec in load_centroids(out_dir)
     )[:n_probe]
     cells = [int(c) for _, c in probes]
 
@@ -275,7 +291,7 @@ def query_ann_index(
     )
     if not refine:
         return shortlist
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = double_array_lit(query_vec)
     exact = (
         index.select(id_col, embedding_col)
         .join(F.broadcast(shortlist), id_col)
@@ -321,13 +337,7 @@ def add_to_ann_index(
         ic.ensure_base(
             out_dir, _legacy_root({"n_vectors": raw_meta["n_vectors"]})
         )
-    spark = new_emb.sparkSession
-    centroids = [
-        (r["centroid_id"], list(r["centroid_vec"]))
-        for r in spark.read.parquet(os.path.join(out_dir, "centroids.parquet"))
-        .orderBy("centroid_id")
-        .collect()
-    ]
+    centroids = load_centroids(out_dir)
     emb = new_emb.select(id_col, embedding_col)
     n_new = emb.count()
     assigned = assign_ivf_cells_np(

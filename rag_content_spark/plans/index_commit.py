@@ -215,15 +215,41 @@ def ensure_base(index_dir: str, legacy_root: dict) -> None:
         os.remove(tmp)
 
 
+# segment dir key -> schema of its first read; see read_segment
+_SEGMENT_SCHEMAS: dict[tuple, object] = {}
+_SEGMENT_SCHEMAS_MAX = 4096
+
+
+def read_segment(spark, path: str):
+    """``spark.read.parquet(path)`` that infers the schema once per
+    segment. Inference is a Spark job over the footers, and every read
+    of a live view would pay it again for every segment. Segments are
+    write-once (:func:`staging_dir` names each with a uuid), so the
+    schema is reused under a key of the path plus the directory's
+    device, inode and mtime: a directory removed and rebuilt at the same
+    path (a legacy overwrite, a test fixture) is a new key."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)  # Spark's own missing-path error
+    key = (path, st.st_dev, st.st_ino, st.st_mtime_ns)
+    schema = _SEGMENT_SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_SEGMENT_SCHEMAS) >= _SEGMENT_SCHEMAS_MAX:
+        _SEGMENT_SCHEMAS.clear()
+    _SEGMENT_SCHEMAS[key] = df.schema
+    return df
+
+
 def read_union(spark, index_dir: str, rel_dirs: list[str]):
     """Union the parquet dirs of a live view with per-root reads —
     ``spark.read.parquet(a, b)`` rejects multiple partitioned roots
     (CONFLICTING_DIRECTORY_STRUCTURES), while per-root reads +
     unionByName keep partition pruning in EVERY scan (pinned in
-    tests)."""
-    dfs = [
-        spark.read.parquet(os.path.join(index_dir, d)) for d in rel_dirs
-    ]
+    tests). Each segment's schema is inferred once (:func:`read_segment`)."""
+    dfs = [read_segment(spark, os.path.join(index_dir, d)) for d in rel_dirs]
     out = dfs[0]
     for df in dfs[1:]:
         out = out.unionByName(df)

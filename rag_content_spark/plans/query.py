@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from rag_content_spark.operators.filters import score_threshold_gate
 from rag_content_spark.operators.similarity import node_lookup, top_k
 
 
@@ -26,12 +25,12 @@ def query_index(
 
     The embedding of the query itself happens on the driver (one
     inference — reference query_rag.py:26,66) and arrives here as
-    ``query_vec``.
+    ``query_vec``. The read is one job: a scan feeding
+    TakeOrderedAndProject.
     """
     hits = top_k(
         index, query_vec, k=k, metric="ip", embedding_col=embedding_col, id_col=id_col
     )
-    hits = score_threshold_gate(hits, threshold)
     meta_cols = [
         c for c in index.columns if c not in (id_col, embedding_col, "text")
     ]
@@ -41,6 +40,13 @@ def query_index(
         F.col("text"),
         F.to_json(F.struct(*meta_cols)).alias("metadata"),
     ).collect()
+    # all-or-nothing gate on the top score (reference query_rag.py:81-94),
+    # applied to the <= k collected rows, best first (nulls sort last,
+    # so a null top means no score at all); the batch form is
+    # operators.filters.score_threshold_gate
+    top = rows[0]["score"] if rows else None
+    if top is None or top < threshold:
+        rows = []
     return {
         "query": query_text,
         "top_k": k,

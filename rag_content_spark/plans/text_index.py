@@ -135,9 +135,10 @@ def _write_segment(
     lengths = docs.select(F.col(id_col), F.size(tokens(text_col)).alias("dl"))
     l_dir = ic.staging_dir(out_dir, "l")
     lengths.write.mode("errorifexists").parquet(os.path.join(out_dir, l_dir))
-    # stats from the STAGED files, not a second plan execution
+    # stats from the STAGED files, not a second plan execution; this
+    # read infers the segment's schema once for every later reader
     row = (
-        docs.sparkSession.read.parquet(os.path.join(out_dir, l_dir))
+        ic.read_segment(docs.sparkSession, os.path.join(out_dir, l_dir))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
         .collect()[0]
     )
@@ -232,9 +233,11 @@ def query_text_index(
     # concurrent adds (each add's delta is its own claimed commit);
     # a fully-deleted index has no postings, so the avgdl value is moot
     n_docs = live["n_docs"]
-    stats = spark.createDataFrame(
-        [(n_docs, float(live["sum_dl"]) / n_docs if n_docs else 0.0)],
-        "n_docs long, avgdl double",
+    # a one-row literal projection: createDataFrame over local rows would
+    # scan an RDD through a Python-worker job on every query
+    stats = spark.range(1).select(
+        F.lit(n_docs).cast("long").alias("n_docs"),
+        F.lit(float(live["sum_dl"]) / n_docs if n_docs else 0.0).alias("avgdl"),
     )
     return bm25_from_postings(
         post, lengths, stats, id_col=meta["id_col"], k1=k1, b=b
@@ -518,7 +521,7 @@ def compact_text_index(spark: SparkSession, out_dir: str) -> dict:
     # Recomputing against the materialized bytes makes every compaction
     # a self-healing point for that drift.
     srow = (
-        spark.read.parquet(os.path.join(out_dir, l_dir))
+        ic.read_segment(spark, os.path.join(out_dir, l_dir))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
         .collect()[0]
     )

@@ -39,6 +39,7 @@ from rag_content_spark.functions.vector import (
     cosine_sql,
     dot,
     dot_sql,
+    double_array_lit,
     euclidean,
     euclidean_sql,
 )
@@ -5018,7 +5019,7 @@ def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed="srp",
         out_col="bucket",
     )
-    qv = F.array(*[F.lit(float(x)) for x in _PQ_QUERY])
+    qv = double_array_lit(_PQ_QUERY)
     return (
         emb.filter(F.col("bucket").isin(probes))
         .select(

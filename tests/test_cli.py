@@ -379,6 +379,23 @@ def test_cli_curate_empty_result(spark, tmp_path, kind):
     }
 
 
+def test_cli_curate_scrub_exact_duplicate(spark, tmp_path):
+    """Scrubbing an exact-duplicate pair leaves a document with no
+    tokens; the Gopher gate drops it instead of failing the job with
+    DIVIDE_BY_ZERO."""
+    from rag_content_spark.cli import main
+
+    rows = [(i, _prose(i), "en") for i in range(6)] + [(6, _prose(0), "en")]
+    src = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(rows, ["doc_id", "text", "lang"]).write.parquet(src)
+    out = str(tmp_path / "out")
+    assert main(["curate", "-i", src, "-o", out, "--scrub-passages"]) == 0
+    stats = json.load(open(f"{out}/stats.json"))
+    assert stats["input"] == 7
+    # both copies scrub to nothing and the gate drops them
+    assert stats["after_quality_gate"] == stats["output"] == 5
+
+
 def test_cli_ann_build_and_query(spark, tmp_path, capsys):
     import json
 

@@ -33,6 +33,41 @@ def test_gopher_rules(spark):
         assert got[name]["keep"] is False
 
 
+def test_gopher_rules_zero_token_doc(spark):
+    """A document with no tokens is dropped instead of failing the job
+    with DIVIDE_BY_ZERO under ANSI mode; its ratio rules are NULL (as
+    DuckDB's x/0), and the other documents' rules do not change."""
+    from rag_content_spark.operators.quality import gopher_rules
+
+    good = "the quick brown fox jumps to be sure of the answer and that " * 10
+    rows = [("good", good), ("short", "tiny doc"), ("empty", ""), ("blank", " \n\t ")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    def rules(frame):
+        return {
+            r["doc_id"]: r.asDict()
+            for r in frame.select("doc_id", *[
+                c.alias(name) for name, c in gopher_rules("text").items()
+            ]).collect()
+        }
+
+    got = rules(df)
+    for name in ("empty", "blank"):
+        assert got[name] == {
+            "doc_id": name,
+            "word_count_ok": False,
+            "mean_word_len_ok": None,
+            "symbol_ratio_ok": None,
+            "alpha_ratio_ok": None,
+            "stopword_ok": False,
+            "keep": False,
+        }
+    assert {k: got[k] for k in ("good", "short")} == rules(
+        df.filter(F.col("doc_id").isin("good", "short"))
+    )
+    assert got["good"]["keep"] is True
+
+
 def test_rebalance_to_mix(spark):
     from rag_content_spark.operators.quality import rebalance_to_mix
 

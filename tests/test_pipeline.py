@@ -2,6 +2,8 @@
 (the reference's E2E asserts corpus-unique terms are retrievable,
 tests/integration-konflux/pipeline-konflux.sh:181)."""
 
+import math
+
 from pyspark.sql import functions as F
 
 from rag_content_spark.embedding.mock import mock_embedding_expr
@@ -92,6 +94,17 @@ def test_high_threshold_returns_empty(spark, docs_df):
     )
     res = query_index(chunks, "q", list(qvec), k=3, threshold=0.999)
     assert res["nodes"] == []
+    # the gate is all-or-nothing on the top score, inclusive: a threshold
+    # equal to it keeps all k rows, the next double above drops them all
+    every = query_index(chunks, "q", list(qvec), k=3, threshold=-math.inf)
+    top = every["nodes"][0]["score"]
+    assert len(every["nodes"]) == 3
+    at = query_index(chunks, "q", list(qvec), k=3, threshold=top)
+    assert at["nodes"] == every["nodes"]
+    above = query_index(
+        chunks, "q", list(qvec), k=3, threshold=math.nextafter(top, math.inf)
+    )
+    assert above["nodes"] == []
 
 
 def test_markdown_aware_false_keeps_metadata(docs_df):

@@ -1,0 +1,307 @@
+"""Fixed per-read costs of the serve path: the one-call array literal,
+per-read Spark job budgets (counted through statusTracker job groups),
+and the per-segment schema reuse of ``index_commit.read_union``."""
+
+import json
+import math
+import os
+import shutil
+import struct
+import subprocess
+import sys
+import uuid
+from contextlib import contextmanager
+
+import pytest
+from pyspark.sql import functions as F
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TERMS = ["the", "data"]
+WORDS = "the data index query vector segment schema read of to and a".split()
+
+
+def _docs(spark, n=500):
+    """(doc_id, text): seeded prose over a small vocabulary."""
+    import random
+
+    rng = random.Random(3)
+    rows = [
+        (i, " ".join(rng.choice(WORDS) for _ in range(rng.randint(5, 40))))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _emb(spark, n=500, dim=64):
+    """(vec_id, embedding ARRAY<FLOAT>): seeded gaussian vectors."""
+    import numpy as np
+
+    X = np.random.default_rng(5).standard_normal((n, dim)).astype(np.float32)
+    rows = [(i, [float(x) for x in X[i]]) for i in range(n)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _f32(x: float) -> float:
+    return struct.unpack("f", struct.pack("f", x))[0]
+
+
+SPECIAL = [
+    -0.0,
+    5e-324,
+    1e308,
+    0.1 + 0.2,
+    _f32(0.1),
+    _f32(-1.0 / 3.0),
+    float("nan"),
+    float("inf"),
+    float("-inf"),
+]
+
+
+def _bits(x: float) -> bytes:
+    return struct.pack(">d", x)
+
+
+def _same(got: list, want: list) -> bool:
+    return len(got) == len(want) and all(
+        (math.isnan(g) and math.isnan(w)) or _bits(g) == _bits(w)
+        for g, w in zip(got, want)
+    )
+
+
+@pytest.mark.parametrize("value", SPECIAL, ids=repr)
+def test_double_array_lit_round_trips_dim_1(spark, value):
+    from rag_content_spark.functions.vector import double_array_lit
+
+    df = spark.range(1).select(
+        double_array_lit([value]).alias("new"), F.array(F.lit(value)).alias("old")
+    )
+    row = df.collect()[0]
+    assert _same(row["new"], [value]) and _same(row["old"], [value])
+    assert df.schema["new"].dataType == df.schema["old"].dataType
+
+
+def test_double_array_lit_round_trips_dim_768(spark):
+    """Every special value at several positions of a 768-d vector,
+    with float32-widened gaussians (what an embedder returns) between
+    them: bit-identical to the per-element literal, same type."""
+    import numpy as np
+
+    from rag_content_spark.functions.vector import double_array_lit
+
+    rng = np.random.default_rng(7)
+    vec = [float(x) for x in rng.standard_normal(768).astype(np.float32)]
+    for i, v in enumerate(SPECIAL):
+        vec[i] = vec[400 + i] = vec[767 - i] = v
+    df = spark.range(1).select(
+        double_array_lit(vec).alias("new"),
+        F.array(*[F.lit(float(x)) for x in vec]).alias("old"),
+    )
+    row = df.collect()[0]
+    assert _same(row["new"], vec) and _same(row["old"], vec)
+    assert df.schema["new"].dataType == df.schema["old"].dataType
+    assert not df.schema["new"].dataType.containsNull
+
+
+def test_double_array_lit_makes_no_per_element_literal(spark, monkeypatch):
+    """The helper builds the literal in one parse, never through
+    ``F.lit`` (one JVM round trip per element)."""
+    from rag_content_spark.functions import vector
+
+    def _no_lit(*_a, **_k):
+        raise AssertionError("per-element F.lit")
+
+    monkeypatch.setattr(vector.F, "lit", _no_lit)
+    col = vector.double_array_lit([0.5] * 768)
+    monkeypatch.undo()
+    assert spark.range(1).select(col.alias("v")).collect()[0]["v"] == [0.5] * 768
+
+
+# ---- per-read job budgets --------------------------------------------------
+
+
+@contextmanager
+def _jobs(spark):
+    """Spark job ids run inside the block, via a unique job group."""
+    sc = spark.sparkContext
+    group = f"serve-reads-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        # the status store fills from the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _stages(spark, job_ids) -> int:
+    st = spark.sparkContext.statusTracker()
+    return sum(len(st.getJobInfo(j).stageIds) for j in job_ids)
+
+
+def _chunk_index(spark, tmp_path):
+    emb, docs = _emb(spark), _docs(spark)
+    path = str(tmp_path / "chunks")
+    (
+        emb.join(docs, emb["vec_id"] == docs["doc_id"])
+        .select(
+            F.col("vec_id").cast("string").alias("chunk_id"),
+            "text",
+            "embedding",
+            F.lit("en").alias("lang"),
+            (F.col("doc_id") % 7).alias("source"),
+        )
+        .limit(60)
+        .repartition(4)
+        .write.parquet(path)
+    )
+    return spark.read.parquet(path)
+
+
+def test_query_index_runs_one_job_without_exchange(spark, tmp_path):
+    """Exact top-k is one job of one stage: the threshold gate runs on
+    the <= k collected rows. An unpartitioned Window on top of the
+    top-k would make it shuffle its per-partition winners to one
+    partition (a second stage) instead of merging them on the driver."""
+    from rag_content_spark.plans.query import query_index
+
+    index = _chunk_index(spark, tmp_path)
+    assert index.rdd.getNumPartitions() > 1
+    qvec = list(index.orderBy("chunk_id").first()["embedding"])
+    query_index(index, "warm", qvec, k=3)
+    with _jobs(spark) as ids:
+        res = query_index(index, "q", qvec, k=3)
+    assert len(res["nodes"]) == 3
+    assert len(ids) == 1 and _stages(spark, ids) == 1
+
+
+def test_query_ann_index_runs_no_job_before_its_action(spark, tmp_path):
+    """Building the ANN read — meta, centroids, probe choice, segment
+    reads — runs no Spark job once the segments' schemas are known."""
+    from rag_content_spark.plans.ann_index import build_ann_index, query_ann_index
+
+    emb = _emb(spark)
+    d = str(tmp_path / "ann")
+    build_ann_index(emb, d, nlist=4, m=4, k=16)
+    q = list(emb.orderBy("vec_id").first()["embedding"])
+    first = query_ann_index(spark, d, q, topk=5, n_probe=2).collect()
+    with _jobs(spark) as ids:
+        plan = query_ann_index(spark, d, q, topk=5, n_probe=2)
+    assert ids == []
+    assert plan.collect() == first
+
+
+def test_second_read_of_unchanged_index_runs_no_schema_job(spark, tmp_path):
+    from rag_content_spark.plans.text_index import (
+        add_to_text_index,
+        build_text_index,
+        query_text_index,
+    )
+
+    docs = _docs(spark)
+    d = str(tmp_path / "ti")
+    build_text_index(docs.filter(F.col("doc_id") % 2 == 0), d, n_buckets=8)
+    add_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), d)
+    first = query_text_index(spark, d, TERMS)
+    with _jobs(spark) as ids:
+        again = query_text_index(spark, d, TERMS)
+    assert ids == []
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_query_text_index_plan_has_no_existing_rdd_scan(spark, tmp_path):
+    """The (n_docs, avgdl) stats row is a literal projection, not a
+    Python-side createDataFrame scanned through a Python worker."""
+    from rag_content_spark.plans.text_index import build_text_index, query_text_index
+
+    docs = _docs(spark)
+    d = str(tmp_path / "ti")
+    build_text_index(docs, d, n_buckets=8)
+    df = query_text_index(spark, d, ["the"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert df.count() > 0
+
+
+# ---- schema reuse invalidation ----------------------------------------------
+
+
+def _read_state(spark, d):
+    """What a reader sees of index ``d``: BM25 hits and the raw ``seg``
+    segment (its columns and rows), as JSON-comparable values."""
+    from rag_content_spark.plans import index_commit as ic
+    from rag_content_spark.plans.text_index import query_text_index
+
+    seg = ic.read_union(spark, d, ["seg"])
+    return {
+        "text": sorted(
+            [r["doc_id"], r["bm25"]] for r in query_text_index(spark, d, TERMS).collect()
+        ),
+        "seg_cols": seg.columns,
+        "seg": sorted(json.dumps(r.asDict(), sort_keys=True) for r in seg.collect()),
+    }
+
+
+_FRESH_READ = r"""
+import json, sys
+from rag_content_spark.session import get_spark
+from tests.test_serve_reads import _read_state
+
+spark = get_spark("fresh-read", master="local[1]", shuffle_partitions=2)
+print(json.dumps([_read_state(spark, d) for d in json.loads(sys.argv[1])]))
+"""
+
+
+def test_schema_reuse_sees_every_index_change(spark, tmp_path):
+    """After a first read, each change is visible to the next read in
+    this process, exactly as a fresh process reads it: an add, a delete,
+    a compaction, and a segment directory removed and rebuilt at the
+    same path with another schema."""
+    from rag_content_spark.plans.text_index import (
+        add_to_text_index,
+        build_text_index,
+        compact_text_index,
+        delete_from_text_index,
+    )
+
+    docs = _docs(spark)
+    d = str(tmp_path / "ti")
+    build_text_index(docs.filter(F.col("doc_id") < 200), d, n_buckets=8)
+    seg = os.path.join(d, "seg")
+    spark.createDataFrame([(1, "a")], "doc_id long, a string").write.parquet(seg)
+
+    def rebuild_segment():
+        shutil.rmtree(seg)
+        spark.createDataFrame(
+            [(2, "b", 3.5)], "doc_id long, a string, b double"
+        ).write.parquet(seg)
+
+    steps = [
+        ("first read", lambda: None),
+        ("add", lambda: add_to_text_index(docs.filter(F.col("doc_id") >= 200), d)),
+        ("delete", lambda: delete_from_text_index(spark, d, list(range(0, 500, 7)))),
+        ("compact", lambda: compact_text_index(spark, d)),
+        ("rebuilt at the same path", rebuild_segment),
+    ]
+    here, snaps = [], []
+    for i, (_name, change) in enumerate(steps):
+        change()
+        here.append(_read_state(spark, d))
+        snaps.append(str(tmp_path / f"snap{i}"))
+        shutil.copytree(d, snaps[-1])
+    # add, delete and rebuild change what a read returns; compaction
+    # moves bytes only
+    assert [a != b for a, b in zip(here, here[1:])] == [True, True, False, True]
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", PYTHONPATH=ROOT)
+    proc = subprocess.run(
+        [sys.executable, "-c", _FRESH_READ, json.dumps(snaps)],
+        capture_output=True, text=True, cwd=ROOT, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    fresh = json.loads(proc.stdout.strip().splitlines()[-1])
+    for (name, _), got, want in zip(steps, here, fresh):
+        assert got == want, name
