@@ -428,46 +428,48 @@ def train_pq_codebook(
     iterations: int = 5,
 ) -> list[list[list[float]]]:
     """Train a PQ codebook with per-subspace k-means (the real
-    counterpart of :func:`pq_demo_codebook`): slice each vector into m
-    subvectors, run Lloyd's on every subspace (operators/kmeans.py —
-    driver-resident centroids, one job per iteration), return the
+    counterpart of :func:`pq_demo_codebook`) and return the
     m x k x sub_dim codebook for :func:`pq_encode` / ADC scanning.
 
-    Initial centroids per subspace are the subvectors of the first k
-    rows by id — deterministic, so training is reproducible.
+    One Spark job gathers the bounded hash sample of
+    operators/kmeans.training_sample (256 rows per code); the driver
+    trains every subspace on it (:func:`train_pq_np`).
     """
-    from pyspark.sql import functions as F
+    from rag_content_spark.operators.kmeans import training_sample
 
-    from rag_content_spark.operators.kmeans import kmeans
-
-    dim = len(
-        emb_df.select(embedding_col).first()[0]
+    ids, X, _cap = training_sample(
+        emb_df, k, embedding_col=embedding_col, id_col=id_col
     )
+    return train_pq_np(X, ids, m, k, iterations=iterations)
+
+
+def train_pq_np(X, ids, m: int, k: int, iterations: int = 5):
+    """PQ codebook from a driver-side sample: slice each row of ``X``
+    into m subvectors and run Lloyd's (operators/kmeans.lloyd) on every
+    subspace. The initial centroids of every subspace are the
+    subvectors of the k lowest ``ids`` — deterministic, so training is
+    reproducible. Raises ``ValueError`` when ``dim`` is not a multiple
+    of ``m`` (the tail would drop out of every code and ADC score) or
+    when there are fewer than ``k`` rows."""
+    import pyarrow.compute as pc
+
+    from rag_content_spark.operators.kmeans import lloyd
+
+    n, dim = X.shape
+    if dim % m:
+        raise ValueError(f"PQ needs dim % m == 0; got dim={dim}, m={m}")
+    if n < k:
+        raise ValueError(f"PQ needs at least k={k} vectors; got n={n}")
     sub_dim = dim // m
-    codebook = []
-    seeds = [
-        list(r[embedding_col])
-        for r in emb_df.orderBy(id_col).limit(k).collect()
+    seeds = X[pc.sort_indices(ids).to_numpy()[:k]]
+    return [
+        lloyd(
+            X[:, s * sub_dim : (s + 1) * sub_dim],
+            seeds[:, s * sub_dim : (s + 1) * sub_dim],
+            iterations,
+        ).tolist()
+        for s in range(m)
     ]
-    for s in range(m):
-        sub_df = emb_df.select(
-            F.col(id_col),
-            F.slice(F.col(embedding_col), s * sub_dim + 1, sub_dim).alias(
-                embedding_col
-            ),
-        )
-        init = [
-            (j, seeds[j][s * sub_dim : (s + 1) * sub_dim]) for j in range(k)
-        ]
-        centroids, _ = kmeans(
-            sub_df,
-            init,
-            iterations=iterations,
-            embedding_col=embedding_col,
-            id_col=id_col,
-        )
-        codebook.append([vec for _, vec in sorted(centroids)])
-    return codebook
 
 
 def pq_adc_scan_exact_np(

@@ -4,8 +4,9 @@ The reference persists FAISS binaries that only FAISS can read; the
 100 TB-native alternative is an index that IS a data lake table:
 
 - ``build_ann_index``   — train IVF centroids (Lloyd's) + a PQ codebook
-  (per-subspace Lloyd's) on the corpus, assign every vector to its
-  cell, PQ-encode it, and write the index parquet PARTITIONED BY cell.
+  (per-subspace Lloyd's) on the driver over one bounded hash sample of
+  the corpus, assign every vector to its cell, PQ-encode it, and write
+  the index parquet PARTITIONED BY cell.
   Sidecars: ``centroids.parquet``, ``codebook.json``, ``meta.json``.
 - ``query_ann_index``   — pick the ``n_probe`` nearest cells
   driver-side (tiny centroid table), read ONLY those partitions
@@ -17,7 +18,8 @@ Layout (commit-logged since round 8, same protocol as text_index):
 
     out_dir/
       meta.json                   static config {format, metric, dim,
-                                  nlist, m, k, id_col, embedding_col}
+                                  nlist, m, k, id_col, embedding_col,
+                                  train_points}
       centroids.parquet           frozen IVF model
       codebook.json               frozen PQ model
       data/i-<uuid>/cell=NN/...   index segments (one per writer)
@@ -35,15 +37,18 @@ meta.json) read transparently and upgrade on their first logged write.
 
 Why this shape at 100 TB: the index is splittable, schema-evolvable,
 queryable by any engine, and cells map to directories — a probe reads
-``n_probe / nlist`` of the bytes. Training uses the vectorized numpy
-twins (one matmul per Arrow batch); every decode/score step at query
-time is a Column expression over literals.
+``n_probe / nlist`` of the bytes. Training reads one bounded sample
+(FAISS's 256 points per centroid), so its cost does not grow with the
+corpus; assignment and encoding use the vectorized numpy twins (one
+matmul per Arrow batch); every decode/score step at query time is a
+Column expression over literals.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -130,47 +135,40 @@ def build_ann_index(
     """Train + encode + write. Returns the meta dict (config +
     n_vectors).
 
-    Seeding is deterministic (the nlist lowest (xxhash64(id), id) keys),
-    so the same corpus always builds the same index. ``id_col`` and
-    ``embedding_col`` are recorded in meta.json so maintenance never
-    has to infer column roles (round-7 ADVICE: compact guessed the id
-    column and a custom embedding column name silently broke the
-    per-cell sort).
+    Both models train on the driver from ONE bounded hash sample
+    (operators/kmeans.training_sample: at most 256 rows per centroid of
+    ``max(nlist, k)``, one Spark job); ``meta.json`` records its size as
+    ``train_points``. IVF seeds are the first ``nlist`` sample rows (the
+    ``nlist`` lowest ``(xxhash64(id), id)`` keys), PQ seeds the ``k``
+    lowest ids in the sample, so the same corpus always builds the same
+    index on any partitioning. Raises ``ValueError`` when there are
+    fewer vectors than ``nlist`` or ``k``, or when ``dim`` is not a
+    multiple of ``m``. ``id_col`` and ``embedding_col`` are recorded in
+    meta.json so maintenance never has to infer column roles (round-7
+    ADVICE: compact guessed the id column and a custom embedding column
+    name silently broke the per-cell sort).
     """
-    from rag_content_spark.functions.vector import train_pq_codebook
-    from rag_content_spark.operators.kmeans import kmeans
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rag_content_spark.functions.vector import pq_encode_np, train_pq_np
+    from rag_content_spark.operators.kmeans import lloyd, training_sample
     from rag_content_spark.operators.similarity import assign_ivf_cells_np
-    from rag_content_spark.functions.vector import pq_encode_np
 
     emb = emb.select(id_col, embedding_col)
-    n = emb.count()
-    # Deterministic hash sampling for the nlist seeds: order by a stable
-    # per-id hash and take the first nlist. orderBy().limit() compiles to
-    # TakeOrderedAndProject — per-partition top-nlist merged on the
-    # driver, so NO corpus-sized single-partition window/sort (the old
-    # row_number() over an unpartitioned Window pushed every vector
-    # through one task). The hash spreads seeds pseudo-uniformly over
-    # the id space, and the (hash, id) key makes the pick total-ordered
-    # hence reproducible on any partitioning.
-    seeds = [
-        (i, list(r[embedding_col]))
-        for i, r in enumerate(
-            emb.orderBy(
-                F.xxhash64(F.col(id_col).cast("string"), F.lit("ann-seed")),
-                id_col,
-            )
-            .limit(nlist)
-            .collect()
+    ids, X, cap = training_sample(
+        emb, max(nlist, k), embedding_col=embedding_col, id_col=id_col
+    )
+    train_points, dim = X.shape
+    n = train_points if train_points < cap else emb.count()
+    if n < max(nlist, k):
+        raise ValueError(
+            f"build_ann_index needs at least nlist={nlist} and k={k} "
+            f"vectors; got n={n}"
         )
-    ]
-    centroids, _ = kmeans(
-        emb, seeds, iterations=kmeans_iterations,
-        embedding_col=embedding_col, id_col=id_col,
-    )
-    codebook = train_pq_codebook(
-        emb, m=m, k=k, embedding_col=embedding_col, id_col=id_col
-    )
-    dim = len(centroids[0][1])
+    cmat = lloyd(X, X[:nlist], kmeans_iterations)
+    centroids = list(enumerate(cmat.tolist()))
+    codebook = train_pq_np(X, ids, m, k)
 
     assigned = assign_ivf_cells_np(
         emb, centroids, embedding_col=embedding_col, id_col=id_col
@@ -186,12 +184,17 @@ def build_ann_index(
         .partitionBy("cell")
         .parquet(os.path.join(out_dir, i_dir))
     )
-    spark = emb.sparkSession
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in centroids],
-        "centroid_id int, centroid_vec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "centroids.parquet")
+    c_path = os.path.join(out_dir, "centroids.parquet")
+    if os.path.isdir(c_path):  # a Spark-written sidecar from an older build
+        shutil.rmtree(c_path)
+    pq.write_table(
+        pa.table(
+            {
+                "centroid_id": pa.array(range(nlist), pa.int32()),
+                "centroid_vec": pa.array(cmat.tolist(), pa.list_(pa.float64())),
+            }
+        ),
+        c_path,
     )
     meta = {
         "format": "rag-spark-ann/2",
@@ -202,6 +205,7 @@ def build_ann_index(
         "k": k,
         "id_col": id_col,
         "embedding_col": embedding_col,
+        "train_points": train_points,
     }
     with open(os.path.join(out_dir, "codebook.json"), "w") as f:
         json.dump(codebook, f)
