@@ -41,37 +41,6 @@ def _get_embedder(model_path: str | None, dim: int):
     return lambda c: mock_embedding_expr(c, dim=dim, normalize=True)
 
 
-def _observe(df, name: str):
-    """Count ``df``'s rows during the first action that runs it, instead
-    of a separate ``.count()`` that re-executes its whole lineage.
-
-    Returns ``(observed, count)``: ``observed`` must replace ``df`` in
-    the plan, and ``count()`` returns the row count once an action over
-    ``observed`` has finished. That first action must consume every row
-    (a write, an aggregate, an eager checkpoint), never a ``limit``.
-    When a join side comes back empty, AQE prunes the subtree holding
-    the observation and Spark has no metrics row for it (``toPyRow``
-    fails); ``count()`` then falls back to an exact ``df.count()``,
-    which is cheap there because the pipeline is empty.
-    """
-    from py4j.protocol import Py4JJavaError
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation(name)
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-
-    def count() -> int:
-        try:
-            return obs.get["n"]
-        except Py4JJavaError as exc:
-            if exc.java_exception.getClass().getName() != "java.lang.AssertionError":
-                raise
-            return df.count()
-
-    return observed, count
-
-
 def cmd_build(args: argparse.Namespace) -> int:
     from rag_content_spark.plans.build_pipeline import BuildConfig, build_chunks
     from rag_content_spark.session import get_spark
@@ -711,29 +680,36 @@ def cmd_curate(args: argparse.Namespace) -> int:
     select) -> (optional mix rebalance) -> sequence packing ->
     shard-partitioned parquet + a stats.json of per-stage counts.
 
-    Each stage runs once. The exact-deduped corpus is where the plan
-    fans out: LSH candidates, the overflow report, the shingle table,
-    the near-dup anti-join, DSIR, packing and the join-back all read
-    it. So it is ``localCheckpoint(eager=True)``'d once, and every
-    consumer reads the checkpoint instead of recomputing scan -> gate
-    -> hash-group -> semi-join.
+    Each stage runs once. The plan fans out twice, and each fan-out
+    point is ``localCheckpoint(eager=True)``'d once so its consumers
+    read the checkpoint instead of recomputing its lineage:
 
-    The stats.json counts are ``Observation``s (:func:`_observe`), not
-    ``.count()`` calls that would each re-run the lineage. ``input``,
+    - the exact-deduped corpus, read by near dedup (or DSIR, packing
+      and the join-back when near dedup is off);
+    - the near-deduped corpus, read by DSIR, packing and the join-back.
+
+    Near dedup is :func:`~rag_content_spark.operators.dedup.near_duplicate_pairs`:
+    one shingling pass checkpointed as a (id, shingles, band hashes)
+    table, one band-bucket aggregate, then the broadcast loser
+    anti-join of :func:`~rag_content_spark.operators.dedup.apply_dedup`.
+
+    The stats.json values are ``Observation``s
+    (:mod:`rag_content_spark.observe`), not ``.count()`` or
+    ``collect()`` calls that would each re-run a lineage. ``input``,
     ``after_quality_gate`` and ``after_exact_dedup`` fill during the
-    checkpoint, in time for DSIR's default ``k``; ``after_near_dedup``,
-    ``after_dsir_select``, ``after_rebalance`` and ``output`` fill
-    during the final write (the near-dedup one earlier, during DSIR's
-    feature checkpoint, when both run). ``output`` counts the rows
-    written, so an empty result needs no read-back of an empty
-    ``partitionBy`` directory."""
+    first checkpoint, in time for DSIR's default ``k``;
+    ``lsh_overflow`` (taken on the band-bucket aggregate) and
+    ``after_near_dedup`` during the second; ``after_dsir_select``,
+    ``after_rebalance`` and ``output`` during the final write.
+    ``output`` counts the rows written, so an empty result needs no
+    read-back of an empty ``partitionBy`` directory."""
     from pyspark.sql import functions as F
 
+    from rag_content_spark.observe import observe_count
     from rag_content_spark.operators.dedup import (
         apply_dedup,
         exact_dedup,
-        jaccard_pairs,
-        minhash_lsh_candidates,
+        near_duplicate_pairs,
         remove_crossdoc_passages,
     )
     from rag_content_spark.operators.packing import pack_sequences
@@ -755,7 +731,7 @@ def cmd_curate(args: argparse.Namespace) -> int:
     stats: dict = {}
 
     def observe(key, df):
-        df, stats[key] = _observe(df, key)
+        df, stats[key] = observe_count(df, key)
         return df
 
     docs = observe("input", docs)
@@ -782,24 +758,17 @@ def cmd_curate(args: argparse.Namespace) -> int:
         cap = getattr(args, "max_bucket_size", 1000)
         if cap is not None and cap <= 0:
             cap = None  # --max-bucket-size 0 = explicit opt-out
-        cand = minhash_lsh_candidates(deduped, max_bucket_size=cap)
-        if cap is not None:
-            from rag_content_spark.operators.dedup import (
-                minhash_lsh_overflow,
-                overflow_summary,
-            )
-
-            row = overflow_summary(
-                minhash_lsh_overflow(deduped, cap)
-            ).collect()[0]
-            stats["lsh_overflow"] = {
+        pairs, overflow = near_duplicate_pairs(
+            deduped, threshold=args.jaccard, max_bucket_size=cap
+        )
+        if overflow is not None:
+            stats["lsh_overflow"] = lambda: {
                 "max_bucket_size": cap,
-                "n_overflow_buckets": int(row["n_overflow_buckets"]),
-                "max_bucket_size_seen": int(row["max_bucket_size_seen"]),
-                "n_dropped_ids": int(row["n_dropped_ids"]),
+                **{k: int(v) for k, v in overflow().items()},
             }
-        pairs = jaccard_pairs(deduped, cand, threshold=args.jaccard)
-        deduped = observe("after_near_dedup", apply_dedup(deduped, pairs))
+        deduped = observe(
+            "after_near_dedup", apply_dedup(deduped, pairs)
+        ).localCheckpoint(eager=True)
 
     if getattr(args, "dsir_target", None):
         from rag_content_spark.operators.selection import dsir_select
@@ -838,6 +807,7 @@ def cmd_tokenize(args: argparse.Namespace) -> int:
     """Corpus -> learned BPE merges -> integer token ids -> Megatron
     .bin/.idx shard pairs (+ vocab.parquet, merges.json): the
     trains-ready handoff after curation."""
+    from rag_content_spark.observe import observe_count
     from rag_content_spark.operators.selection import (
         bpe_encode_corpus,
         bpe_vocab,
@@ -850,11 +820,11 @@ def cmd_tokenize(args: argparse.Namespace) -> int:
     ensure_reader_confs(spark)
     # the docs count fills during the merge-learning collect, the vocab
     # count during the vocab write
-    docs, n_docs = _observe(spark.read.parquet(args.input), "docs")
+    docs, n_docs = observe_count(spark.read.parquet(args.input), "docs")
     # TRUE iterative BPE (count -> merge -> recount) over the
     # vocabulary-sized word-frequency table
     merges = learn_bpe_merges(docs, n_merges=args.merges)
-    vocab, vocab_size = _observe(bpe_vocab(docs, merges), "vocab_size")
+    vocab, vocab_size = observe_count(bpe_vocab(docs, merges), "vocab_size")
     encoded = bpe_encode_corpus(docs, merges, vocab=vocab)
     os.makedirs(args.output, exist_ok=True)
     vocab.write.mode("overwrite").parquet(os.path.join(args.output, "vocab.parquet"))

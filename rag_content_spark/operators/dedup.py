@@ -11,8 +11,15 @@ curation reports (e.g. RefinedWeb, Gopher) describe:
 - exact          : group by content hash, keep min id. One shuffle on a
                    64-bit key; AQE handles skew (empty/boilerplate docs).
 - MinHash + LSH  : shingle → K minhashes → B bands; candidate pairs come
-                   from an equi-join on (band, band_hash) — never O(n^2).
+                   from one groupBy on (band, band_hash) — never O(n^2).
                    Verify candidates with true Jaccard over shingle sets.
+                   :func:`near_duplicate_pairs` is the one-pass form a
+                   pipeline calls: each document is shingled once, the
+                   cap's overflow report rides the bucket aggregate, and
+                   :func:`apply_dedup` drops the losers through a
+                   broadcast anti-join. The two-step
+                   :func:`minhash_lsh_candidates` + :func:`jaccard_pairs`
+                   returns the same pairs and stays as its reference.
 - SimHash        : 16-bit sign-sum fingerprint; near-dups share a bucket.
 - n-gram Jaccard : the verify stage exposed standalone.
 - embedding cos  : LSH-bucketed (sign random projection) candidate pairs
@@ -24,11 +31,14 @@ exact DuckDB oracle.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from rag_content_spark.functions.hashing import stable_hash64
 from rag_content_spark.functions.text import tokens
 from rag_content_spark.functions.vector import dot
+from rag_content_spark.observe import observe
 from rag_content_spark.operators.similarity import lsh_signature
 
 #: Default LSH bucket cap — DEFAULT-ON (round-8 verdict: an opt-in cap
@@ -212,44 +222,28 @@ def minhash_lsh_candidates(
     bands: int = 4,
     shingle_n: int = 3,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    vectorized: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
 
     Pipeline: shingle → signature → explode into ``bands`` band-hashes →
-    self-equi-join on (band, band_hash) → distinct (a < b) pairs.
-    The only shuffles are the band-hash join and the final distinct; both
-    scale linearly with corpus size for non-pathological band sizes —
-    and ``max_bucket_size`` bounds the pathological ones, DEFAULT-ON at
+    one groupBy on (band, band_hash) → distinct (a < b) pairs.
+    The only shuffles are the band-hash groupBy and the final distinct;
+    both scale linearly with corpus size for non-pathological band sizes
+    — and ``max_bucket_size`` bounds the pathological ones, DEFAULT-ON at
     :data:`DEFAULT_MAX_BUCKET_SIZE` (pass ``None`` to explicitly
     opt out; see :func:`bucket_pairs`; :func:`minhash_lsh_overflow`
     reports what a binding cap truncated). At 100 TB pair this with
     :func:`collapse_exact_before_lsh` so a boilerplate page repeated
-    10^6 times is ONE bucket member, not 10^6.
-
-    ``vectorized=True`` computes the band table with the exact
-    numpy/hashlib twin (:func:`minhash_band_table_np` — identical
-    rows, one md5 per distinct token per task). Default False: the r11
-    interleaved measurement showed the Python boundary (document text
-    crossing Arrow + per-doc loops) costs MORE than the JVM md5 work
-    at typical doc sizes (band table 0.42 s JVM vs 0.79 s np at
-    sf0.1); flip it when per-doc hashing dominates (very long docs).
+    10^6 times is ONE bucket member, not 10^6. A caller that also
+    verifies the candidates and reports the overflow should use
+    :func:`near_duplicate_pairs`, which shingles each document once for
+    all three.
     """
-    if vectorized:
-        banded = minhash_band_table_np(
-            df, text_col, id_col, num_hashes, bands, shingle_n
-        )
-    else:
-        banded = df.select(
-            F.col(id_col),
-            F.posexplode(
-                minhash_band_hashes(
-                    hashed_shingles(text_col, n=shingle_n), num_hashes, bands
-                )
-            ).alias("band", "band_hash"),
-        )
     return bucket_pairs(
-        banded, id_col, ["band", "band_hash"], max_bucket_size=max_bucket_size
+        minhash_band_table(df, text_col, id_col, num_hashes, bands, shingle_n),
+        id_col,
+        ["band", "band_hash"],
+        max_bucket_size=max_bucket_size,
     )
 
 
@@ -261,25 +255,13 @@ def minhash_lsh_overflow(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    vectorized: bool = False,
 ) -> DataFrame:
     """Overflow report for ``minhash_lsh_candidates(max_bucket_size=)``:
     (band, band_hash, bucket_size, n_dropped) per truncated bucket."""
-    if vectorized:
-        banded = minhash_band_table_np(
-            df, text_col, id_col, num_hashes, bands, shingle_n
-        )
-    else:
-        banded = df.select(
-            F.col(id_col),
-            F.posexplode(
-                minhash_band_hashes(
-                    hashed_shingles(text_col, n=shingle_n), num_hashes, bands
-                )
-            ).alias("band", "band_hash"),
-        )
     return bucket_overflow_report(
-        banded, ["band", "band_hash"], max_bucket_size
+        minhash_band_table(df, text_col, id_col, num_hashes, bands, shingle_n),
+        ["band", "band_hash"],
+        max_bucket_size,
     )
 
 
@@ -456,14 +438,24 @@ def bucket_pairs(
     collect_list itself is linear in bucket size (ids only, not text);
     the quadratic pair emission is what the cap bounds.
     """
-    ids = (
-        banded.groupBy(*bucket_cols)
-        .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
-        .filter(F.size("_ids") > 1)
+    _check_cap(max_bucket_size)
+    ids = banded.groupBy(*bucket_cols).agg(
+        F.array_sort(F.collect_list(id_col)).alias("_ids")
     )
+    return _pairs_in_buckets(ids, max_bucket_size)
+
+
+def _check_cap(max_bucket_size: int | None) -> None:
+    if max_bucket_size is not None and max_bucket_size < 2:
+        raise ValueError("max_bucket_size must be >= 2")
+
+
+def _pairs_in_buckets(ids: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """Distinct (id_a < id_b) pairs from one row per bucket holding its
+    sorted id list ``_ids``: each list capped (:func:`_cap_ids`), its
+    pairs enumerated in-array, then one ``distinct`` across buckets."""
+    ids = ids.filter(F.size("_ids") > 1)
     if max_bucket_size is not None:
-        if max_bucket_size < 2:
-            raise ValueError("max_bucket_size must be >= 2")
         ids = ids.withColumn(
             "_ids", F.array_sort(_cap_ids(F.col("_ids"), max_bucket_size))
         )
@@ -552,7 +544,7 @@ def jaccard_pairs(
     sh = (
         df.join(cand_ids, on=id_col, how="leftsemi")
         .select(
-            F.col(id_col), hashed_shingles(text_col, n=shingle_n).alias("_shingles")
+            F.col(id_col), hashed_shingles(text_col, n=shingle_n).alias("_sh")
         )
         # r11: the shingle table is joined TWICE below (id_a and id_b
         # sides) — without materialization each side re-scans the
@@ -561,17 +553,24 @@ def jaccard_pairs(
         # checkpoint is small by construction.
         .localCheckpoint(eager=True)
     )
+    return _verify_jaccard(pairs, sh, id_col, threshold, round_to)
+
+
+def _verify_jaccard(
+    pairs: DataFrame,
+    sh: DataFrame,
+    id_col: str,
+    threshold: float,
+    round_to: int,
+) -> DataFrame:
+    """``pairs`` plus ``jaccard``, the rounded shingle-set Jaccard of
+    (id_a, id_b), read from the (id_col, _sh) shingle table ``sh``;
+    pairs below ``threshold`` are dropped."""
+    sa = sh.select(F.col(id_col).alias("_ida"), F.col("_sh").alias("_sa"))
+    sb = sh.select(F.col(id_col).alias("_idb"), F.col("_sh").alias("_sb"))
     out = (
-        pairs.join(
-            sh.withColumnRenamed("_shingles", "_sa"),
-            pairs["id_a"] == sh[id_col],
-        )
-        .drop(id_col)
-        .join(
-            sh.withColumnRenamed("_shingles", "_sb"),
-            F.col("id_b") == sh[id_col],
-        )
-        .drop(id_col)
+        pairs.join(sa, F.col("id_a") == F.col("_ida"))
+        .join(sb, F.col("id_b") == F.col("_idb"))
         .withColumn(
             "jaccard",
             F.round(
@@ -580,11 +579,71 @@ def jaccard_pairs(
                 round_to,
             ),
         )
-        .drop("_sa", "_sb")
+        .drop("_ida", "_idb", "_sa", "_sb")
     )
     if threshold > 0:
         out = out.filter(F.col("jaccard") >= threshold)
     return out
+
+
+def near_duplicate_pairs(
+    df: DataFrame,
+    threshold: float = 0.0,
+    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> tuple[DataFrame, Callable[[], dict] | None]:
+    """MinHash-LSH near dedup in one pass over ``df``: the rows of
+    ``jaccard_pairs(df, minhash_lsh_candidates(df, max_bucket_size=),
+    threshold=)`` and the summary of ``minhash_lsh_overflow(df,
+    max_bucket_size)``, at their default shingle size, hash count and
+    bands, from one shingling of each document.
+
+    Returns ``(pairs, overflow)``. ``pairs`` is (id_a, id_b, jaccard).
+    ``overflow`` is None when ``max_bucket_size`` is None; otherwise
+    ``overflow()`` returns the :func:`overflow_summary` row as a dict
+    (n_overflow_buckets, max_bucket_size_seen, n_dropped_ids) once an
+    action that consumes every row of ``pairs`` has run.
+
+    1. One table (id, shingle hashes, band hashes) is computed and
+       ``localCheckpoint``ed: the one job this call runs.
+    2. One groupBy on (band, band_hash) over ids gives each bucket's
+       id list. The overflow summary is an ``Observation`` on that
+       aggregate (:func:`rag_content_spark.observe.observe`), with an
+       exact re-aggregation as its fallback.
+    3. Each list is capped, its pairs enumerated in-array, and one
+       ``distinct`` merges the buckets (:func:`bucket_pairs`).
+    4. Jaccard is verified from the checkpointed shingle hashes.
+    """
+    _check_cap(max_bucket_size)
+    table = (
+        df.select(F.col(id_col), hashed_shingles(text_col).alias("_sh"))
+        .select(id_col, "_sh", minhash_band_hashes("_sh").alias("_bh"))
+        .localCheckpoint(eager=True)
+    )
+    ids = (
+        table.select(id_col, F.posexplode("_bh").alias("band", "band_hash"))
+        .groupBy("band", "band_hash")
+        .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
+    )
+    overflow = None
+    if max_bucket_size is not None:
+        size = F.size("_ids")
+        over = size > max_bucket_size
+        ids, overflow = observe(
+            ids,
+            F.count(F.when(over, 1)).alias("n_overflow_buckets"),
+            F.coalesce(F.max(F.when(over, size)), F.lit(0)).alias(
+                "max_bucket_size_seen"
+            ),
+            F.coalesce(
+                F.sum(F.when(over, size - max_bucket_size)), F.lit(0)
+            ).alias("n_dropped_ids"),
+        )
+    pairs = _verify_jaccard(
+        _pairs_in_buckets(ids, max_bucket_size), table, id_col, threshold, 6
+    )
+    return pairs, overflow
 
 
 def containment_pairs(
@@ -746,12 +805,15 @@ def apply_dedup(
     enough for LSH outputs where clusters share their minimum).
 
     One anti-join on the (small) loser set — the standard final step of a
-    dedup pipeline at scale.
+    dedup pipeline at scale. The loser set is broadcast from the start,
+    so the corpus side is never shuffled for it: it holds at most one
+    id per verified pair, and verified pairs are a subset of the LSH
+    candidates, whose count the bucket cap bounds.
     """
     # no distinct: LEFT ANTI is duplicate-insensitive, and the distinct
     # was a full extra shuffle of the loser ids (r12)
     losers = pairs.select(F.col("id_b").alias(id_col))
-    return df.join(losers, on=id_col, how="left_anti")
+    return df.join(F.broadcast(losers), on=id_col, how="left_anti")
 
 
 def _cc_single_task(p: DataFrame) -> DataFrame:
@@ -999,19 +1061,12 @@ def minhash_band_table(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    vectorized: bool = False,
 ) -> DataFrame:
     """(id, band, band_hash) — the materialized LSH index of a corpus
     snapshot. At 100 TB this is written once per snapshot, partitioned
     (or bucketed) by (band, band_hash); incremental batches then probe
     it without touching corpus text. ``minhash_lsh_candidates`` is the
-    self-join flavor of the same table. ``vectorized=True`` uses the
-    exact numpy/hashlib twin (:func:`minhash_band_table_np`; default
-    False — see minhash_lsh_candidates' measured trade-off note)."""
-    if vectorized:
-        return minhash_band_table_np(
-            df, text_col, id_col, num_hashes, bands, shingle_n
-        )
+    self-join flavor of the same table."""
     return df.select(
         F.col(id_col),
         F.posexplode(
@@ -1593,117 +1648,3 @@ def scrub_duplicate_spans(
         .alias("n_removed"),
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
     )
-
-
-def minhash_band_table_np(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Vectorized EXACT twin of :func:`minhash_band_table`: (id, band,
-    band_hash) rows computed per Arrow batch in numpy + hashlib instead
-    of interpreted per-row HOF folds.
-
-    Every quantity is integer or an md5 hex string, so exactness is
-    structural, not numerical: tokenization uses the byte-for-byte Java
-    ``\\s`` class (Spark's split is ASCII-only ``[ \\t\\n\\x0B\\f\\r]``),
-    token hashes are md5-per-DISTINCT-token (cached across the task —
-    the expression tree re-hashes per occurrence), shingle combination /
-    signature minima are int64 ops below 2^62 (the documented
-    no-overflow bound), and band hashes are md5 of the identical
-    comma-joined signature rows. Matches the declarative path on all
-    edges: out-of-range shingle positions contribute 0 (docs shorter
-    than ``shingle_n`` emit their degenerate shingle), empty token
-    lists emit shingle [0] — and so does NULL text (size(NULL) is
-    NULL, greatest(NULL-n, 0) is 0, coalesce fills 0: the declarative
-    chain gives NULL-text docs the same degenerate shingle as empty
-    ones). Equality-pinned row-for-row in
-    tests/test_dedup_similarity.py.
-
-    Why (guide §4.2): the signature fold runs 16 interpreted lambda
-    steps per SHINGLE per row and the whole chain re-evaluates per
-    reference; at any scale this path hashes each distinct token once
-    per task and runs ~num_hashes vectorized passes per batch.
-    """
-    assert shingle_n == len(_SHINGLE_COEFFS), "n=3 supported"
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    import pyspark.sql.types as T
-
-    import re
-
-    split_re = re.compile("[ \t\n\x0b\f\r]+")
-    rows_per_band = num_hashes // bands
-    coeffs = minhash_coeffs(num_hashes)
-    c0, c1, c2 = _SHINGLE_COEFFS
-    schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("band", T.IntegerType()),
-            T.StructField("band_hash", T.StringType()),
-        ]
-    )
-
-    def _bands(batches):
-        tok_cache: dict[str, int] = {}
-        for pdf in batches:
-            ids, th_flat, starts = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if not isinstance(text, str):
-                    text = ""  # NULL text == empty doc (see docstring)
-                ids.append(did)
-                starts.append(len(th_flat))
-                for t in split_re.split(text):
-                    if not t:
-                        continue
-                    h = tok_cache.get(t)
-                    if h is None:
-                        h = (
-                            int(
-                                hashlib.md5(t.encode()).hexdigest()[:15], 16
-                            )
-                            % MINHASH_P
-                        )
-                        tok_cache[t] = h
-                    th_flat.append(h)
-            if not ids:
-                continue
-            th = np.asarray(th_flat, dtype=np.int64)
-            starts.append(len(th_flat))
-            # per-doc sorted-distinct shingle hashes, flattened
-            sh_flat, sh_starts = [], [0]
-            for k in range(len(ids)):
-                d = th[starts[k] : starts[k + 1]]
-                pad = np.concatenate([d, np.zeros(3, dtype=np.int64)])
-                m = max(len(d) - 3, 0) + 1
-                sh = (
-                    pad[0:m] * c0 + pad[1 : m + 1] * c1 + pad[2 : m + 2] * c2
-                ) % MINHASH_P
-                sh_flat.append(np.unique(sh))
-                sh_starts.append(sh_starts[-1] + len(sh_flat[-1]))
-            flat = np.concatenate(sh_flat)
-            seg = np.asarray(sh_starts[:-1], dtype=np.int64)
-            sig = np.empty((len(ids), num_hashes), dtype=np.int64)
-            for j, (a, b) in enumerate(coeffs):
-                sig[:, j] = np.minimum.reduceat((flat * a + b) % MINHASH_P, seg)
-            out_ids, out_band, out_hash = [], [], []
-            for k, did in enumerate(ids):
-                for b in range(bands):
-                    row = ",".join(
-                        str(v)
-                        for v in sig[k, b * rows_per_band : (b + 1) * rows_per_band]
-                    )
-                    out_ids.append(did)
-                    out_band.append(b)
-                    out_hash.append(hashlib.md5(row.encode()).hexdigest())
-            yield pd.DataFrame(
-                {id_col: out_ids, "band": out_band, "band_hash": out_hash}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(_bands, schema=schema)

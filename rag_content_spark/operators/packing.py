@@ -15,7 +15,8 @@ shards for 10B documents. More shards only changes which bucket a doc
 lands in, never correctness. The default (``shards=None``) derives the
 count from the input's own partitioning — one shard per input split,
 floored at 32 — so packing parallelism scales with the corpus instead of
-capping at a literal.
+capping at a literal. It reads the splits off the plan's leaves and
+runs no Spark job (see :func:`input_splits`).
 """
 
 from __future__ import annotations
@@ -24,6 +25,36 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from rag_content_spark.functions.hashing import stable_hash64
 from rag_content_spark.functions.text import tokens
+
+#: Bytes of file input per split: Spark's default
+#: ``spark.sql.files.maxPartitionBytes``.
+SPLIT_BYTES = 128 << 20
+
+
+def input_splits(df: DataFrame) -> int:
+    """The split count of ``df``'s largest input, read off the leaves of
+    its logical plan without running a job:
+
+    - a file scan counts ``ceil(file bytes / SPLIT_BYTES)``;
+    - an RDD leaf (a checkpoint, an RDD-backed frame) counts its
+      partitions, which a checkpoint already holds;
+    - any other leaf (a local relation, a range) counts 1.
+
+    ``df.rdd.getNumPartitions()`` gives the same kind of number for the
+    plan's output, but under AQE it executes every shuffle stage of the
+    plan to learn the coalesced partition count, and the action that
+    follows runs them again.
+    """
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    n = 1
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation":
+            n = max(n, -(-leaf.relation().sizeInBytes() // SPLIT_BYTES))
+        elif kind == "LogicalRDD":
+            n = max(n, leaf.rdd().getNumPartitions())
+    return n
 
 
 def pack_sequences(
@@ -42,12 +73,13 @@ def pack_sequences(
     only, so the assignment is exactly reproducible for a given shard
     count. Pass ``shards`` explicitly when the layout must be stable
     across differently-partitioned reruns (e.g. oracle-pinned tests);
-    the derived default tracks input splits (>=32) for parallelism.
+    the derived default is ``max(32, input_splits(docs))``, one shard
+    per split of the largest input, and runs no job.
 
     Output: ``id, shard, n_tokens, seq_bucket``.
     """
     if shards is None:
-        shards = max(32, docs.rdd.getNumPartitions())
+        shards = max(32, input_splits(docs))
     shard = (
         stable_hash64(F.col(id_col).cast("string"), salt=salt) % shards
     ).alias("shard")

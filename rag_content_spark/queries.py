@@ -1374,10 +1374,9 @@ def _band_hashes_sql(num_hashes: int = 16, bands: int = 4) -> str:
 )
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _dup_corpus(spark, sf_dir)
-    cand = dedup.minhash_lsh_candidates(
-        corpus, num_hashes=16, bands=4, max_bucket_size=None  # oracle replays UNCAPPED pairs
-    )
-    return dedup.jaccard_pairs(corpus, cand, threshold=0.5)
+    return dedup.near_duplicate_pairs(
+        corpus, threshold=0.5, max_bucket_size=None  # oracle replays UNCAPPED pairs
+    )[0]
 
 
 # degenerate-bucket corpus: every 50th doc replicated VERBATIM 5 more
@@ -1580,12 +1579,9 @@ def q_dedup_precollapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined = dedup.collapse_exact_table(corpus).localCheckpoint(eager=True)
     reps = combined.filter(F.col("is_rep")).select("doc_id", "text")
     members = combined.select("rep_id", "doc_id", "n_copies")
-    cand = dedup.minhash_lsh_candidates(
-        reps, num_hashes=16, bands=4, max_bucket_size=None  # oracle replays UNCAPPED pairs
-    )
-    ver = dedup.jaccard_pairs(reps, cand, threshold=0.5).select(
-        "id_a", "id_b"
-    )
+    ver = dedup.near_duplicate_pairs(
+        reps, threshold=0.5, max_bucket_size=None  # oracle replays UNCAPPED pairs
+    )[0].select("id_a", "id_b")
     return dedup.expand_rep_pairs(ver, members)
 
 
@@ -3194,10 +3190,9 @@ def q_zscore_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _dup_corpus(spark, sf_dir)
-    cand = dedup.minhash_lsh_candidates(
-        corpus, num_hashes=16, bands=4, max_bucket_size=None  # oracle replays UNCAPPED pairs
-    )
-    pairs = dedup.jaccard_pairs(corpus, cand, threshold=0.5)
+    pairs = dedup.near_duplicate_pairs(
+        corpus, threshold=0.5, max_bucket_size=None  # oracle replays UNCAPPED pairs
+    )[0]
     return dedup.apply_dedup(corpus, pairs).select("doc_id")
 
 
@@ -3992,10 +3987,9 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _dup_corpus(spark, sf_dir)
-    cand = dedup.minhash_lsh_candidates(
-        corpus, num_hashes=16, bands=4, max_bucket_size=None  # oracle replays UNCAPPED pairs
-    )
-    pairs = dedup.jaccard_pairs(corpus, cand, threshold=0.5).select("id_a", "id_b")
+    pairs = dedup.near_duplicate_pairs(
+        corpus, threshold=0.5, max_bucket_size=None  # oracle replays UNCAPPED pairs
+    )[0].select("id_a", "id_b")
     return dedup.connected_components(pairs)
 
 
@@ -4187,12 +4181,9 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _dup_corpus(spark, sf_dir)
-    cand = dedup.minhash_lsh_candidates(
-        corpus, num_hashes=16, bands=4, max_bucket_size=None  # oracle replays UNCAPPED pairs
-    )
-    pairs = dedup.jaccard_pairs(corpus, cand, threshold=0.5).select(
-        "id_a", "id_b"
-    )
+    pairs = dedup.near_duplicate_pairs(
+        corpus, threshold=0.5, max_bucket_size=None  # oracle replays UNCAPPED pairs
+    )[0].select("id_a", "id_b")
     comp = dedup.connected_components(pairs)
     qual = corpus.select(
         F.col("doc_id").alias("id"),
@@ -4916,12 +4907,9 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the MinHash-LSH pipeline on planted near-dup pairs —
     the measurement that tunes (num_hashes, bands) at scale."""
     corpus = _dup_corpus(spark, sf_dir)
-    cand = dedup.minhash_lsh_candidates(
-        corpus, num_hashes=16, bands=4, max_bucket_size=None  # oracle replays UNCAPPED pairs
-    )
-    found = dedup.jaccard_pairs(corpus, cand, threshold=0.5).select(
-        "id_a", "id_b"
-    )
+    found = dedup.near_duplicate_pairs(
+        corpus, threshold=0.5, max_bucket_size=None  # oracle replays UNCAPPED pairs
+    )[0].select("id_a", "id_b")
     planted = (
         _docs(spark, sf_dir)
         .filter(F.col("doc_id") % 25 == 0)

@@ -5,8 +5,13 @@ batch-only, SURVEY §2 'not present').
   ``events_windowed`` query; late data beyond the watermark is dropped,
   state is bounded.
 - stateful sessionization via applyInPandasWithState: the streaming twin
-  of the batch ``sessionize`` query — per-user session state with a
-  processing-time timeout.
+  of the batch ``sessionize`` query — per-user session state.
+
+The stateful operators set no state timeout. A processing-time timeout
+makes every trigger run a further no-data batch (Spark has to look for
+expired keys), so an ``availableNow`` query over it never terminates.
+Neither operator needs one: a session closes on the event-time gap of
+its next event, and the as-of state is one (ts, value) per key.
 """
 
 from __future__ import annotations
@@ -90,7 +95,6 @@ def _session_fn(
             last_ts = ts_sec
             n_events += 1
     state.update((session_no, last_ts if last_ts is not None else -1, n_events))
-    state.setTimeoutDuration(60 * 60 * 1000)
     rows.append((key[0], session_no, n_events))
     yield pd.DataFrame(rows, columns=["user_id", "session_no", "n_events"])
 
@@ -106,7 +110,7 @@ def stateful_sessionize(events: DataFrame) -> DataFrame:
             outputStructType=SESSION_OUTPUT_SCHEMA,
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -157,7 +161,6 @@ def _asof_fn(
                     )
                 )
     state.update((last_ts if last_ts is not None else -1, last_value))
-    state.setTimeoutDuration(24 * 60 * 60 * 1000)
     yield pd.DataFrame(rows, columns=[f.name for f in ASOF_OUTPUT_SCHEMA])
 
 
@@ -198,7 +201,7 @@ def stateful_asof_enrich(
             outputStructType=ASOF_OUTPUT_SCHEMA,
             stateStructType=ASOF_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

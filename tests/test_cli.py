@@ -251,6 +251,10 @@ def _write_parity_input(spark, root, flag):
             (10, _prose(1), "es"),                    # exact dup of 1
             (11, _prose(2, 59) + " merge", "fr"),     # near dup of 2
         ]
+        if flag == "binding_cap":
+            # two more near dups of 2: band buckets of 4 ids
+            rows += [(12, _prose(2, 59) + " table", "en"),
+                     (13, _prose(2, 59) + " scan", "es")]
     rows.append((99, "!!!! ???? ....", "en"))         # gate drops
     src = str(root / "docs.parquet")
     spark.createDataFrame(rows, ["doc_id", "text", "lang"]).write.parquet(src)
@@ -326,7 +330,8 @@ def _stage_counts(spark, src, flags):
 
 @pytest.mark.parametrize(
     "flag",
-    ["near_mix", "dsir", "dsir_default_k", "scrub", "warc", "no_bucket_cap"],
+    ["near_mix", "dsir", "dsir_default_k", "scrub", "warc", "no_bucket_cap",
+     "binding_cap"],
 )
 def test_cli_curate_stats_parity(spark, tmp_path, flag):
     """Every stats.json value equals a ``.count()`` of the same stage, in
@@ -344,6 +349,7 @@ def test_cli_curate_stats_parity(spark, tmp_path, flag):
         "scrub": ["--scrub-passages", "--near-dedup"],
         "warc": ["--input-format", "warc", "--near-dedup"],
         "no_bucket_cap": ["--near-dedup", "--max-bucket-size", "0"],
+        "binding_cap": ["--near-dedup", "--max-bucket-size", "2"],
     }[flag]
     out = str(tmp_path / "out")
     assert main(["curate", "-i", src, "-o", out, "--pack-budget", "64", *flags]) == 0
@@ -351,9 +357,28 @@ def test_cli_curate_stats_parity(spark, tmp_path, flag):
     exp, frame = _stage_counts(spark, src, flags)
     assert list(stats) == list(exp) and list(stats)[-1] == "output"
     assert stats == exp
+    if flag == "binding_cap":
+        assert stats["lsh_overflow"]["n_dropped_ids"] > 0
     cols = ["doc_id", "shard", "seq_bucket"]
     written = spark.read.parquet(f"{out}/curated").select(*cols).collect()
     assert sorted(written) == sorted(frame.select(*cols).collect())
+
+
+def test_cli_curate_near_dedup_job_budget(spark, tmp_path):
+    """One ``curate --near-dedup`` call runs at most 15 Spark jobs: each
+    doc is shingled once into one checkpointed band table, the overflow
+    report rides the band-bucket aggregate, and packing reads the
+    near-deduped checkpoint instead of probing a shuffled plan."""
+    from rag_content_spark.cli import main
+    from tests.test_serve_reads import _jobs
+
+    src = _write_parity_input(spark, tmp_path, "near_mix")
+    out = str(tmp_path / "out")
+    with _jobs(spark) as ids:
+        assert main(["curate", "-i", src, "-o", out, "--near-dedup"]) == 0
+    stats = json.load(open(f"{out}/stats.json"))
+    assert stats["after_near_dedup"] < stats["after_exact_dedup"]
+    assert len(ids) <= 15, len(ids)
 
 
 @pytest.mark.parametrize("kind", ["empty", "gated_out"])

@@ -139,6 +139,43 @@ def test_pack_sequences_default_shards_scale(spark):
     assert len({r["shard"] for r in out}) >= 20  # hash-spread over >=32 shards
 
 
+def test_pack_sequences_default_shards_run_no_job(spark, tmp_path, monkeypatch):
+    # the default shard count comes off the plan's leaves: building the
+    # packing plan over a joined input (shuffles still unplanned) runs
+    # no Spark job, and the split count of a file input or a checkpoint
+    # is read without one
+    import os
+
+    from rag_content_spark.operators import packing
+    from rag_content_spark.operators.packing import input_splits, pack_sequences
+    from tests.test_serve_reads import _jobs
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, f"tok {i} tok") for i in range(60)], ["doc_id", "text"]
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    joined = docs.join(docs.groupBy("doc_id").count(), "doc_id").filter(
+        F.col("count") > 0
+    )
+    wide = spark.range(100).repartition(40).localCheckpoint(eager=True)
+    with _jobs(spark) as ids:
+        packed = pack_sequences(joined, budget=8)
+        splits = (input_splits(joined), input_splits(wide))
+    assert ids == []
+    assert splits == (1, 40)
+    # a file scan counts its bytes in SPLIT_BYTES splits
+    data = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if not f.startswith((".", "_"))
+    )
+    monkeypatch.setattr(packing, "SPLIT_BYTES", 100)
+    assert input_splits(joined) == -(-data // 100) > 1
+    out = packed.collect()
+    assert len(out) == 60 and max(r["shard"] for r in out) < 32
+
+
 def test_pack_sequences(spark):
     from rag_content_spark.operators.packing import pack_sequences
 

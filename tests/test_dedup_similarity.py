@@ -788,13 +788,12 @@ def test_blocked_exact_dot_pairs_bit_identical_to_fold(spark):
     )
 
 
-def test_minhash_band_table_np_row_identical(spark):
-    # r11: the vectorized band table must equal the declarative one
-    # row-for-row on every edge: short docs (degenerate shingle),
-    # empty text (shingle [0]), NULL text (same degenerate shingle as
-    # empty — size(NULL) is NULL and greatest/coalesce fill 0), NBSP
-    # (one token under Java \s), exact-duplicate docs, tab/newline
-    # separators.
+def test_near_duplicate_pairs_matches_two_step_composition(spark):
+    # the one-pass operator returns the rows of jaccard_pairs over
+    # minhash_lsh_candidates, and the overflow_summary row of
+    # minhash_lsh_overflow, on every edge: short docs (degenerate
+    # shingle), empty and NULL text (the same degenerate shingle),
+    # exact duplicates, and band buckets of 3 ids against a cap of 2
     rows = [
         (1, "alpha beta gamma delta alpha beta"),
         (2, "alpha beta gamma delta alpha beta"),
@@ -805,19 +804,22 @@ def test_minhash_band_table_np_row_identical(spark):
         (7, "nb\xa0sp token"),
         (8, "tab\tsep\nnewline\x0bvt\fff\rcr end"),
         (9, "alpha beta gamma delta epsilon zeta eta theta"),
+        (10, "alpha beta gamma delta epsilon zeta eta theta iota"),
+        (11, "alpha beta gamma delta alpha beta"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    old = sorted(
-        map(
-            tuple,
-            dedup.minhash_band_table(df, vectorized=False).collect(),
+    for cap, threshold in ((None, 0.0), (2, 0.0), (2, 0.5), (1000, 0.7)):
+        pairs, overflow = dedup.near_duplicate_pairs(
+            df, threshold=threshold, max_bucket_size=cap
         )
-    )
-    new = sorted(
-        map(
-            tuple,
-            dedup.minhash_band_table_np(df).collect(),
-        )
-    )
-    assert old == new
-    assert len(new) == 9 * 4  # EVERY doc (NULL text included) emits rows
+        cand = dedup.minhash_lsh_candidates(df, max_bucket_size=cap)
+        exp = dedup.jaccard_pairs(df, cand, threshold=threshold)
+        assert pairs.columns == exp.columns == ["id_a", "id_b", "jaccard"]
+        got = sorted(map(tuple, pairs.collect()))
+        assert got == sorted(map(tuple, exp.collect())), (cap, threshold)
+        if cap is None:
+            assert overflow is None and len(got) > 3
+            continue
+        summary = dedup.overflow_summary(dedup.minhash_lsh_overflow(df, cap))
+        assert overflow() == summary.collect()[0].asDict(), (cap, threshold)
+        assert (overflow()["n_dropped_ids"] > 0) == (cap == 2)

@@ -81,7 +81,10 @@ def test_stateful_sessionize_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120) is True
+    finally:
+        q.stop()
     got = {
         (r["user_id"], r["session_no"]): r["n_events"]
         for r in spark.sql("SELECT * FROM sessions").collect()
@@ -177,7 +180,10 @@ def test_stateful_asof_enrich_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120) is True
+    finally:
+        q.stop()
     got = {
         r["event_id"]: (r["asof_ts"], r["asof_value"])
         for r in spark.sql("SELECT * FROM asof_out").collect()
