@@ -636,16 +636,13 @@ def cmd_ann_query(args: argparse.Namespace) -> int:
     if args.vector:
         qv = [float(x) for x in args.vector.split(",")]
     elif args.vec_id is not None:
-        from rag_content_spark.plans.ann_index import (
-            _read_live_index,
-            load_ann_meta,
-        )
+        from rag_content_spark.plans import index_commit as ic
 
-        meta, _cb = load_ann_meta(args.index_dir)
+        meta = ic.read_meta(args.index_dir)
         # live view WITH delete tombstones applied — a deleted vector
         # must not be usable as a query seed (round-8 ADVICE)
         hit = (
-            _read_live_index(spark, args.index_dir, meta)
+            ic.read_live(spark, args.index_dir, "index", meta["id_col"])
             .filter(F.col(meta["id_col"]) == args.vec_id)
             .limit(1)
             .collect()

@@ -898,49 +898,6 @@ def srp_query_scores_np(
     return base.mapInPandas(_score, schema=schema)
 
 
-def srp_reduce_np(
-    df: DataFrame,
-    out_dim: int = 8,
-    dim: int = 64,
-    seed: str = "red",
-    embedding_col: str = "embedding",
-    out_col: str = "reduced",
-) -> DataFrame:
-    """Vectorized twin of :func:`srp_reduce`: one (n x out_dim)
-    projection matmul per Arrow batch — the build path for materializing
-    a reduced column over a full corpus (the interpreted per-component
-    folds dominate there, same story as lsh_signature_np).
-
-    numpy's SIMD summation reassociates the dot, so values agree with
-    the fold to ~1e-12 relative, not bit-exactly — tests pin <1e-9 abs.
-    Oracle-checked queries keep the fold."""
-    import numpy as np
-
-    import pyspark.sql.types as T
-
-    planes = np.array(
-        [srp_plane(seed, j, dim) for j in range(out_dim)], dtype=np.float64
-    )
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
-    )
-
-    def _proj(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[out_col] = []
-                yield pdf
-                continue
-            emb = np.array(pdf[embedding_col].tolist(), dtype=np.float64)
-            red = emb @ planes.T
-            pdf = pdf.copy()
-            pdf[out_col] = list(red)
-            yield pdf
-
-    return df.mapInPandas(_proj, schema=schema)
-
-
 def blocked_exact_dot_pairs(
     emb: DataFrame,
     block_col: str = "label",

@@ -23,17 +23,18 @@ Layout (commit-logged since round 8, same protocol as text_index):
       centroids.parquet           frozen IVF model
       codebook.json               frozen PQ model
       data/i-<uuid>/cell=NN/...   index segments (one per writer)
+      data/d-<uuid>/...           delete tombstones (ids)
       commits/snap-NNNNN.json     hard-link-claimed manifests
                                   {kind, dirs, stats: {n_vectors}}
 
-Maintenance is CONCURRENCY-SAFE via plans/index_commit.py: adds write
-unique staging segments and claim commits (no shared-dir appends, no
+plans/index_commit.py owns the live view — the tombstone anti-join,
+the delete and compact commits, vacuum — and this module states only
+its layout (:func:`_layout`): one index component partitioned by cell,
+sorted by id within it, carrying ``n_vectors``. Adds write unique
+staging segments and claim commits (no shared-dir appends, no
 meta.json read-modify-write — concurrent adds never lose an
-``n_vectors`` update), compaction absorbs the live view into one
-segment under a single ``compact`` commit with ``base_version``
-snapshot isolation, and a crash at any point leaves the old view
-intact (no renames). Pre-log indexes (bare ``index/`` + stats in
-meta.json) read transparently and upgrade on their first logged write.
+``n_vectors`` update); a compaction racing an add or a delete keeps
+it live, and a crash at any point leaves the old view intact.
 
 Why this shape at 100 TB: the index is splittable, schema-evolvable,
 queryable by any engine, and cells map to directories — a probe reads
@@ -55,71 +56,29 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from rag_content_spark.plans import index_commit as ic
 
 
-def _legacy_root(meta: dict) -> dict:
-    return {
-        "kind": "base",
-        "version": 0,
-        "base_version": 0,
-        "dirs": {"index": "index"},
-        "stats": {"n_vectors": int(meta["n_vectors"])},
-    }
+_STATS = {"n_vectors": "count(1)"}
 
 
-def _live(out_dir: str, meta: dict) -> tuple[dict, list[dict], dict]:
-    legacy = _legacy_root(meta) if "n_vectors" in meta else None
-    root, adds = ic.live_view(out_dir, legacy_root=legacy)
-    return root, adds, ic.view_stats(root, adds)
+def _layout(meta: dict) -> list[ic.Component]:
+    return [
+        ic.Component(
+            "index", "cell", int(meta["nlist"]), ("cell", meta["id_col"]), stats=_STATS
+        )
+    ]
 
 
-def _read_live_index(spark: SparkSession, out_dir: str, meta: dict) -> DataFrame:
-    root, adds, _stats = _live(out_dir, meta)
-    df = ic.read_union(spark, out_dir, ic.view_dirs(root, adds, "index"))
-    dels = _tombstones(spark, out_dir, root, adds, meta["id_col"])
-    return df if dels is None else df.join(dels, meta["id_col"], "left_anti")
-
-
-def _tombstones(
-    spark: SparkSession, out_dir: str, root: dict, adds: list[dict], id_col: str
-) -> DataFrame | None:
-    dirs = ic.view_dirs(root, adds, "deletes")
-    if not dirs:
-        return None
-    return ic.read_union(spark, out_dir, dirs).select(id_col).distinct()
+def _codebook(out_dir: str) -> list:
+    with open(os.path.join(out_dir, "codebook.json")) as f:
+        return json.load(f)
 
 
 def delete_from_ann_index(spark: SparkSession, out_dir: str, ids) -> dict:
-    """Delete vectors by id (the text sibling's contract,
-    plans/text_index.delete_from_text_index): one tombstone segment +
-    one ``delete`` commit with an exact negative ``n_vectors`` delta
-    computed against the live view; the pruned query path anti-joins
-    live tombstones and :func:`compact_ann_index` drops the masked rows
-    physically. Returns the meta view after the delete."""
-    meta, _cb = load_ann_meta(out_dir)
-    with open(os.path.join(out_dir, "meta.json")) as fh:
-        raw_meta = json.load(fh)
-    if "n_vectors" in raw_meta:
-        ic.ensure_base(
-            out_dir, _legacy_root({"n_vectors": raw_meta["n_vectors"]})
-        )
-    id_col = meta["id_col"]
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], [id_col])
-    ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    live = _read_live_index(spark, out_dir, meta).select(id_col)
-    n_hit = live.join(ids, id_col, "leftsemi").count()
-    d_dir = ic.staging_dir(out_dir, "d")
-    ids.write.mode("errorifexists").parquet(os.path.join(out_dir, d_dir))
-    ic.claim(
-        out_dir,
-        {
-            "kind": "delete",
-            "dirs": {"deletes": d_dir},
-            "stats": {"n_vectors": -int(n_hit)},
-        },
-    )
-    _root, _adds, stats = _live(out_dir, meta)
-    meta["n_vectors"] = stats["n_vectors"]
-    return meta
+    """Delete vectors by id (``ids``: a list or a one-column DataFrame)
+    — one tombstone segment and one ``delete`` commit with an exact
+    negative ``n_vectors`` delta; see index_commit.delete_ids. Returns
+    the meta view after the delete."""
+    meta = ic.read_meta(out_dir)
+    return meta | ic.delete_ids(spark, out_dir, ids, meta["id_col"], _layout(meta))
 
 
 def build_ann_index(
@@ -219,17 +178,9 @@ def build_ann_index(
 
 
 def load_ann_meta(out_dir: str) -> tuple[dict, list]:
-    """(meta, codebook); meta includes live n_vectors and defaults
-    id_col/embedding_col for pre-round-8 indexes."""
-    with open(os.path.join(out_dir, "meta.json")) as f:
-        meta = json.load(f)
-    with open(os.path.join(out_dir, "codebook.json")) as f:
-        codebook = json.load(f)
-    meta.setdefault("id_col", "vec_id")
-    meta.setdefault("embedding_col", "embedding")
-    _root, _adds, stats = _live(out_dir, meta)
-    meta["n_vectors"] = stats["n_vectors"]
-    return meta, codebook
+    """(meta, codebook); meta includes the live n_vectors."""
+    meta = ic.read_meta(out_dir)
+    return meta | ic.view_stats(*ic.live_view(out_dir)), _codebook(out_dir)
 
 
 def load_centroids(out_dir: str) -> list[tuple[int, list[float]]]:
@@ -270,7 +221,8 @@ def query_ann_index(
         pq_adc_table,
     )
 
-    meta, codebook = load_ann_meta(out_dir)
+    meta = ic.read_meta(out_dir)
+    codebook = _codebook(out_dir)
     id_col, embedding_col = meta["id_col"], meta["embedding_col"]
     import math
 
@@ -283,7 +235,7 @@ def query_ann_index(
     )[:n_probe]
     cells = [int(c) for _, c in probes]
 
-    index = _read_live_index(spark, out_dir, meta).filter(
+    index = ic.read_live(spark, out_dir, "index", id_col).filter(
         F.col("cell").isin(cells)
     )
     table = pq_adc_table([float(x) for x in query_vec], codebook)
@@ -333,14 +285,9 @@ def add_to_ann_index(
     from rag_content_spark.functions.vector import pq_encode_np
     from rag_content_spark.operators.similarity import assign_ivf_cells_np
 
-    meta, codebook = load_ann_meta(out_dir)
+    meta = ic.read_meta(out_dir)
+    codebook = _codebook(out_dir)
     id_col, embedding_col = meta["id_col"], meta["embedding_col"]
-    with open(os.path.join(out_dir, "meta.json")) as fh:
-        raw_meta = json.load(fh)
-    if "n_vectors" in raw_meta:  # pre-log index: upgrade first
-        ic.ensure_base(
-            out_dir, _legacy_root({"n_vectors": raw_meta["n_vectors"]})
-        )
     centroids = load_centroids(out_dir)
     emb = new_emb.select(id_col, embedding_col)
     n_new = emb.count()
@@ -365,9 +312,7 @@ def add_to_ann_index(
             "stats": {"n_vectors": n_new},
         },
     )
-    _root, _adds, stats = _live(out_dir, meta)
-    meta["n_vectors"] = stats["n_vectors"]
-    return meta
+    return meta | ic.view_stats(*ic.live_view(out_dir))
 
 
 def compact_ann_index(spark: SparkSession, out_dir: str) -> dict:
@@ -378,67 +323,9 @@ def compact_ann_index(spark: SparkSession, out_dir: str) -> dict:
     segment, claim ONE ``compact`` commit recording ``base_version`` —
     an add racing the compaction stays live, a crash leaves the old
     view intact (no renames), and superseded segments are reclaimed by
-    :func:`vacuum_ann_index`. Model sidecars (centroids/codebook/meta)
+    index_commit.vacuum_index. Model sidecars (centroids/codebook/meta)
     are untouched — compaction moves bytes, not rows. The per-cell sort
-    key is the RECORDED id column (round-7 ADVICE: no more inference)."""
-    meta, _codebook = load_ann_meta(out_dir)
-    with open(os.path.join(out_dir, "meta.json")) as fh:
-        raw_meta = json.load(fh)
-    if "n_vectors" in raw_meta:
-        ic.ensure_base(
-            out_dir, _legacy_root({"n_vectors": raw_meta["n_vectors"]})
-        )
-    root, adds, live = _live(out_dir, meta)
-    base_version = max([root["version"]] + [a["version"] for a in adds])
-    i_dirs = ic.view_dirs(root, adds, "index")
-    before = _count_files(out_dir, i_dirs)
-    rows = ic.read_union(spark, out_dir, i_dirs)
-    dels = _tombstones(spark, out_dir, root, adds, meta["id_col"])
-    if dels is not None:  # apply tombstones physically
-        rows = rows.join(dels, meta["id_col"], "left_anti")
-    n_rows = rows.count()
-    i_dir = ic.staging_dir(out_dir, "i")
-    (
-        rows.repartition(int(meta["nlist"]), "cell")
-        .sortWithinPartitions("cell", meta["id_col"])
-        .write.mode("errorifexists")
-        .partitionBy("cell")
-        .parquet(os.path.join(out_dir, i_dir))
-    )
-    ic.claim(
-        out_dir,
-        {
-            "kind": "compact",
-            "base_version": base_version,
-            "dirs": {"index": i_dir},
-            # EXACT recount of the materialized survivors, not the
-            # accumulated live total: concurrent overlapping deletes
-            # (or a delete racing an add of the same ids) can skew the
-            # delta-summed stats (write-skew — see index_commit
-            # docstring); recomputing here makes the drift self-heal
-            # at every compaction.
-            "stats": {"n_vectors": int(n_rows)},
-        },
-    )
-    new_root, new_adds, _s = _live(out_dir, meta)
-    return {
-        "n_files_before": before,
-        "n_files_after": _count_files(
-            out_dir, ic.view_dirs(new_root, new_adds, "index")
-        ),
-        "n_rows": n_rows,
-    }
-
-
-def vacuum_ann_index(out_dir: str) -> int:
-    """Reclaim segments superseded by compaction; see
-    index_commit.vacuum_index. Returns directories removed."""
-    return ic.vacuum_index(out_dir)
-
-
-def _count_files(out_dir: str, rel_dirs: list[str]) -> int:
-    n = 0
-    for rel in rel_dirs:
-        for _root, _dirs, files in os.walk(os.path.join(out_dir, rel)):
-            n += sum(1 for fn in files if fn.endswith(".parquet"))
-    return n
+    key is the RECORDED id column (round-7 ADVICE: no more inference).
+    Returns {n_files_before, n_files_after, n_rows}."""
+    meta = ic.read_meta(out_dir)
+    return ic.compact(spark, out_dir, meta["id_col"], _layout(meta))

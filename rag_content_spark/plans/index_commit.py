@@ -1,4 +1,5 @@
-"""Optimistic-concurrency commit log for persisted indexes (text + ANN).
+"""Optimistic-concurrency commit log for persisted indexes (text + ANN),
+and the one owner of their LIVE VIEW.
 
 Round-7 verdict: ``add_to_text_index``/``add_to_ann_index`` did
 read-modify-write on ``meta.json`` plus ``mode("append")`` parquet
@@ -6,7 +7,7 @@ writes — two concurrent adds lose one side's stats update (BM25
 idf/avgdl silently wrong), an add can interleave with ``compact_*``'s
 rename swap, and a crash between compact's two renames left no live
 data dir. This module ports versioned_table's protocol
-(sinks/versioned_table.py:120-177) to index maintenance:
+(sinks/versioned_table.py) to index maintenance:
 
 - every writer lands data in a UNIQUE staging directory under ``data/``
   (concurrent writers can never collide; Spark appends to a shared dir
@@ -28,9 +29,15 @@ data dir. This module ports versioned_table's protocol
   crash window at all (round-7 ADVICE on compact_text_index's two-rename
   recovery hole).
 
-Legacy indexes (pre-log: bare ``postings/``+``meta.json``) read
-transparently — the reader synthesizes a root from ``meta.json`` — and
-upgrade on their first logged write via ``ensure_base``.
+The index modules (plans/text_index.py, plans/ann_index.py) state only
+their layout — which components they write, how each is partitioned and
+sorted, and which SQL aggregates give their stats (:class:`Component`).
+Everything that follows from the live view is written once, here: the
+tombstone anti-join (:func:`read_live`), the delete commit
+(:func:`delete_ids`), the compact commit (:func:`compact`) and the
+reclaim of superseded segments (:func:`vacuum_index`). An index is its
+``meta.json`` plus this log; a directory without the log is rejected
+(:func:`read_meta`).
 """
 
 from __future__ import annotations
@@ -41,10 +48,43 @@ import random
 import re
 import time
 import uuid
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, functions as F
 
 
 def _snap_path(index_dir: str, version: int) -> str:
     return os.path.join(index_dir, "commits", f"snap-{version:05d}.json")
+
+
+def manifest_versions(log_dir: str) -> list[tuple[int, str]]:
+    """``(version, file name)`` of every ``snap-N.json`` manifest in
+    ``log_dir``, ascending by the PARSED version — the one version
+    parser of both commit logs (this one and sinks/versioned_table.py).
+
+    Names match ``snap-\\d+.json`` (any digit count): past version 99999
+    the ``{:05d}`` padding grows to 6 digits, and a ``\\d{5}``-only regex
+    or a file-name sort would silently drop or mis-order those
+    manifests. A filename scan only; no manifest is opened."""
+    try:
+        names = os.listdir(log_dir)
+    except FileNotFoundError:
+        return []
+    out = []
+    for name in names:
+        m = re.fullmatch(r"snap-(\d+)\.json", name)
+        if m:
+            out.append((int(m.group(1)), name))
+    return sorted(out)
+
+
+def read_manifests(log_dir: str) -> list[dict]:
+    """Every manifest in ``log_dir``, parsed, ascending by version."""
+    out = []
+    for _v, name in manifest_versions(log_dir):
+        with open(os.path.join(log_dir, name)) as f:
+            out.append(json.load(f))
+    return out
 
 
 def _max_version(cdir: str) -> int:
@@ -52,41 +92,31 @@ def _max_version(cdir: str) -> int:
     path must not re-parse every manifest JSON (O(log-length) reads per
     retry was the starvation amplifier the contention probe caught: the
     loser got slower each round while winners kept claiming)."""
-    mx = 0
-    try:
-        names = os.listdir(cdir)
-    except FileNotFoundError:
-        return 0
-    for name in names:
-        m = re.fullmatch(r"snap-(\d+)\.json", name)
-        if m:
-            v = int(m.group(1))
-            if v > mx:
-                mx = v
-    return mx
+    versions = manifest_versions(cdir)
+    return versions[-1][0] if versions else 0
 
 
 def commits(index_dir: str) -> list[dict]:
-    """All claimed commit manifests, ascending by version.
+    """All claimed commit manifests, ascending by version."""
+    return read_manifests(os.path.join(index_dir, "commits"))
 
-    Filenames match ``snap-\\d+.json`` (any digit count) and are ordered
-    by the PARSED version number, not lexicographically — at version
-    100000 the zero-padding overflows to 6 digits and a ``\\d{5}``-only
-    regex (or a filename sort) would silently drop / mis-order commits.
-    """
-    cdir = os.path.join(index_dir, "commits")
-    if not os.path.isdir(cdir):
-        return []
-    versioned = []
-    for name in os.listdir(cdir):
-        m = re.fullmatch(r"snap-(\d+)\.json", name)
-        if m:
-            versioned.append((int(m.group(1)), name))
-    out = []
-    for _v, name in sorted(versioned):
-        with open(os.path.join(cdir, name)) as f:
-            out.append(json.load(f))
-    return out
+
+def _no_log(index_dir: str) -> ValueError:
+    return ValueError(
+        f"{index_dir} has no commit log (commits/snap-*.json): not an "
+        f"index, or one written before the log existed; rebuild it"
+    )
+
+
+def read_meta(index_dir: str) -> dict:
+    """The index's static config (``meta.json``). Raises ``ValueError``
+    naming ``index_dir`` when it has no commit log, before any data is
+    read or written."""
+    with open(os.path.join(index_dir, "meta.json")) as f:
+        meta = json.load(f)
+    if not _max_version(os.path.join(index_dir, "commits")):
+        raise _no_log(index_dir)
+    return meta
 
 
 def claim(index_dir: str, record: dict, attempts_out: list | None = None) -> int:
@@ -145,27 +175,22 @@ def staging_dir(index_dir: str, prefix: str) -> str:
     return f"data/{prefix}-{uuid.uuid4().hex[:12]}"
 
 
-def live_view(
-    index_dir: str, legacy_root: dict | None = None
-) -> tuple[dict, list[dict]]:
+def live_view(index_dir: str) -> tuple[dict, list[dict]]:
     """(root, adds) — the newest base/compact commit and the
     add/delete commits it did not absorb (version > root.base_version,
-    excluding the root itself). ``legacy_root`` is the synthesized
-    pre-log root used when no commit log exists yet."""
+    excluding the root itself). Raises ``ValueError`` when the index
+    has no commit log."""
     snaps = commits(index_dir)
     if not snaps:
-        if legacy_root is None:
-            raise ValueError(f"no commits and no legacy root in {index_dir}")
-        return legacy_root, []
+        raise _no_log(index_dir)
     root = next(
         s for s in reversed(snaps) if s["kind"] in ("base", "compact")
     )
-    base_v = root.get("base_version", root["version"])
     adds = [
         s
         for s in snaps
         if s["kind"] in ("add", "delete")
-        and s["version"] > base_v
+        and s["version"] > root["base_version"]
         and s["version"] != root["version"]
     ]
     return root, adds
@@ -190,31 +215,6 @@ def view_dirs(root: dict, adds: list[dict], component: str) -> list[str]:
     return out
 
 
-def ensure_base(index_dir: str, legacy_root: dict) -> None:
-    """Upgrade a legacy (pre-log) index in place: claim the synthesized
-    root as EXACTLY version 1. The upgrade must not go through the
-    retrying :func:`claim` — a loser retrying to the next tip could
-    land its base root ABOVE another writer's already-claimed add,
-    which live_view would then mask (a lost add). Targeting version 1
-    directly makes racing upgraders collapse to one winner and every
-    loser a no-op."""
-    if commits(index_dir):
-        return
-    cdir = os.path.join(index_dir, "commits")
-    os.makedirs(cdir, exist_ok=True)
-    manifest = dict(legacy_root)
-    manifest.update(version=1, parent=None, base_version=1)
-    tmp = os.path.join(cdir, f".commit-{uuid.uuid4().hex[:12]}.json")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2)
-    try:
-        os.link(tmp, _snap_path(index_dir, 1))
-    except FileExistsError:
-        pass  # another writer completed the upgrade
-    finally:
-        os.remove(tmp)
-
-
 # segment dir key -> schema of its first read; see read_segment
 _SEGMENT_SCHEMAS: dict[tuple, object] = {}
 _SEGMENT_SCHEMAS_MAX = 4096
@@ -227,7 +227,7 @@ def read_segment(spark, path: str):
     write-once (:func:`staging_dir` names each with a uuid), so the
     schema is reused under a key of the path plus the directory's
     device, inode and mtime: a directory removed and rebuilt at the same
-    path (a legacy overwrite, a test fixture) is a new key."""
+    path (a rebuilt index, a test fixture) is a new key."""
     try:
         st = os.stat(path)
     except OSError:
@@ -256,6 +256,164 @@ def read_union(spark, index_dir: str, rel_dirs: list[str]):
     return out
 
 
+def read_live(
+    spark,
+    index_dir: str,
+    component: str,
+    id_col: str,
+    view: tuple[dict, list[dict]] | None = None,
+) -> DataFrame:
+    """The live rows of ``component`` (e.g. 'postings', 'lengths',
+    'index'): the union of its live segments, anti-joined with the
+    distinct ids of the live delete tombstones when any are live.
+    ``view`` is a ``(root, adds)`` already listed by the caller, so a
+    read that needs several components parses the log once."""
+    root, adds = view or live_view(index_dir)
+    df = read_union(spark, index_dir, view_dirs(root, adds, component))
+    deletes = view_dirs(root, adds, "deletes")
+    if not deletes:
+        return df
+    dels = read_union(spark, index_dir, deletes).select(id_col).distinct()
+    return df.join(dels, id_col, "left_anti")
+
+
+def segment_stats(spark, index_dir: str, rel_dir: str, aggs: dict) -> dict:
+    """Exact integer aggregates over one STAGED segment: ``aggs`` maps
+    each stat name to a SQL aggregate (``{"n_docs": "count(1)"}``); a
+    NULL sum (no rows) counts as 0. The read infers the new segment's
+    schema once for every later reader (:func:`read_segment`)."""
+    row = (
+        read_segment(spark, os.path.join(index_dir, rel_dir))
+        .agg(*[F.expr(e).alias(k) for k, e in aggs.items()])
+        .collect()[0]
+    )
+    return {k: int(row[k] or 0) for k in aggs}
+
+
+class Component(NamedTuple):
+    """One parquet component of an index layout. Compaction rewrites it
+    hash-partitioned on ``partition_col`` into ``n_partitions`` tasks,
+    sorted by ``sort_cols`` and written partitioned by that column, or,
+    with no ``partition_col``, as one unpartitioned file. ``stats`` maps
+    the manifest stats this component carries to the SQL aggregates
+    that recount them over its rows (:func:`segment_stats`). A
+    component's segments stage under ``data/<first letter>-<uuid>``."""
+
+    name: str
+    partition_col: str | None = None
+    n_partitions: int = 1
+    sort_cols: tuple[str, ...] = ()
+    stats: dict | None = None
+
+
+def delete_ids(
+    spark, index_dir: str, ids, id_col: str, layout: list[Component]
+) -> dict:
+    """Delete rows by id: ``ids`` (a list or a one-column DataFrame)
+    lands as a TOMBSTONE segment and one ``delete`` commit claims it,
+    with the exact negative stats of the live rows it masks (so an
+    absent or already-deleted id is a no-op in the stats). Readers
+    anti-join live tombstones (:func:`read_live`); :func:`compact`
+    drops the masked rows physically; :func:`vacuum_index` reclaims
+    the tombstones. Id re-use after a delete is outside the contract.
+
+    Concurrency note: the negative delta is computed against the live
+    view BEFORE the claim, so two concurrent deletes of overlapping ids
+    (or a delete racing an add of those ids) can write-skew the
+    accumulated stats — row-level results stay exact (the anti-join is
+    idempotent), only the stats drift. The drift SELF-HEALS at the next
+    :func:`compact`, which recounts the materialized survivors.
+    Returns the live stats after the delete."""
+    if not isinstance(ids, DataFrame):
+        ids = spark.createDataFrame([(i,) for i in ids], [id_col])
+    ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
+    comp = next(c for c in layout if c.stats)
+    row = (
+        read_live(spark, index_dir, comp.name, id_col)
+        .join(ids, id_col, "leftsemi")
+        .agg(*[F.expr(e).alias(k) for k, e in comp.stats.items()])
+        .collect()[0]
+    )
+    d_dir = staging_dir(index_dir, "d")
+    ids.write.mode("errorifexists").parquet(os.path.join(index_dir, d_dir))
+    claim(
+        index_dir,
+        {
+            "kind": "delete",
+            "dirs": {"deletes": d_dir},
+            "stats": {k: -int(row[k] or 0) for k in comp.stats},
+        },
+    )
+    return view_stats(*live_view(index_dir))
+
+
+def _parquet_files(index_dir: str, rel_dirs: list[str]) -> int:
+    n = 0
+    for rel in rel_dirs:
+        for _root, _dirs, files in os.walk(os.path.join(index_dir, rel)):
+            n += sum(1 for fn in files if fn.endswith(".parquet"))
+    return n
+
+
+def compact(spark, index_dir: str, id_col: str, layout: list[Component]) -> dict:
+    """Rewrite the live view, net of its tombstones, into ONE segment
+    per component (the OPTIMIZE/small-files step every append-only lake
+    table needs — read latency grows with file count, not bytes), and
+    claim it as one ``compact`` commit recording ``base_version``, the
+    highest version absorbed. An add or delete claimed while the
+    compaction ran stays live on top of it; a crash at ANY point leaves
+    the old view untouched (there are no renames); the superseded
+    segments wait for :func:`vacuum_index`.
+
+    ``n_rows`` and the stats are COUNTED from the staged bytes, not
+    carried over from the accumulated deltas: concurrent overlapping
+    deletes can write-skew those (see :func:`delete_ids`), so every
+    compaction is a self-healing point for that drift. Returns
+    ``{n_files_before, n_files_after, n_rows}`` of the first component
+    over the live view."""
+    root, adds = live_view(index_dir)
+    base_version = max([root["version"]] + [a["version"] for a in adds])
+    main = layout[0].name
+    before = _parquet_files(index_dir, view_dirs(root, adds, main))
+    dirs = {}
+    for c in layout:
+        df = read_live(spark, index_dir, c.name, id_col, (root, adds))
+        if c.partition_col:
+            writer = (
+                df.repartition(c.n_partitions, c.partition_col)
+                .sortWithinPartitions(*c.sort_cols)
+                .write.partitionBy(c.partition_col)
+            )
+        else:
+            writer = df.coalesce(1).write
+        dirs[c.name] = staging_dir(index_dir, c.name[0])
+        writer.mode("errorifexists").parquet(os.path.join(index_dir, dirs[c.name]))
+    # one aggregation per staged component: the first one's row count
+    # rides along with its own stats
+    counted = {}
+    for i, c in enumerate(layout):
+        aggs = ({"n_rows": "count(1)"} if i == 0 else {}) | (c.stats or {})
+        counted |= segment_stats(spark, index_dir, dirs[c.name], aggs)
+    n_rows = counted.pop("n_rows")
+    claim(
+        index_dir,
+        {
+            "kind": "compact",
+            "base_version": base_version,
+            "dirs": dirs,
+            "stats": counted,
+        },
+    )
+    new_root, new_adds = live_view(index_dir)
+    return {
+        "n_files_before": before,
+        "n_files_after": _parquet_files(
+            index_dir, view_dirs(new_root, new_adds, main)
+        ),
+        "n_rows": n_rows,
+    }
+
+
 def vacuum_index(index_dir: str) -> int:
     """Remove data dirs referenced ONLY by superseded commits (commits
     no longer in the live view), plus those commit manifests. Unclaimed
@@ -278,7 +436,7 @@ def vacuum_index(index_dir: str) -> int:
             continue
         for d in s["dirs"].values():
             if d in live_dirs or not d.startswith("data/"):
-                continue  # never touch legacy top-level dirs
+                continue  # only dirs this log staged
             full = os.path.join(index_dir, d)
             if os.path.isdir(full):
                 shutil.rmtree(full)

@@ -11,21 +11,21 @@ Layout (commit-logged since round 8):
                                       id_col, positions}
       data/p-<uuid>/bucket=NN/...     postings segments (one per writer)
       data/l-<uuid>/...parquet        lengths segments
+      data/d-<uuid>/...parquet        delete tombstones (ids)
       commits/snap-NNNNN.json         hard-link-claimed manifests:
-                                      {kind: base|add|compact, dirs,
-                                      stats: {n_docs, sum_dl}, ...}
+                                      {kind: base|add|delete|compact,
+                                      dirs, stats: {n_docs, sum_dl}, ...}
 
-Maintenance is CONCURRENCY-SAFE via plans/index_commit.py (the
-versioned_table protocol): each add writes unique staging dirs and
-claims a commit — no shared-directory appends, no meta.json
-read-modify-write, so concurrent adds never lose a stats update and
-BM25 idf/avgdl stay exact. Compaction absorbs the live view into one
-segment and claims a ``compact`` commit recording ``base_version``; an
-add racing the compaction stays live, and a crash mid-compact leaves
-the old view fully intact (no renames — the round-7 ADVICE hole is
-structurally gone). Pre-log indexes (bare ``postings/`` +
-``lengths/`` + stats in meta.json) read transparently and upgrade on
-their first logged write.
+plans/index_commit.py owns the live view — the tombstone anti-join,
+the delete and compact commits, vacuum — and this module states only
+its layout (:func:`_layout`): postings partitioned and sorted by token
+bucket, lengths as one file carrying the BM25 stats. Maintenance is
+CONCURRENCY-SAFE through that commit log: each add writes unique
+staging dirs and claims a commit — no shared-directory appends, no
+meta.json read-modify-write, so concurrent adds never lose a stats
+update and BM25 idf/avgdl stay exact; a compaction racing an add or a
+delete keeps it live, and a crash mid-compact leaves the old view
+intact.
 
 Scale shape: the build is one corpus scan -> explode -> groupBy
 (doc, token) with map-side combine, then a single partitioned write;
@@ -86,29 +86,17 @@ def _postings_of(
     )
 
 
-def _read_meta(out_dir: str) -> dict:
-    with open(os.path.join(out_dir, "meta.json")) as f:
-        return json.load(f)
+# the BM25 corpus stats, as aggregates over the lengths component
+_STATS = {"n_docs": "count(1)", "sum_dl": "sum(dl)"}
 
 
-def _legacy_root(meta: dict) -> dict:
-    """Synthesized root for a pre-log index (stats live in meta.json,
-    data in the bare postings/ + lengths/ dirs)."""
-    return {
-        "kind": "base",
-        "version": 0,
-        "base_version": 0,
-        "dirs": {"postings": "postings", "lengths": "lengths"},
-        "stats": {"n_docs": int(meta["n_docs"]), "sum_dl": int(meta["sum_dl"])},
-    }
-
-
-def _live(out_dir: str, meta: dict | None = None) -> tuple[dict, list[dict], dict]:
-    """(root, adds, live stats) of the index's current view."""
-    meta = meta or _read_meta(out_dir)
-    legacy = _legacy_root(meta) if "n_docs" in meta else None
-    root, adds = ic.live_view(out_dir, legacy_root=legacy)
-    return root, adds, ic.view_stats(root, adds)
+def _layout(meta: dict) -> list[ic.Component]:
+    return [
+        ic.Component(
+            "postings", "bucket", meta["n_buckets"], ("bucket", "token", meta["id_col"])
+        ),
+        ic.Component("lengths", stats=_STATS),
+    ]
 
 
 def _write_segment(
@@ -135,17 +123,9 @@ def _write_segment(
     lengths = docs.select(F.col(id_col), F.size(tokens(text_col)).alias("dl"))
     l_dir = ic.staging_dir(out_dir, "l")
     lengths.write.mode("errorifexists").parquet(os.path.join(out_dir, l_dir))
-    # stats from the STAGED files, not a second plan execution; this
-    # read infers the segment's schema once for every later reader
-    row = (
-        ic.read_segment(docs.sparkSession, os.path.join(out_dir, l_dir))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
-    return (
-        {"postings": p_dir, "lengths": l_dir},
-        {"n_docs": int(row["n"]), "sum_dl": int(row["s"] or 0)},
-    )
+    # stats from the STAGED files, not a second plan execution
+    stats = ic.segment_stats(docs.sparkSession, out_dir, l_dir, _STATS)
+    return {"postings": p_dir, "lengths": l_dir}, stats
 
 
 def build_text_index(
@@ -176,44 +156,29 @@ def build_text_index(
     return meta | stats
 
 
-def _tombstones(
-    spark: SparkSession, out_dir: str, root: dict, adds: list[dict], id_col: str
-) -> DataFrame | None:
-    """Distinct deleted ids across the live view's tombstone segments,
-    or None when no delete commit is live."""
-    dirs = ic.view_dirs(root, adds, "deletes")
-    if not dirs:
-        return None
-    return ic.read_union(spark, out_dir, dirs).select(id_col).distinct()
-
-
-def _minus_deleted(df: DataFrame, dels: DataFrame | None, id_col: str) -> DataFrame:
-    return df if dels is None else df.join(dels, id_col, "left_anti")
-
-
-def _pruned_postings(
-    spark: SparkSession, out_dir: str, terms: list[str]
-) -> tuple[DataFrame, DataFrame, dict, dict]:
-    """(postings for terms — partition-pruned per segment and net of
-    tombstones, lengths, meta, live stats)."""
-    meta = _read_meta(out_dir)
-    root, adds, stats = _live(out_dir, meta)
+def _pruned_read(
+    spark: SparkSession, out_dir: str, terms: list[str], positional: bool = False
+) -> tuple[DataFrame, dict, tuple[dict, list[dict]]]:
+    """(postings for ``terms``, meta, live view): every live segment's
+    scan carries the ``bucket IN (...)`` partition filter, and the rows
+    are net of tombstones. ``positional`` keeps (id, token, positions)
+    and raises if the index was built without positions."""
+    meta = ic.read_meta(out_dir)
+    if positional and not meta.get("positions"):
+        raise ValueError(
+            "index was built without positions=True — phrase/proximity "
+            "lookup needs the positional postings"
+        )
+    view = ic.live_view(out_dir)
     buckets = sorted({_bucket_of(t, meta["n_buckets"]) for t in terms})
-    dels = _tombstones(spark, out_dir, root, adds, meta["id_col"])
-    post = _minus_deleted(
-        ic.read_union(spark, out_dir, ic.view_dirs(root, adds, "postings"))
+    post = (
+        ic.read_live(spark, out_dir, "postings", meta["id_col"], view)
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("token").isin(terms))
-        .drop("bucket"),
-        dels,
-        meta["id_col"],
     )
-    lengths = _minus_deleted(
-        ic.read_union(spark, out_dir, ic.view_dirs(root, adds, "lengths")),
-        dels,
-        meta["id_col"],
-    )
-    return post, lengths, meta, stats
+    if positional:
+        return post.select(meta["id_col"], "token", "positions"), meta, view
+    return post.drop("bucket"), meta, view
 
 
 def query_text_index(
@@ -227,7 +192,9 @@ def query_text_index(
     only the buckets of ``terms`` are scanned, in every live segment."""
     from rag_content_spark.operators.search import bm25_from_postings
 
-    post, lengths, meta, live = _pruned_postings(spark, out_dir, terms)
+    post, meta, view = _pruned_read(spark, out_dir, terms)
+    lengths = ic.read_live(spark, out_dir, "lengths", meta["id_col"], view)
+    live = ic.view_stats(*view)
     # avgdl from exact integer sums in the commit log — identical to the
     # on-the-fly corpus_stats aggregate, and never stale under
     # concurrent adds (each add's delta is its own claimed commit);
@@ -244,31 +211,6 @@ def query_text_index(
     )
 
 
-def _pruned_positional_read(
-    spark: SparkSession, out_dir: str, terms: list[str]
-) -> tuple[DataFrame, dict]:
-    """Partition-pruned positional postings for ``terms``; raises if the
-    index was built without positions."""
-    meta = _read_meta(out_dir)
-    if not meta.get("positions"):
-        raise ValueError(
-            "index was built without positions=True — phrase/proximity "
-            "lookup needs the positional postings"
-        )
-    root, adds, _stats = _live(out_dir, meta)
-    buckets = sorted({_bucket_of(t, meta["n_buckets"]) for t in terms})
-    dels = _tombstones(spark, out_dir, root, adds, meta["id_col"])
-    post = _minus_deleted(
-        ic.read_union(spark, out_dir, ic.view_dirs(root, adds, "postings"))
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("token").isin(terms))
-        .select(meta["id_col"], "token", "positions"),
-        dels,
-        meta["id_col"],
-    )
-    return post, meta
-
-
 def phrase_query_text_index(
     spark: SparkSession, out_dir: str, phrase: str
 ) -> DataFrame:
@@ -281,7 +223,7 @@ def phrase_query_text_index(
     terms = [t for t in phrase.split() if t]
     if not terms:
         raise ValueError("phrase must contain at least one token")
-    post, meta = _pruned_positional_read(spark, out_dir, terms)
+    post, meta, _view = _pruned_read(spark, out_dir, terms, positional=True)
     id_col = meta["id_col"]
     # (doc, token) is unique in the live view (id uniqueness across adds
     # is the caller's contract), so per-term pickup is a conditional
@@ -324,7 +266,7 @@ def proximity_query_text_index(
     w = int(window)
     if w < 1:
         raise ValueError("window must be >= 1")
-    post, meta = _pruned_positional_read(spark, out_dir, terms)
+    post, meta, view = _pruned_read(spark, out_dir, terms, positional=True)
     id_col = meta["id_col"]
     aggs = [
         F.first(
@@ -333,11 +275,10 @@ def proximity_query_text_index(
         for i, t in enumerate(terms)
     ]
     per_doc = post.groupBy(id_col).agg(*aggs)
-    root, adds, _stats = _live(out_dir, meta)
     # the postings side is already net of tombstones; the inner lengths
     # join keeps only surviving docs, so no second anti-join needed
     lengths = ic.read_union(
-        spark, out_dir, ic.view_dirs(root, adds, "lengths")
+        spark, out_dir, ic.view_dirs(*view, "lengths")
     ).select(F.col(id_col), F.col("dl").alias("_len"))
     per_doc = per_doc.join(lengths, id_col).filter(F.col("_len") >= w)
 
@@ -378,9 +319,7 @@ def add_to_text_index(
     the live postings at query time, so adds need no df rewrite. Id
     uniqueness across adds is the caller's contract. Returns
     {config..., n_docs, sum_dl} of the view after this add."""
-    meta = _read_meta(out_dir)
-    if "n_docs" in meta:  # pre-log index: upgrade first
-        ic.ensure_base(out_dir, _legacy_root(meta))
+    meta = ic.read_meta(out_dir)
     dirs, stats = _write_segment(
         docs,
         out_dir,
@@ -390,10 +329,7 @@ def add_to_text_index(
         bool(meta.get("positions")),
     )
     ic.claim(out_dir, {"kind": "add", "dirs": dirs, "stats": stats})
-    _root, _adds, live = _live(out_dir, meta)
-    return {
-        k: v for k, v in meta.items() if k not in ("n_docs", "sum_dl")
-    } | live
+    return meta | ic.view_stats(*ic.live_view(out_dir))
 
 
 def delete_from_text_index(
@@ -401,151 +337,23 @@ def delete_from_text_index(
     out_dir: str,
     ids,
 ) -> dict:
-    """Delete documents by id — the GDPR/re-crawl maintenance op that
-    completes the commit-log triple (add/delete/compact): ``ids`` (a
-    list or a one-column DataFrame) lands as a TOMBSTONE segment and
-    one ``delete`` commit claims it with exact negative stats deltas
-    (computed against the live view, so deleting an absent or
-    already-deleted id is a no-op in the stats). Readers anti-join live
-    tombstones; compaction materializes the surviving rows and drops
-    the tombstones physically; vacuum reclaims them. Id re-use after a
-    delete is outside the contract (same uniqueness rule as adds).
-
-    Concurrency note: the negative stats delta is computed against the
-    live view BEFORE the claim, so two concurrent deletes of
-    overlapping ids (or a delete racing an add of those ids) can
-    write-skew the accumulated n_docs/sum_dl — row-level results stay
-    exact (the anti-join is idempotent), only the BM25 idf/avgdl
-    normalizers drift. This skew is outside the per-commit contract and
-    SELF-HEALS at the next :func:`compact_text_index`, which recomputes
-    stats from the materialized survivors.
-    Returns {config..., n_docs, sum_dl} of the view after the delete."""
-    meta = _read_meta(out_dir)
-    if "n_docs" in meta:
-        ic.ensure_base(out_dir, _legacy_root(meta))
-    id_col = meta["id_col"]
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], [id_col])
-    ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    root, adds, _stats = _live(out_dir, meta)
-    dels = _tombstones(spark, out_dir, root, adds, id_col)
-    live_lengths = _minus_deleted(
-        ic.read_union(spark, out_dir, ic.view_dirs(root, adds, "lengths")),
-        dels,
-        id_col,
-    )
-    hit = live_lengths.join(ids, id_col, "leftsemi")
-    row = hit.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).collect()[0]
-    d_dir = ic.staging_dir(out_dir, "d")
-    ids.write.mode("errorifexists").parquet(os.path.join(out_dir, d_dir))
-    ic.claim(
-        out_dir,
-        {
-            "kind": "delete",
-            "dirs": {"deletes": d_dir},
-            "stats": {
-                "n_docs": -int(row["n"]),
-                "sum_dl": -int(row["s"] or 0),
-            },
-        },
-    )
-    _root, _adds, live = _live(out_dir, meta)
-    return {
-        k: v for k, v in meta.items() if k not in ("n_docs", "sum_dl")
-    } | live
-
-
-def _count_parquet_files(out_dir: str, rel_dirs: list[str]) -> int:
-    n = 0
-    for rel in rel_dirs:
-        for _root, _dirs, files in os.walk(os.path.join(out_dir, rel)):
-            n += sum(1 for fn in files if fn.endswith(".parquet"))
-    return n
+    """Delete documents by id (``ids``: a list or a one-column
+    DataFrame) — one tombstone segment and one ``delete`` commit with
+    exact negative n_docs/sum_dl deltas; see index_commit.delete_ids for
+    the protocol and its write-skew note (overlapping concurrent deletes
+    drift the BM25 normalizers until the next
+    :func:`compact_text_index`). Returns {config..., n_docs, sum_dl} of
+    the view after the delete."""
+    meta = ic.read_meta(out_dir)
+    return meta | ic.delete_ids(spark, out_dir, ids, meta["id_col"], _layout(meta))
 
 
 def compact_text_index(spark: SparkSession, out_dir: str) -> dict:
     """Compact the postings after many :func:`add_to_text_index` appends:
-    rewrite the live view's accumulated segments into ONE segment with
-    one sorted file per token bucket (the OPTIMIZE/small-files
-    maintenance step every append-only lake table needs — query latency
-    degrades with file count, not bytes).
-
-    Safe shape: the rewrite stages into a unique data dir and a single
-    ``compact`` commit claims it, recording ``base_version`` = the
-    highest version absorbed — an add claimed while the compaction ran
-    stays live, a crash at ANY point leaves the old view untouched
-    (there are no renames), and superseded segments are reclaimed later
-    by :func:`vacuum_text_index`. Delete tombstones in the absorbed
-    range are applied physically (masked rows do not reach the new
-    segment) and drop out of the live view. Stats are RECOMPUTED from
-    the materialized survivors (not carried over), so any write-skew
-    drift from concurrent overlapping deletes self-heals here. Returns
-    {n_files_before, n_files_after, n_rows} over the live view.
-    """
-    meta = _read_meta(out_dir)
-    if "n_docs" in meta:
-        ic.ensure_base(out_dir, _legacy_root(meta))
-    root, adds, live = _live(out_dir, meta)
-    base_version = max(
-        [root["version"]] + [a["version"] for a in adds]
-    )
-    p_dirs = ic.view_dirs(root, adds, "postings")
-    l_dirs = ic.view_dirs(root, adds, "lengths")
-    before = _count_parquet_files(out_dir, p_dirs)
-    dels = _tombstones(spark, out_dir, root, adds, meta["id_col"])
-    post = _minus_deleted(
-        ic.read_union(spark, out_dir, p_dirs), dels, meta["id_col"]
-    )
-    n_rows = post.count()
-    p_dir = ic.staging_dir(out_dir, "p")
-    (
-        post.repartition(meta["n_buckets"], "bucket")
-        .sortWithinPartitions("bucket", "token", meta["id_col"])
-        .write.mode("errorifexists")
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_dir, p_dir))
-    )
-    l_dir = ic.staging_dir(out_dir, "l")
-    _minus_deleted(
-        ic.read_union(spark, out_dir, l_dirs), dels, meta["id_col"]
-    ).coalesce(1).write.mode("errorifexists").parquet(
-        os.path.join(out_dir, l_dir)
-    )
-    # EXACT stats recomputed from the STAGED survivor lengths, not the
-    # delta-summed live totals: concurrent overlapping deletes (or a
-    # delete racing an add of the same ids) can write-skew the
-    # accumulated n_docs/sum_dl, drifting BM25 idf/avgdl even though
-    # row-level results stay correct (anti-join is idempotent).
-    # Recomputing against the materialized bytes makes every compaction
-    # a self-healing point for that drift.
-    srow = (
-        ic.read_segment(spark, os.path.join(out_dir, l_dir))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
-    exact = {"n_docs": int(srow["n"]), "sum_dl": int(srow["s"] or 0)}
-    ic.claim(
-        out_dir,
-        {
-            "kind": "compact",
-            "base_version": base_version,
-            "dirs": {"postings": p_dir, "lengths": l_dir},
-            "stats": exact,
-        },
-    )
-    new_root, new_adds, _s = _live(out_dir, meta)
-    return {
-        "n_files_before": before,
-        "n_files_after": _count_parquet_files(
-            out_dir, ic.view_dirs(new_root, new_adds, "postings")
-        ),
-        "n_rows": n_rows,
-    }
-
-
-def vacuum_text_index(out_dir: str) -> int:
-    """Reclaim segments superseded by compaction; see
-    index_commit.vacuum_index. Returns directories removed."""
-    return ic.vacuum_index(out_dir)
+    rewrite the live view, net of tombstones, into ONE segment with one
+    sorted file per token bucket and one lengths file, with n_docs and
+    sum_dl recounted from the survivors; see index_commit.compact for
+    the protocol. Returns {n_files_before, n_files_after, n_rows} of the
+    postings."""
+    meta = ic.read_meta(out_dir)
+    return ic.compact(spark, out_dir, meta["id_col"], _layout(meta))

@@ -35,9 +35,10 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from rag_content_spark.plans.index_commit import read_manifests
 
 
 def _snap_path(table_dir: str, version: int) -> str:
@@ -45,16 +46,9 @@ def _snap_path(table_dir: str, version: int) -> str:
 
 
 def snapshots(table_dir: str) -> list[dict]:
-    """All snapshot manifests, ascending by version."""
-    if not os.path.isdir(table_dir):
-        return []
-    out = []
-    for name in sorted(os.listdir(table_dir)):
-        m = re.fullmatch(r"snap-(\d{5})\.json", name)
-        if m:
-            with open(os.path.join(table_dir, name)) as f:
-                out.append(json.load(f))
-    return out
+    """All snapshot manifests, ascending by PARSED version — past 99999
+    the names grow a digit (index_commit.manifest_versions)."""
+    return read_manifests(table_dir)
 
 
 def write_snapshot(

@@ -187,19 +187,6 @@ def test_srp_shortlist_recall_on_clustered_data(spark):
     assert set(got) <= set(range(20)) and len(got) == 10
 
 
-def test_srp_reduce_np_matches_fold(spark):
-    import numpy as np
-    from rag_content_spark.operators.similarity import srp_reduce, srp_reduce_np
-
-    rng = np.random.RandomState(5)
-    rows = [(i, [float(x) for x in rng.randn(64)]) for i in range(50)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    a = {r["vec_id"]: r["reduced"] for r in srp_reduce(df, out_dim=8).collect()}
-    b = {r["vec_id"]: r["reduced"] for r in srp_reduce_np(df, out_dim=8).collect()}
-    for i in a:
-        assert max(abs(x - y) for x, y in zip(a[i], b[i])) < 1e-9
-
-
 def test_lsh_signature_exact_np_matches_fold(spark):
     """The fold-order numpy signature must equal the interpreted
     per-bit folds exactly (every bucket id identical)."""

@@ -5,8 +5,10 @@ no crash window in compaction."""
 
 import json
 import os
+import re
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -180,7 +182,6 @@ def test_vacuum_reclaims_superseded_segments(spark, tmp_path):
         build_text_index,
         compact_text_index,
         query_text_index,
-        vacuum_text_index,
     )
 
     docs = _docs(spark)
@@ -193,7 +194,7 @@ def test_vacuum_reclaims_superseded_segments(spark, tmp_path):
         (r["doc_id"], r["bm25"])
         for r in query_text_index(spark, d, terms).collect()
     )
-    removed = vacuum_text_index(d)
+    removed = ic.vacuum_index(d)
     # base postings+lengths and add postings+lengths = 4 dirs reclaimed
     assert removed == 4
     assert [s["kind"] for s in ic.commits(d)] == ["compact"]
@@ -203,7 +204,7 @@ def test_vacuum_reclaims_superseded_segments(spark, tmp_path):
     )
     assert after == before
     # idempotent
-    assert vacuum_text_index(d) == 0
+    assert ic.vacuum_index(d) == 0
 
 
 def test_concurrent_ann_adds_no_lost_count(spark, tmp_path):
@@ -306,7 +307,6 @@ def test_text_index_delete_tombstones(spark, tmp_path):
         compact_text_index,
         delete_from_text_index,
         query_text_index,
-        vacuum_text_index,
     )
 
     docs = _docs(spark)
@@ -344,7 +344,7 @@ def test_text_index_delete_tombstones(spark, tmp_path):
     }
     assert after == ref
     # base (postings+lengths) + add (postings+lengths) + 2 tombstones
-    assert vacuum_text_index(d) == 6
+    assert ic.vacuum_index(d) == 6
     assert {
         r["doc_id"] for r in query_text_index(spark, d, terms).collect()
     } == set(ref)
@@ -411,92 +411,59 @@ def test_ann_index_delete(spark, tmp_path):
     assert [r["vec_id"] for r in post] == [r["vec_id"] for r in after]
 
 
-def _make_legacy_index(spark, docs, d):
-    """Materialize a pre-log (round-7 layout) index: bare postings/ +
-    lengths/ dirs and stats inside meta.json, no commit log."""
-    import shutil
+def _entry_points(spark, d):
+    """query/add/delete/compact of both indexes, bound to directory d."""
+    from rag_content_spark.plans import ann_index as ai, text_index as ti
 
-    from rag_content_spark.plans import index_commit as ic
-    from rag_content_spark.plans.text_index import build_text_index
-
-    meta = build_text_index(docs, d, n_buckets=8)
-    root, adds = ic.live_view(d)
-    assert adds == []
-    os.rename(
-        os.path.join(d, root["dirs"]["postings"]), os.path.join(d, "postings")
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(1, [0.0] * 4)], "vec_id long, embedding array<float>"
     )
-    os.rename(
-        os.path.join(d, root["dirs"]["lengths"]), os.path.join(d, "lengths")
-    )
-    shutil.rmtree(os.path.join(d, "commits"))
-    legacy_meta = {
-        "format": "rag-spark-text/1",
-        "n_buckets": meta["n_buckets"],
-        "id_col": meta["id_col"],
-        "positions": meta["positions"],
-        "n_docs": root["stats"]["n_docs"],
-        "sum_dl": root["stats"]["sum_dl"],
+    return {
+        ("text", "query"): lambda: ti.query_text_index(spark, d, ["a"]),
+        ("text", "add"): lambda: ti.add_to_text_index(docs, d),
+        ("text", "delete"): lambda: ti.delete_from_text_index(spark, d, [1]),
+        ("text", "compact"): lambda: ti.compact_text_index(spark, d),
+        ("ann", "query"): lambda: ai.query_ann_index(spark, d, [0.0] * 4),
+        ("ann", "add"): lambda: ai.add_to_ann_index(emb, d),
+        ("ann", "delete"): lambda: ai.delete_from_ann_index(spark, d, [1]),
+        ("ann", "compact"): lambda: ai.compact_ann_index(spark, d),
     }
+
+
+_NO_LOG_META = {
+    "text": {"format": "rag-spark-text/1", "n_buckets": 8, "id_col": "doc_id",
+             "positions": False, "n_docs": 1, "sum_dl": 2},
+    "ann": {"format": "rag-spark-ann/1", "metric": "l2", "dim": 4, "nlist": 1,
+            "m": 1, "k": 1, "n_vectors": 1},
+}
+
+
+@pytest.mark.parametrize("kind", ["text", "ann"])
+@pytest.mark.parametrize("fn", ["query", "add", "delete", "compact"])
+def test_index_without_commit_log_is_rejected(spark, tmp_path, kind, fn):
+    """A directory holding ``meta.json`` but no ``commits/`` (no writer
+    makes one) is refused with a ValueError naming it, before any Spark
+    job runs."""
+    import uuid
+
+    d = str(tmp_path / kind)
+    os.makedirs(d)
     with open(os.path.join(d, "meta.json"), "w") as f:
-        json.dump(legacy_meta, f)
-
-
-def test_legacy_index_reads_and_upgrades(spark, tmp_path):
-    """A pre-log index queries transparently, and racing first writers
-    upgrade it exactly once (the ensure_base version-1 pin: a loser
-    retrying to the tip must never claim a base ABOVE another writer's
-    add, which would mask it)."""
-    from rag_content_spark.operators.search import bm25_scores
-    from rag_content_spark.plans import index_commit as ic
-    from rag_content_spark.plans.text_index import (
-        add_to_text_index,
-        query_text_index,
-    )
-
-    docs = _docs(spark)
-    half = docs.filter(F.col("doc_id") % 2 == 0)
-    d = str(tmp_path / "legacy")
-    _make_legacy_index(spark, half, d)
-    terms = ["spark", "join", "merge"]
-    # reads work with no commit log at all
-    got = {
-        r["doc_id"]: r["bm25"]
-        for r in query_text_index(spark, d, terms).collect()
-    }
-    ref = {r["doc_id"]: r["bm25"] for r in bm25_scores(half, terms).collect()}
-    assert got == ref and len(got) > 0
-    # two racing first adds: one upgrade base at v1, both adds live
-    errors = []
-
-    def adder(residue):
-        try:
-            add_to_text_index(
-                docs.filter(
-                    (F.col("doc_id") % 2 == 1)
-                    & (F.col("doc_id") % 4 == residue)
-                ),
-                d,
-            )
-        except Exception as exc:  # pragma: no cover
-            errors.append(exc)
-
-    threads = [threading.Thread(target=adder, args=(i,)) for i in (1, 3)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errors, errors
-    snaps = ic.commits(d)
-    assert [s["kind"] for s in snaps] == ["base", "add", "add"]
-    assert snaps[0]["dirs"] == {"postings": "postings", "lengths": "lengths"}
-    root, adds = ic.live_view(d)
-    assert ic.view_stats(root, adds)["n_docs"] == docs.count()
-    got2 = {
-        r["doc_id"]: r["bm25"]
-        for r in query_text_index(spark, d, terms).collect()
-    }
-    ref2 = {r["doc_id"]: r["bm25"] for r in bm25_scores(docs, terms).collect()}
-    assert got2 == ref2
+        json.dump(_NO_LOG_META[kind], f)
+    call = _entry_points(spark, d)[kind, fn]
+    sc = spark.sparkContext
+    group = f"no-log-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=re.escape(d)):
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sorted(os.listdir(d)) == ["meta.json"]
 
 
 def test_delete_racing_add_keeps_rows_exact(spark, tmp_path):

@@ -305,3 +305,42 @@ def test_schema_reuse_sees_every_index_change(spark, tmp_path):
     fresh = json.loads(proc.stdout.strip().splitlines()[-1])
     for (name, _), got, want in zip(steps, here, fresh):
         assert got == want, name
+
+
+# ---- maintenance job budgets ------------------------------------------------
+
+# Jobs each maintenance call ran before delete and compact were shared by
+# both indexes (index_commit.delete_ids / compact), on this same sequence.
+MAINTENANCE_JOBS = {
+    "delete_from_text_index": 8,
+    "compact_text_index": 15,
+    "delete_from_ann_index": 10,
+    "compact_ann_index": 9,
+}
+
+
+def test_maintenance_runs_no_more_jobs_than_before(spark, tmp_path):
+    """Delete and compact of both indexes, over a base and one add, each
+    run within the job count of their per-index versions."""
+    from rag_content_spark.plans import ann_index as ai, text_index as ti
+
+    docs, emb = _docs(spark), _emb(spark)
+    t, a = str(tmp_path / "ti"), str(tmp_path / "ann")
+    ti.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), t, n_buckets=8)
+    ti.add_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), t)
+    ti.query_text_index(spark, t, ["the"]).collect()
+    ai.build_ann_index(emb.filter(F.col("vec_id") % 2 == 0), a, nlist=4, m=4, k=16)
+    ai.add_to_ann_index(emb.filter(F.col("vec_id") % 2 == 1), a)
+    victims = list(range(0, 500, 7))
+    calls = {
+        "delete_from_text_index": lambda: ti.delete_from_text_index(spark, t, victims),
+        "compact_text_index": lambda: ti.compact_text_index(spark, t),
+        "delete_from_ann_index": lambda: ai.delete_from_ann_index(spark, a, victims),
+        "compact_ann_index": lambda: ai.compact_ann_index(spark, a),
+    }
+    ran = {}
+    for name, call in calls.items():
+        with _jobs(spark) as ids:
+            call()
+        ran[name] = len(ids)
+    assert all(ran[k] <= MAINTENANCE_JOBS[k] for k in ran), ran

@@ -317,3 +317,37 @@ def test_concurrent_writers_optimistic_commit(spark, tmp_path):
     assert [s["version"] for s in snapshots(t)] == [1, 2, 3, 4]
     got = {r["doc_id"]: r["text"] for r in read_snapshot(spark, t).collect()}
     assert got == {0: "seed", 1: "from-1", 2: "from-2", 3: "from-3"}
+
+
+def test_versions_past_99999_are_read_and_extended(spark, tmp_path):
+    """``snap-{v:05d}.json`` grows a sixth digit at version 100000; the
+    log must still see that manifest, order it after 99999 and claim
+    100001 next. Both manifests are written by hand over two tiny data
+    dirs, so no 100k writes."""
+    import json
+    import os
+
+    from rag_content_spark.sinks.versioned_table import (
+        read_snapshot,
+        snapshots,
+        write_snapshot,
+    )
+
+    t = str(tmp_path / "tbl")
+    for v, mode, row in ((99999, "overwrite", (1, "a")), (100000, "append", (2, "b"))):
+        rel = f"data/s-{v}"
+        spark.createDataFrame([row], ["doc_id", "text"]).write.parquet(
+            os.path.join(t, rel)
+        )
+        with open(os.path.join(t, f"snap-{v:05d}.json"), "w") as f:
+            json.dump(
+                {"version": v, "parent": v - 1, "mode": mode, "key_col": None,
+                 "data_dir": rel, "rows": 1, "batch_id": None,
+                 "txn_app_id": None},
+                f,
+            )
+    assert [s["version"] for s in snapshots(t)] == [99999, 100000]
+    assert _rows(read_snapshot(spark, t)) == [(1, "a"), (2, "b")]
+    v = write_snapshot(spark.createDataFrame([(3, "c")], ["doc_id", "text"]), t)
+    assert v == 100001
+    assert _rows(read_snapshot(spark, t)) == [(1, "a"), (2, "b"), (3, "c")]

@@ -38,7 +38,6 @@ def main() -> int:
         delete_from_text_index,
         phrase_query_text_index,
         query_text_index,
-        vacuum_text_index,
     )
     from rag_content_spark.session import get_spark
 
@@ -119,7 +118,7 @@ def main() -> int:
     res["phrase_lookup_post_compact_s"] = round(time.time() - t0, 2)
     res["phrase_rows_post_compact"] = ph2
     t0 = time.time()
-    res["vacuum_dirs"] = vacuum_text_index(d)
+    res["vacuum_dirs"] = ic.vacuum_index(d)
     res["vacuum_s"] = round(time.time() - t0, 2)
 
     print(json.dumps(res))
