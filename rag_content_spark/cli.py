@@ -129,6 +129,7 @@ def cmd_build(args: argparse.Namespace) -> int:
 
 
 def cmd_query(args: argparse.Namespace) -> int:
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from rag_content_spark.plans.query import lookup_node, query_index
@@ -142,8 +143,9 @@ def cmd_query(args: argparse.Namespace) -> int:
         return 0
     meta = json.load(open(os.path.join(args.db_path, "metadata.json")))
     embedder = _get_embedder(args.model_path, meta["embedding-dimension"])
+    query = pa.table({"text": pa.array([args.query], pa.string())})
     qvec = (
-        spark.createDataFrame([(args.query,)], ["text"])
+        spark.createDataFrame(query)
         .select(embedder(F.col("text")).alias("v"))
         .collect()[0]["v"]
     )

@@ -40,7 +40,15 @@ def train_quality_classifier(
     reg_param: float = 1e-3,
 ):
     """Fit the linear quality classifier; returns the fitted
-    LogisticRegressionModel (coefficients broadcast at scoring time)."""
+    LogisticRegressionModel (coefficients broadcast at scoring time),
+    without its training summary.
+
+    Scoring ships the model to the executors inside a UDF closure, and
+    a training summary holds the SparkSession. Once the session has run
+    an ``Observation`` (:mod:`rag_content_spark.observe`), the session
+    no longer serializes (Spark 4.1's ``ObservationManager``), and
+    scoring a model that keeps its summary fails with "Task not
+    serializable"."""
     from pyspark.ml.classification import LogisticRegression
 
     train = _featurize(
@@ -56,7 +64,11 @@ def train_quality_classifier(
         maxIter=max_iter,
         regParam=reg_param,
     )
-    return lr.fit(train)
+    model = lr.fit(train)
+    # setSummary is package-private in Scala, public to py4j
+    jvm = train.sparkSession.sparkContext._jvm
+    model._java_obj.setSummary(jvm.scala.Option.empty())
+    return model
 
 
 def score_quality(

@@ -44,10 +44,12 @@ DOCUMENTED DIVERGENCES (everything else is semantics-exact):
 
 Known upstream quirk, reproduced faithfully: the secondary split uses
 ``re.findall`` on ``[^,.;。？！]+[,.;。？！]?`` — characters no match
-consumes are silently DROPPED, so runs of consecutive punctuation
-(",,", "?.," …) can lose characters when a chunk is refined below
-sentence granularity. That is the published library behavior, not a
-porting error (property tests pin it).
+consumes are silently DROPPED. A ``,.;。？！`` character with no other
+character before it in its sentence (text start, or a sentence opening
+with punctuation: ", .a" after "a? "), or right after another one
+(",,", "?.," …), is lost when its sentence is refined below sentence
+granularity. That is the published library behavior, not a porting
+error (property tests pin it).
 
 The Spark face of both parsers is :func:`chunk_llama` /
 :func:`split_markdown_llama` — Arrow-batched ``mapInPandas``, a narrow

@@ -318,7 +318,7 @@ def bm25_scores(
 def bm25_from_postings(
     post: DataFrame,
     lengths: DataFrame | None,
-    stats: DataFrame,
+    stats: DataFrame | tuple[int, float],
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
@@ -337,6 +337,9 @@ def bm25_from_postings(
     (the :func:`term_postings_one_scan` shape) — the lengths join is
     skipped; the score arithmetic is identical either way.
 
+    ``stats`` may instead be the driver-known ``(n_docs, avgdl)`` pair:
+    the same arithmetic over literals, with no stats join.
+
     ``idf_variant``: ``"lucene"`` (default) uses the non-negative
     ln(1 + (N-df+0.5)/(df+0.5)); ``"fts5"`` uses SQLite FTS5's
     max(ln((N-df+0.5)/(df+0.5)), 1e-6) — the scorer behind the
@@ -346,7 +349,12 @@ def bm25_from_postings(
     from pyspark.sql import Window
 
     df_t = F.count(F.lit(1)).over(Window.partitionBy("token"))
-    n_docs = F.col("n_docs").cast("double")
+    scored = post if lengths is None else post.join(lengths, id_col)
+    if isinstance(stats, DataFrame):
+        scored = scored.join(F.broadcast(stats))
+        n_docs, avgdl = F.col("n_docs").cast("double"), F.col("avgdl")
+    else:
+        n_docs, avgdl = F.lit(float(stats[0])), F.lit(float(stats[1]))
     ratio = (n_docs - df_t + F.lit(0.5)) / (df_t + F.lit(0.5))
     if idf_variant == "fts5":
         # fts5.c fts5Bm25(): if (idf <= 0.0) idf = 1e-6 — a POSITIVE
@@ -360,12 +368,10 @@ def bm25_from_postings(
     norm = tf * (k1 + 1) / (
         tf
         + F.lit(k1)
-        * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+        * (F.lit(1 - b) + F.lit(b) * F.col("dl") / avgdl)
     )
-    scored = post if lengths is None else post.join(lengths, id_col)
     return (
-        scored.join(F.broadcast(stats))
-        .withColumn("_term_score", idf * norm)
+        scored.withColumn("_term_score", idf * norm)
         .groupBy(id_col)
         .agg(F.round(F.sum("_term_score"), round_to).alias("bm25"))
     )

@@ -283,14 +283,15 @@ def add_to_ann_index(
     re-adds are possible).
     """
     from rag_content_spark.functions.vector import pq_encode_np
+    from rag_content_spark.observe import observe_count
     from rag_content_spark.operators.similarity import assign_ivf_cells_np
 
     meta = ic.read_meta(out_dir)
     codebook = _codebook(out_dir)
     id_col, embedding_col = meta["id_col"], meta["embedding_col"]
     centroids = load_centroids(out_dir)
-    emb = new_emb.select(id_col, embedding_col)
-    n_new = emb.count()
+    # counted during the write, not by a count() job ahead of it
+    emb, n_new = observe_count(new_emb.select(id_col, embedding_col))
     assigned = assign_ivf_cells_np(
         emb, centroids, embedding_col=embedding_col, id_col=id_col
     )
@@ -309,7 +310,7 @@ def add_to_ann_index(
         {
             "kind": "add",
             "dirs": {"index": i_dir},
-            "stats": {"n_vectors": n_new},
+            "stats": {"n_vectors": n_new()},
         },
     )
     return meta | ic.view_stats(*ic.live_view(out_dir))

@@ -50,6 +50,7 @@ import time
 import uuid
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -325,7 +326,12 @@ def delete_ids(
     :func:`compact`, which recounts the materialized survivors.
     Returns the live stats after the delete."""
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], [id_col])
+        ids = list(ids)
+        if not ids:
+            raise ValueError(f"no ids to delete from {index_dir}")
+        # a local relation built through Arrow: no Python-worker RDD for
+        # the optimizer to scan once per live segment
+        ids = spark.createDataFrame(pa.table({id_col: pa.array(ids)}))
     ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
     comp = next(c for c in layout if c.stats)
     row = (

@@ -198,16 +198,12 @@ def query_text_index(
     # avgdl from exact integer sums in the commit log — identical to the
     # on-the-fly corpus_stats aggregate, and never stale under
     # concurrent adds (each add's delta is its own claimed commit);
-    # a fully-deleted index has no postings, so the avgdl value is moot
+    # a fully-deleted index has no postings, so the avgdl value is moot.
+    # Literals, not a one-row stats table: no broadcast job per read
     n_docs = live["n_docs"]
-    # a one-row literal projection: createDataFrame over local rows would
-    # scan an RDD through a Python-worker job on every query
-    stats = spark.range(1).select(
-        F.lit(n_docs).cast("long").alias("n_docs"),
-        F.lit(float(live["sum_dl"]) / n_docs if n_docs else 0.0).alias("avgdl"),
-    )
+    avgdl = float(live["sum_dl"]) / n_docs if n_docs else 0.0
     return bm25_from_postings(
-        post, lengths, stats, id_col=meta["id_col"], k1=k1, b=b
+        post, lengths, (n_docs, avgdl), id_col=meta["id_col"], k1=k1, b=b
     )
 
 

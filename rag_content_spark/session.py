@@ -5,6 +5,19 @@ reference document_processor.py:107-129). Here all run configuration is
 explicit; these defaults are what we would ship to a 1000-executor cluster
 (AQE on, skew-join handling on), shrunk only by ``shuffle_partitions`` for
 local testing.
+
+Python workers fork from this package's own daemon,
+:mod:`rag_content_spark.pyworker`, set as ``spark.python.daemon.module``.
+It is PySpark's daemon plus one guard: before every task PySpark calls
+``importlib.invalidate_caches()``, which before Python 3.13 makes each
+``zipimporter`` over ``pyspark.zip`` re-read the whole archive
+directory, ~200 ms of worker CPU per task however small the task. The
+guard keeps the directory of an archive that has not changed. Python
+3.13 re-reads lazily on its own; once the engine runs only on 3.13 or
+later, the daemon module and its conf line can go. The workers find the
+daemon module, and the functions this package ships to them, through
+the package's parent directory, put on their ``PYTHONPATH``, so a
+driver may run from any cwd.
 """
 
 from __future__ import annotations
@@ -12,6 +25,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+import rag_content_spark
+
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(rag_content_spark.__file__))
+)
 
 
 def get_spark(
@@ -66,6 +85,11 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from this package's daemon (see the module
+        # docstring); the daemon imports from the package's parent
+        # directory, whatever the driver's cwd
+        .config("spark.python.daemon.module", "rag_content_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -79,10 +103,12 @@ def warm_python_workers(spark: SparkSession, partitions: int | None = None) -> N
 
     On a real cluster this cost is paid once per long-lived executor,
     not per job — local[N] pays it on the FIRST Python-stage job of a
-    fresh session instead (measured: ~4.3 s for a trivial 32-partition
-    mapInPandas on this box, plus ~2 s of closure-module imports on the
-    first embed stage). Calling this at session-bootstrap time moves
-    that one-time cost out of per-job measurements, mirroring the
+    fresh session instead (measured on a 4-CPU box, local[4]: ~3.6 s of
+    wall and ~9 s of CPU for a trivial 32-partition mapInPandas, then
+    ~0.7 s for the first 4-row embed stage; 4.7-5.5 s, 14-18 s and
+    0.9-1.0 s before the workers kept pyspark.zip's directory, see
+    :mod:`rag_content_spark.pyworker`). Calling this at session-bootstrap
+    time moves that one-time cost out of per-job measurements, mirroring the
     steady-state a 1000-executor deployment actually runs in. The warm
     plan chains a mapInPandas eval with a pandas-UDF eval so BOTH
     worker slots of a chained-Python-stage task are forked and warmed.

@@ -142,13 +142,16 @@ def read_text_documents_fast(
     tests/test_sources_sinks.py.
     """
     import pandas as pd
+    import pyarrow as pa
 
     if paths is None:
         paths = list_text_files(folder, glob)
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
+    # built through Arrow: a local relation, where a list of rows would
+    # be an RDD scanned by a Python worker on every build and add
     manifest = spark.createDataFrame(
-        [(p,) for p in paths], "file_path string"
+        pa.table({"file_path": pa.array(paths, pa.string())})
     ).repartition(max(1, min(partitions, len(paths) or 1)))
 
     def _read(batches):

@@ -40,6 +40,24 @@ def test_classifier_separates_held_out_docs(spark):
     assert got[1] > 0.8 > 0.2 > got[2]
 
 
+def test_classifier_scores_after_an_observation(spark):
+    """An Observation run earlier in the session leaves scoring able to
+    serialize its task (the model carries no session-holding summary)."""
+    from rag_content_spark.observe import observe_count
+    from rag_content_spark.operators.classifier import (
+        score_quality,
+        train_quality_classifier,
+    )
+
+    observed, n = observe_count(spark.range(5))
+    observed.write.format("noop").mode("overwrite").save()
+    assert n() == 5
+    pos, neg = _corpora(spark)
+    model = train_quality_classifier(pos, neg, buckets=512)
+    assert not model.hasSummary
+    assert score_quality(pos, model, buckets=512).count() == 30
+
+
 def test_classifier_scores_are_probabilities(spark):
     from rag_content_spark.operators.classifier import (
         score_quality,

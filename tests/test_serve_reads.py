@@ -214,8 +214,8 @@ def test_second_read_of_unchanged_index_runs_no_schema_job(spark, tmp_path):
 
 
 def test_query_text_index_plan_has_no_existing_rdd_scan(spark, tmp_path):
-    """The (n_docs, avgdl) stats row is a literal projection, not a
-    Python-side createDataFrame scanned through a Python worker."""
+    """The (n_docs, avgdl) stats are literals, not a Python-side
+    createDataFrame scanned through a Python worker."""
     from rag_content_spark.plans.text_index import build_text_index, query_text_index
 
     docs = _docs(spark)
@@ -225,6 +225,67 @@ def test_query_text_index_plan_has_no_existing_rdd_scan(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan
     assert df.count() > 0
+
+
+def test_steady_bm25_read_runs_at_most_four_jobs(spark, tmp_path):
+    """A repeated BM25 read over a base and an add: the driver-known
+    (n_docs, avgdl) are literals in the score, so no stats broadcast
+    runs (5 jobs when they were a one-row table joined in)."""
+    from rag_content_spark.plans.text_index import (
+        add_to_text_index,
+        build_text_index,
+        query_text_index,
+    )
+
+    docs = _docs(spark)
+    d = str(tmp_path / "ti")
+    build_text_index(docs.filter(F.col("doc_id") % 2 == 0), d, n_buckets=8)
+    add_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), d)
+    first = sorted(query_text_index(spark, d, TERMS).collect())
+    with _jobs(spark) as ids:
+        again = sorted(query_text_index(spark, d, TERMS).collect())
+    assert again == first and len(first) > 0
+    assert 1 <= len(ids) <= 4, ids
+
+
+def test_ann_add_counts_during_its_write(spark, tmp_path):
+    """An add runs no count() job ahead of its write (3 jobs when it
+    did), and its n_vectors stays exact for an empty add."""
+    from rag_content_spark.plans.ann_index import add_to_ann_index, build_ann_index
+
+    emb = _emb(spark)
+    d = str(tmp_path / "ann")
+    build_ann_index(emb.filter(F.col("vec_id") % 3 == 0), d, nlist=4, m=4, k=16)
+    add_to_ann_index(emb.filter(F.col("vec_id") % 3 == 1), d)
+    with _jobs(spark) as ids:
+        meta = add_to_ann_index(emb.filter(F.col("vec_id") % 3 == 2), d)
+    assert meta["n_vectors"] == 500
+    assert 1 <= len(ids) <= 2, ids
+    assert add_to_ann_index(emb.filter(F.col("vec_id") < 0), d)["n_vectors"] == 500
+
+
+def test_delete_of_no_ids_is_refused_and_changes_nothing(spark, tmp_path):
+    """An empty id list raises ValueError before anything is written, as
+    it did when the ids were a list-built DataFrame (Spark could not
+    infer its schema); the ids of a real delete keep the list-inferred
+    type."""
+    from rag_content_spark.plans import text_index as ti
+
+    d = str(tmp_path / "ti")
+    ti.build_text_index(_docs(spark, n=40), d, n_buckets=4)
+
+    def listing():
+        return {x: sorted(os.listdir(os.path.join(d, x))) for x in ("data", "commits")}
+
+    before = listing()
+    with pytest.raises(ValueError):
+        ti.delete_from_text_index(spark, d, [])
+    assert listing() == before
+    assert ti.delete_from_text_index(spark, d, [3, 5])["n_docs"] == 38
+    (tomb,) = set(listing()["data"]) - set(before["data"])
+    tomb = spark.read.parquet(os.path.join(d, "data", tomb))
+    assert tomb.schema.simpleString() == "struct<doc_id:bigint>"
+    assert sorted(r[0] for r in tomb.collect()) == [3, 5]
 
 
 # ---- schema reuse invalidation ----------------------------------------------
