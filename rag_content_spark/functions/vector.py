@@ -374,49 +374,22 @@ def pq_adc_score(codes: Column | str, table: list[list[float]]) -> Column:
     return score
 
 
-def pq_encode_np(
-    df,
-    codebook: list[list[list[float]]],
-    embedding_col: str = "embedding",
-    out_col: str = "codes",
-):
-    """Vectorized PQ encode: per Arrow batch, one (n x k) distance
-    matrix per subspace and an argmin — the build-path twin of
+def pq_codes_np(emb, codebook):
+    """``(n, m)`` int32 PQ codes of the float64 rows ``emb``, for a
+    codebook given as an (m, k, sub_dim) float64 array: per subspace one
+    (n x k) distance matrix and an argmin — the vectorized twin of
     :func:`pq_encode` (whose per-centroid interpreted folds dominate at
-    scale). First-minimum tiebreak matches `array_position(.., min)`;
+    scale). First-minimum tiebreak matches ``array_position(.., min)``;
     the equality test pins agreement on real data."""
     import numpy as np
-    import pandas as pd
 
-    import pyspark.sql.types as T
-
-    m = len(codebook)
-    sub_dim = len(codebook[0][0])
-    cmats = [np.array(codebook[s], dtype=np.float64) for s in range(m)]
-    cnorms = [(c * c).sum(axis=1) for c in cmats]
-
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
-    )
-
-    def _encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[out_col] = []
-                yield pdf
-                continue
-            emb = np.array(pdf[embedding_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                sub = emb[:, s * sub_dim : (s + 1) * sub_dim]
-                d2 = cnorms[s][None, :] - 2.0 * (sub @ cmats[s].T)
-                codes[:, s] = d2.argmin(axis=1)
-            pdf = pdf.copy()
-            pdf[out_col] = list(codes.tolist())
-            yield pdf
-
-    return df.mapInPandas(_encode, schema=schema)
+    m, _k, sub_dim = codebook.shape
+    cnorms = (codebook * codebook).sum(axis=2)
+    codes = np.empty((len(emb), m), dtype=np.int32)
+    for s in range(m):
+        sub = emb[:, s * sub_dim : (s + 1) * sub_dim]
+        codes[:, s] = (cnorms[s][None, :] - 2.0 * (sub @ codebook[s].T)).argmin(axis=1)
+    return codes
 
 
 def train_pq_codebook(
@@ -485,7 +458,7 @@ def pq_adc_scan_exact_np(
     """One-pass vectorized PQ encode + ADC score: (id, codes, raw adc)
     per row — the EXACT twin of ``pq_encode`` + ``pq_adc_score``.
 
-    Unlike :func:`pq_encode_np` (matmul expansion — build path, ~1 ulp
+    Unlike :func:`pq_codes_np` (matmul expansion — build path, ~1 ulp
     reassociation drift), every squared distance here is accumulated
     dimension-at-a-time from 0.0 in ascending order, reproducing the
     fold's IEEE operation sequence bit-for-bit, so the argmin (numpy

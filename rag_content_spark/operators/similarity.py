@@ -522,6 +522,19 @@ def nearest_cells_np(emb, cmat, cent_ids, cnorm, p: int):
     return cent_ids[cols[order][keep]].reshape(n, p)
 
 
+def ivf_model_np(centroids: list[tuple[int, list[float]]]):
+    """``(cmat, cent_ids, cnorm)`` of ``[(centroid_id, vec)]``, sorted by
+    centroid id so :func:`nearest_cells_np`'s tiebreak matches the exact
+    operator's (distance, centroid_id) ordering: the IVF model as
+    ``nearest_cells_np(emb, *model, p)`` takes it."""
+    import numpy as np
+
+    cent_ids = np.array([c[0] for c in centroids], dtype=np.int64)
+    order = np.argsort(cent_ids, kind="stable")
+    cmat = np.array([centroids[i][1] for i in order], dtype=np.float64)
+    return cmat, cent_ids[order], (cmat * cmat).sum(axis=1)
+
+
 def assign_ivf_cells_np(
     index: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -546,13 +559,7 @@ def assign_ivf_cells_np(
 
     import pyspark.sql.types as T
 
-    cent_ids = np.array([c[0] for c in centroids], dtype=np.int64)
-    # sort by centroid id so the kernel's tiebreak matches the exact
-    # operator's (distance, centroid_id) ordering
-    order = np.argsort(cent_ids, kind="stable")
-    cent_ids = cent_ids[order]
-    cmat = np.array([centroids[i][1] for i in order], dtype=np.float64)
-    cnorm = (cmat * cmat).sum(axis=1)
+    ivf = ivf_model_np(centroids)
 
     schema = T.StructType(
         [
@@ -570,7 +577,7 @@ def assign_ivf_cells_np(
                     {id_col: [], embedding_col: [], "centroid_id": []}
                 )
                 continue
-            best = nearest_cells_np(emb, cmat, cent_ids, cnorm, 1)[:, 0]
+            best = nearest_cells_np(emb, *ivf, 1)[:, 0]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],

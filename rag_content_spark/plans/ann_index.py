@@ -40,8 +40,9 @@ Why this shape at 100 TB: the index is splittable, schema-evolvable,
 queryable by any engine, and cells map to directories — a probe reads
 ``n_probe / nlist`` of the bytes. Training reads one bounded sample
 (FAISS's 256 points per centroid), so its cost does not grow with the
-corpus; assignment and encoding use the vectorized numpy twins (one
-matmul per Arrow batch); every decode/score step at query time is a
+corpus; assignment and encoding run in one Python pass over the
+vectorized numpy twins (one matmul per Arrow batch, see
+:func:`encode_segment`); every decode/score step at query time is a
 Column expression over literals.
 """
 
@@ -61,10 +62,62 @@ _STATS = {"n_vectors": "count(1)"}
 
 def _layout(meta: dict) -> list[ic.Component]:
     return [
-        ic.Component(
-            "index", "cell", int(meta["nlist"]), ("cell", meta["id_col"]), stats=_STATS
-        )
+        ic.Component("index", "cell", ("cell", meta["id_col"]), stats=_STATS)
     ]
+
+
+def encode_segment(
+    emb: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    codebook: list,
+    id_col: str = "vec_id",
+    embedding_col: str = "embedding",
+) -> DataFrame:
+    """``(id, embedding, cell, codes)``: every vector's IVF cell and PQ
+    codes from ONE Python pass per Arrow batch. The cell follows
+    ``nearest_cells_np`` (bit-for-bit the exact operator's
+    ``(round(d, 6), centroid_id)`` order, as in ``assign_ivf_cells_np``)
+    and the codes ``pq_codes_np``."""
+    import numpy as np
+    import pandas as pd
+
+    import pyspark.sql.types as T
+
+    from rag_content_spark.functions.vector import pq_codes_np
+    from rag_content_spark.operators.similarity import ivf_model_np, nearest_cells_np
+
+    ivf, pq = ivf_model_np(centroids), np.array(codebook, dtype=np.float64)
+    emb = emb.select(id_col, embedding_col)
+    schema = T.StructType(
+        list(emb.schema.fields)
+        + [
+            # the type a read infers from the cell=NN directories
+            T.StructField("cell", T.IntegerType()),
+            T.StructField("codes", T.ArrayType(T.IntegerType())),
+        ]
+    )
+
+    def _encode(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                yield pd.DataFrame({c: [] for c in schema.names})
+                continue
+            X = np.array(pdf[embedding_col].tolist(), dtype=np.float64)
+            yield pdf.assign(
+                cell=nearest_cells_np(X, *ivf, 1)[:, 0],
+                codes=pq_codes_np(X, pq).tolist(),
+            )
+
+    return emb.mapInPandas(_encode, schema=schema)
+
+
+def _write_index_segment(encoded: DataFrame, out_dir: str) -> str:
+    i_dir = ic.staging_dir(out_dir, "i")
+    encoded.write.mode("errorifexists").partitionBy("cell").parquet(
+        os.path.join(out_dir, i_dir)
+    )
+    ic.remember_schema(out_dir, i_dir, encoded, "cell")
+    return i_dir
 
 
 def _codebook(out_dir: str) -> list:
@@ -110,9 +163,8 @@ def build_ann_index(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from rag_content_spark.functions.vector import pq_encode_np, train_pq_np
+    from rag_content_spark.functions.vector import train_pq_np
     from rag_content_spark.operators.kmeans import lloyd, training_sample
-    from rag_content_spark.operators.similarity import assign_ivf_cells_np
 
     emb = emb.select(id_col, embedding_col)
     ids, X, cap = training_sample(
@@ -129,19 +181,9 @@ def build_ann_index(
     centroids = list(enumerate(cmat.tolist()))
     codebook = train_pq_np(X, ids, m, k)
 
-    assigned = assign_ivf_cells_np(
-        emb, centroids, embedding_col=embedding_col, id_col=id_col
-    )
-    encoded = pq_encode_np(assigned, codebook, embedding_col=embedding_col)
     os.makedirs(out_dir, exist_ok=True)
-    i_dir = ic.staging_dir(out_dir, "i")
-    (
-        encoded.select(
-            id_col, embedding_col, F.col("centroid_id").alias("cell"), "codes"
-        )
-        .write.mode("errorifexists")
-        .partitionBy("cell")
-        .parquet(os.path.join(out_dir, i_dir))
+    i_dir = _write_index_segment(
+        encode_segment(emb, centroids, codebook, id_col, embedding_col), out_dir
     )
     c_path = os.path.join(out_dir, "centroids.parquet")
     if os.path.isdir(c_path):  # a Spark-written sidecar from an older build
@@ -280,39 +322,24 @@ def add_to_ann_index(
     do not move centroids, so after heavy growth rebuild with
     :func:`build_ann_index`. Id uniqueness across adds is the caller's
     contract (use ``incremental_dedup``/``index_upsert`` upstream when
-    re-adds are possible).
+    re-adds are possible). An add of no vectors claims nothing: its
+    partitioned segment would hold no parquet file for a reader.
     """
-    from rag_content_spark.functions.vector import pq_encode_np
     from rag_content_spark.observe import observe_count
-    from rag_content_spark.operators.similarity import assign_ivf_cells_np
 
     meta = ic.read_meta(out_dir)
-    codebook = _codebook(out_dir)
     id_col, embedding_col = meta["id_col"], meta["embedding_col"]
-    centroids = load_centroids(out_dir)
     # counted during the write, not by a count() job ahead of it
     emb, n_new = observe_count(new_emb.select(id_col, embedding_col))
-    assigned = assign_ivf_cells_np(
-        emb, centroids, embedding_col=embedding_col, id_col=id_col
+    encoded = encode_segment(
+        emb, load_centroids(out_dir), _codebook(out_dir), id_col, embedding_col
     )
-    encoded = pq_encode_np(assigned, codebook, embedding_col=embedding_col)
-    i_dir = ic.staging_dir(out_dir, "i")
-    (
-        encoded.select(
-            id_col, embedding_col, F.col("centroid_id").alias("cell"), "codes"
-        )
-        .write.mode("errorifexists")
-        .partitionBy("cell")
-        .parquet(os.path.join(out_dir, i_dir))
-    )
-    ic.claim(
-        out_dir,
-        {
-            "kind": "add",
-            "dirs": {"index": i_dir},
-            "stats": {"n_vectors": n_new()},
-        },
-    )
+    dirs = {"index": _write_index_segment(encoded, out_dir)}
+    n = n_new()
+    if n:
+        ic.claim(out_dir, {"kind": "add", "dirs": dirs, "stats": {"n_vectors": n}})
+    else:
+        ic.discard(out_dir, dirs)
     return meta | ic.view_stats(*ic.live_view(out_dir))
 
 

@@ -176,6 +176,22 @@ def staging_dir(index_dir: str, prefix: str) -> str:
     return f"data/{prefix}-{uuid.uuid4().hex[:12]}"
 
 
+def nonempty(index_dir: str, dirs: dict) -> dict:
+    """The staged ``{component: dir}`` entries that hold a parquet file.
+    A partitioned write of no rows leaves none, and a read of such a
+    segment fails to infer its schema."""
+    return {k: d for k, d in dirs.items() if parquet_files(index_dir, [d])}
+
+
+def discard(index_dir: str, dirs: dict) -> None:
+    """Remove staged ``{component: dir}`` segments that no commit will
+    claim (an add of no rows)."""
+    import shutil
+
+    for d in dirs.values():
+        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
+
+
 def live_view(index_dir: str) -> tuple[dict, list[dict]]:
     """(root, adds) — the newest base/compact commit and the
     add/delete commits it did not absorb (version > root.base_version,
@@ -221,6 +237,17 @@ _SEGMENT_SCHEMAS: dict[tuple, object] = {}
 _SEGMENT_SCHEMAS_MAX = 4096
 
 
+def _segment_key(path: str) -> tuple:
+    st = os.stat(path)
+    return (path, st.st_dev, st.st_ino, st.st_mtime_ns)
+
+
+def _remember(key: tuple, schema) -> None:
+    if len(_SEGMENT_SCHEMAS) >= _SEGMENT_SCHEMAS_MAX:
+        _SEGMENT_SCHEMAS.clear()
+    _SEGMENT_SCHEMAS[key] = schema
+
+
 def read_segment(spark, path: str):
     """``spark.read.parquet(path)`` that infers the schema once per
     segment. Inference is a Spark job over the footers, and every read
@@ -228,20 +255,39 @@ def read_segment(spark, path: str):
     write-once (:func:`staging_dir` names each with a uuid), so the
     schema is reused under a key of the path plus the directory's
     device, inode and mtime: a directory removed and rebuilt at the same
-    path (a rebuilt index, a test fixture) is a new key."""
+    path (a rebuilt index, a test fixture) is a new key. A writer that
+    calls :func:`remember_schema` spares the first read its inference."""
     try:
-        st = os.stat(path)
+        key = _segment_key(path)
     except OSError:
         return spark.read.parquet(path)  # Spark's own missing-path error
-    key = (path, st.st_dev, st.st_ino, st.st_mtime_ns)
     schema = _SEGMENT_SCHEMAS.get(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
     df = spark.read.parquet(path)
-    if len(_SEGMENT_SCHEMAS) >= _SEGMENT_SCHEMAS_MAX:
-        _SEGMENT_SCHEMAS.clear()
-    _SEGMENT_SCHEMAS[key] = df.schema
+    _remember(key, df.schema)
     return df
+
+
+def remember_schema(
+    index_dir: str, rel_dir: str, df: DataFrame, partition_col: str | None = None
+) -> None:
+    """Record for :func:`read_segment` the schema of the segment ``df``
+    was just written to at ``rel_dir``, as a read infers it: every field
+    nullable, the partition column last. The segment's first read then
+    runs no inference job. A segment with no parquet file is left to
+    inference, which fails on it here as in any other process."""
+    from pyspark.sql.types import StructField, StructType
+
+    if not parquet_files(index_dir, [rel_dir]):
+        return
+    fields = [f for f in df.schema.fields if f.name != partition_col]
+    if partition_col:
+        fields.append(df.schema[partition_col])
+    _remember(
+        _segment_key(os.path.join(index_dir, rel_dir)),
+        StructType([StructField(f.name, f.dataType, True) for f in fields]),
+    )
 
 
 def read_union(spark, index_dir: str, rel_dirs: list[str]):
@@ -281,8 +327,8 @@ def read_live(
 def segment_stats(spark, index_dir: str, rel_dir: str, aggs: dict) -> dict:
     """Exact integer aggregates over one STAGED segment: ``aggs`` maps
     each stat name to a SQL aggregate (``{"n_docs": "count(1)"}``); a
-    NULL sum (no rows) counts as 0. The read infers the new segment's
-    schema once for every later reader (:func:`read_segment`)."""
+    NULL sum (no rows) counts as 0. The read goes through
+    :func:`read_segment`."""
     row = (
         read_segment(spark, os.path.join(index_dir, rel_dir))
         .agg(*[F.expr(e).alias(k) for k, e in aggs.items()])
@@ -293,18 +339,32 @@ def segment_stats(spark, index_dir: str, rel_dir: str, aggs: dict) -> dict:
 
 class Component(NamedTuple):
     """One parquet component of an index layout. Compaction rewrites it
-    hash-partitioned on ``partition_col`` into ``n_partitions`` tasks,
-    sorted by ``sort_cols`` and written partitioned by that column, or,
-    with no ``partition_col``, as one unpartitioned file. ``stats`` maps
-    the manifest stats this component carries to the SQL aggregates
-    that recount them over its rows (:func:`segment_stats`). A
-    component's segments stage under ``data/<first letter>-<uuid>``."""
+    through :func:`cluster` when it has a ``partition_col``, or, with
+    none, as one unpartitioned file. ``stats`` maps the manifest stats
+    this component carries to the SQL aggregates that recount them over
+    its rows (:func:`segment_stats`). A component's segments stage under
+    ``data/<first letter>-<uuid>``."""
 
     name: str
     partition_col: str | None = None
-    n_partitions: int = 1
     sort_cols: tuple[str, ...] = ()
     stats: dict | None = None
+
+
+def cluster(df: DataFrame, c: Component):
+    """The writer of ``df`` as a segment of the partitioned component
+    ``c``: hash-partitioned on ``c.partition_col`` with no fixed count,
+    sorted within partitions by ``c.sort_cols``, and written partitioned
+    by that column. AQE sizes the reducers from the shuffle it observes:
+    a few rows take one reducer, a corpus up to
+    ``spark.sql.shuffle.partitions``. All rows of one partition value
+    meet in one task, so the segment holds one file per non-empty
+    value."""
+    return (
+        df.repartition(c.partition_col)
+        .sortWithinPartitions(*c.sort_cols)
+        .write.partitionBy(c.partition_col)
+    )
 
 
 def delete_ids(
@@ -342,6 +402,7 @@ def delete_ids(
     )
     d_dir = staging_dir(index_dir, "d")
     ids.write.mode("errorifexists").parquet(os.path.join(index_dir, d_dir))
+    remember_schema(index_dir, d_dir, ids)
     claim(
         index_dir,
         {
@@ -353,7 +414,7 @@ def delete_ids(
     return view_stats(*live_view(index_dir))
 
 
-def _parquet_files(index_dir: str, rel_dirs: list[str]) -> int:
+def parquet_files(index_dir: str, rel_dirs: list[str]) -> int:
     n = 0
     for rel in rel_dirs:
         for _root, _dirs, files in os.walk(os.path.join(index_dir, rel)):
@@ -380,20 +441,14 @@ def compact(spark, index_dir: str, id_col: str, layout: list[Component]) -> dict
     root, adds = live_view(index_dir)
     base_version = max([root["version"]] + [a["version"] for a in adds])
     main = layout[0].name
-    before = _parquet_files(index_dir, view_dirs(root, adds, main))
+    before = parquet_files(index_dir, view_dirs(root, adds, main))
     dirs = {}
     for c in layout:
         df = read_live(spark, index_dir, c.name, id_col, (root, adds))
-        if c.partition_col:
-            writer = (
-                df.repartition(c.n_partitions, c.partition_col)
-                .sortWithinPartitions(*c.sort_cols)
-                .write.partitionBy(c.partition_col)
-            )
-        else:
-            writer = df.coalesce(1).write
+        writer = cluster(df, c) if c.partition_col else df.coalesce(1).write
         dirs[c.name] = staging_dir(index_dir, c.name[0])
         writer.mode("errorifexists").parquet(os.path.join(index_dir, dirs[c.name]))
+        remember_schema(index_dir, dirs[c.name], df, c.partition_col)
     # one aggregation per staged component: the first one's row count
     # rides along with its own stats
     counted = {}
@@ -413,7 +468,7 @@ def compact(spark, index_dir: str, id_col: str, layout: list[Component]) -> dict
     new_root, new_adds = live_view(index_dir)
     return {
         "n_files_before": before,
-        "n_files_after": _parquet_files(
+        "n_files_after": parquet_files(
             index_dir, view_dirs(new_root, new_adds, main)
         ),
         "n_rows": n_rows,

@@ -4,17 +4,30 @@ lookup that reads ONLY the buckets containing the queried terms instead
 of re-scanning the corpus per query (the text twin of the
 cell-partitioned ANN index in plans/ann_index.py).
 
-Layout (commit-logged since round 8):
+Layout (format ``rag-spark-text/3``, commit-logged):
 
     index_dir/
       meta.json                       static config {format, n_buckets,
                                       id_col, positions}
-      data/p-<uuid>/bucket=NN/...     postings segments (one per writer)
-      data/l-<uuid>/...parquet        lengths segments
+      data/p-<uuid>/bucket=NN/...     postings segments (one per writer):
+                                      (id, dl, token, tf[, positions])
+      data/l-<uuid>/...parquet        lengths segments (id, dl)
       data/d-<uuid>/...parquet        delete tombstones (ids)
       commits/snap-NNNNN.json         hard-link-claimed manifests:
                                       {kind: base|add|delete|compact,
                                       dirs, stats: {n_docs, sum_dl}, ...}
+
+Every postings row carries its document's length ``dl``, so a BM25 or
+proximity read scans only the postings buckets of its terms and never a
+lengths segment. The lengths component stays for the commit stats, the
+negative stats of a delete and compaction.
+
+Format rule: an index keeps the format its build recorded in
+``meta.json``. A ``rag-spark-text/2`` index (postings without ``dl``)
+is read by joining its lengths, and its adds keep writing ``/2``
+segments, so no live view mixes formats. Two functions know the
+format: :func:`_pruned_read` when reading and :func:`_postings_of` when
+writing; plans/index_commit.py stays layout-agnostic.
 
 plans/index_commit.py owns the live view — the tombstone anti-join,
 the delete and compact commits, vacuum — and this module states only
@@ -28,9 +41,10 @@ delete keeps it live, and a crash mid-compact leaves the old view
 intact.
 
 Scale shape: the build is one corpus scan -> explode -> groupBy
-(doc, token) with map-side combine, then a single partitioned write;
-a query computes its term buckets DRIVER-SIDE from the same stable
-hash (no data touched), so every postings scan carries a
+(doc, token) with map-side combine, then a single partitioned write
+whose reducer count AQE sizes from the shuffle (a 4-document add runs
+one reducer); a query computes its term buckets DRIVER-SIDE from the
+same stable hash (no data touched), so every postings scan carries a
 ``bucket IN (...)`` partition filter — |terms| buckets read, not the
 corpus (per-segment reads keep the filter in every scan; pinned in
 tests). All of a term's postings live in exactly one bucket per
@@ -62,27 +76,33 @@ def _bucket_of(token: str, n_buckets: int) -> int:
     return h % n_buckets
 
 
-def _postings_of(
-    docs: DataFrame, id_col: str, text_col: str, positions: bool
-) -> DataFrame:
-    """(id, token, tf[, positions]) — the positional variant stores each
-    term's sorted in-document position array, enabling index-served
-    phrase/proximity retrieval (operators/search.phrase_search /
-    proximity_search run the same intersection algebra over these
-    arrays instead of a corpus scan)."""
-    from rag_content_spark.operators.search import postings
+FORMAT = "rag-spark-text/3"
+# postings without dl: the format before dl rode in the postings
+FORMAT_2 = "rag-spark-text/2"
 
-    if not positions:
-        return postings(docs, id_col, text_col)
+
+def _postings_of(docs: DataFrame, meta: dict, text_col: str) -> DataFrame:
+    """(id[, dl], token, tf[, positions]) under ``meta``'s format: a
+    ``/3`` index stores the document length ``dl`` in every row, taken
+    from the projection that tokenizes, and a ``/2`` index does not.
+    The positional variant stores each term's sorted in-document
+    position array, enabling index-served phrase/proximity retrieval
+    (operators/search.phrase_search / proximity_search run the same
+    intersection algebra over these arrays instead of a corpus scan)."""
+    id_col = meta["id_col"]
+    keys = [id_col] if meta["format"] == FORMAT_2 else [id_col, "dl"]
+    # tokenized once: dl and the explode both read _tk
+    tk = docs.select(F.col(id_col), tokens(text_col).alias("_tk"))
+    aggs = [F.count(F.lit(1)).alias("tf")]
+    if meta.get("positions"):
+        exploded = F.posexplode("_tk").alias("pos", "token")
+        aggs.append(F.sort_array(F.collect_list("pos")).alias("positions"))
+    else:
+        exploded = F.explode("_tk").alias("token")
     return (
-        docs.select(
-            F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "token")
-        )
-        .groupBy(id_col, "token")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
+        tk.select(F.col(id_col), F.size("_tk").alias("dl"), exploded)
+        .groupBy(*keys, "token")
+        .agg(*aggs)
     )
 
 
@@ -92,40 +112,40 @@ _STATS = {"n_docs": "count(1)", "sum_dl": "sum(dl)"}
 
 def _layout(meta: dict) -> list[ic.Component]:
     return [
-        ic.Component(
-            "postings", "bucket", meta["n_buckets"], ("bucket", "token", meta["id_col"])
-        ),
+        ic.Component("postings", "bucket", ("bucket", "token", meta["id_col"])),
         ic.Component("lengths", stats=_STATS),
     ]
 
 
-def _write_segment(
-    docs: DataFrame,
-    out_dir: str,
-    id_col: str,
-    text_col: str,
-    n_buckets: int,
-    positions: bool,
-) -> tuple[dict, dict]:
+def _write_segment(docs: DataFrame, out_dir: str, meta: dict, text_col: str):
     """Write one (postings, lengths) segment pair into unique staging
-    dirs; returns (dirs, stats) for the commit record."""
-    post = _postings_of(docs, id_col, text_col, positions).withColumn(
+    dirs; returns (dirs, stats) for the commit record. The postings go
+    through the layout's clustered writer (index_commit.cluster); the
+    stats are observed during the lengths write, with no job of their
+    own, and both schemas are recorded for the first read."""
+    from rag_content_spark.observe import observe
+
+    id_col = meta["id_col"]
+    post = _postings_of(docs, meta, text_col).withColumn(
         "bucket",
-        (stable_hash64(F.col("token"), salt=_SALT) % n_buckets).cast("int"),
+        (stable_hash64(F.col("token"), salt=_SALT) % meta["n_buckets"]).cast("int"),
     )
     p_dir = ic.staging_dir(out_dir, "p")
-    (
-        post.repartition(n_buckets, "bucket")
-        .write.mode("errorifexists")
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_dir, p_dir))
+    ic.cluster(post, _layout(meta)[0]).mode("errorifexists").parquet(
+        os.path.join(out_dir, p_dir)
     )
-    lengths = docs.select(F.col(id_col), F.size(tokens(text_col)).alias("dl"))
+    ic.remember_schema(out_dir, p_dir, post, "bucket")
+    lengths, stats = observe(
+        docs.select(F.col(id_col), F.size(tokens(text_col)).alias("dl")),
+        *[F.expr(e).alias(k) for k, e in _STATS.items()],
+    )
     l_dir = ic.staging_dir(out_dir, "l")
     lengths.write.mode("errorifexists").parquet(os.path.join(out_dir, l_dir))
-    # stats from the STAGED files, not a second plan execution
-    stats = ic.segment_stats(docs.sparkSession, out_dir, l_dir, _STATS)
-    return {"postings": p_dir, "lengths": l_dir}, stats
+    ic.remember_schema(out_dir, l_dir, lengths)
+    return (
+        {"postings": p_dir, "lengths": l_dir},
+        {k: int(v or 0) for k, v in stats().items()},
+    )
 
 
 def build_text_index(
@@ -136,20 +156,18 @@ def build_text_index(
     text_col: str = "text",
     positions: bool = False,
 ) -> dict:
-    """Build + write; returns {config..., n_docs, sum_dl}.
-    ``positions=True`` stores per-(doc, token) sorted position arrays
-    alongside tf (meta records the flag; BM25 lookup ignores the extra
-    column, phrase/proximity lookup requires it)."""
+    """Build + write a ``rag-spark-text/3`` index; returns {config...,
+    n_docs, sum_dl}. ``positions=True`` stores per-(doc, token) sorted
+    position arrays alongside tf (meta records the flag; BM25 lookup
+    ignores the extra column, phrase/proximity lookup requires it)."""
     os.makedirs(out_dir, exist_ok=True)
-    dirs, stats = _write_segment(
-        docs, out_dir, id_col, text_col, n_buckets, positions
-    )
     meta = {
-        "format": "rag-spark-text/2",
+        "format": FORMAT,
         "n_buckets": n_buckets,
         "id_col": id_col,
         "positions": bool(positions),
     }
+    dirs, stats = _write_segment(docs, out_dir, meta, text_col)
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=2)
     ic.claim(out_dir, {"kind": "base", "dirs": dirs, "stats": stats})
@@ -157,28 +175,34 @@ def build_text_index(
 
 
 def _pruned_read(
-    spark: SparkSession, out_dir: str, terms: list[str], positional: bool = False
+    spark: SparkSession, out_dir: str, terms: list[str], cols: tuple[str, ...]
 ) -> tuple[DataFrame, dict, tuple[dict, list[dict]]]:
-    """(postings for ``terms``, meta, live view): every live segment's
-    scan carries the ``bucket IN (...)`` partition filter, and the rows
-    are net of tombstones. ``positional`` keeps (id, token, positions)
-    and raises if the index was built without positions."""
+    """(postings for ``terms`` as (id, token, *cols), meta, live view):
+    every live segment's scan carries the ``bucket IN (...)`` partition
+    filter, and the rows are net of tombstones. ``dl`` comes from the
+    postings of a ``/3`` index and from the lengths of a ``/2`` one,
+    joined against the pruned postings only. Asking for ``positions``
+    raises if the index was built without them."""
     meta = ic.read_meta(out_dir)
-    if positional and not meta.get("positions"):
+    if "positions" in cols and not meta.get("positions"):
         raise ValueError(
             "index was built without positions=True — phrase/proximity "
             "lookup needs the positional postings"
         )
+    id_col = meta["id_col"]
     view = ic.live_view(out_dir)
     buckets = sorted({_bucket_of(t, meta["n_buckets"]) for t in terms})
     post = (
-        ic.read_live(spark, out_dir, "postings", meta["id_col"], view)
+        ic.read_live(spark, out_dir, "postings", id_col, view)
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("token").isin(terms))
     )
-    if positional:
-        return post.select(meta["id_col"], "token", "positions"), meta, view
-    return post.drop("bucket"), meta, view
+    if "dl" in cols and meta["format"] == FORMAT_2:
+        # the postings side is already net of tombstones, so the inner
+        # join needs no second anti-join
+        lengths = ic.read_union(spark, out_dir, ic.view_dirs(*view, "lengths"))
+        post = post.join(lengths.select(id_col, "dl"), id_col)
+    return post.select(id_col, "token", *cols), meta, view
 
 
 def query_text_index(
@@ -192,8 +216,7 @@ def query_text_index(
     only the buckets of ``terms`` are scanned, in every live segment."""
     from rag_content_spark.operators.search import bm25_from_postings
 
-    post, meta, view = _pruned_read(spark, out_dir, terms)
-    lengths = ic.read_live(spark, out_dir, "lengths", meta["id_col"], view)
+    post, meta, view = _pruned_read(spark, out_dir, terms, ("tf", "dl"))
     live = ic.view_stats(*view)
     # avgdl from exact integer sums in the commit log — identical to the
     # on-the-fly corpus_stats aggregate, and never stale under
@@ -203,7 +226,7 @@ def query_text_index(
     n_docs = live["n_docs"]
     avgdl = float(live["sum_dl"]) / n_docs if n_docs else 0.0
     return bm25_from_postings(
-        post, lengths, (n_docs, avgdl), id_col=meta["id_col"], k1=k1, b=b
+        post, None, (n_docs, avgdl), id_col=meta["id_col"], k1=k1, b=b
     )
 
 
@@ -219,7 +242,7 @@ def phrase_query_text_index(
     terms = [t for t in phrase.split() if t]
     if not terms:
         raise ValueError("phrase must contain at least one token")
-    post, meta, _view = _pruned_read(spark, out_dir, terms, positional=True)
+    post, meta, _view = _pruned_read(spark, out_dir, terms, ("positions",))
     id_col = meta["id_col"]
     # (doc, token) is unique in the live view (id uniqueness across adds
     # is the caller's contract), so per-term pickup is a conditional
@@ -255,14 +278,14 @@ def proximity_query_text_index(
     """Index-served unordered proximity match (the slop-window sibling;
     operators/search.proximity_search semantics): valid-start interval
     expansion over the stored position arrays, doc length from the
-    lengths table joined only against candidate docs."""
+    postings (the lengths of a ``/2`` index, see :func:`_pruned_read`)."""
     terms = list(dict.fromkeys(t for t in terms if t))
     if not terms:
         raise ValueError("terms must contain at least one token")
     w = int(window)
     if w < 1:
         raise ValueError("window must be >= 1")
-    post, meta, view = _pruned_read(spark, out_dir, terms, positional=True)
+    post, meta, _view = _pruned_read(spark, out_dir, terms, ("positions", "dl"))
     id_col = meta["id_col"]
     aggs = [
         F.first(
@@ -270,13 +293,11 @@ def proximity_query_text_index(
         ).alias(f"_p{i}")
         for i, t in enumerate(terms)
     ]
-    per_doc = post.groupBy(id_col).agg(*aggs)
-    # the postings side is already net of tombstones; the inner lengths
-    # join keeps only surviving docs, so no second anti-join needed
-    lengths = ic.read_union(
-        spark, out_dir, ic.view_dirs(*view, "lengths")
-    ).select(F.col(id_col), F.col("dl").alias("_len"))
-    per_doc = per_doc.join(lengths, id_col).filter(F.col("_len") >= w)
+    per_doc = (
+        post.filter(F.col("dl") >= w)
+        .groupBy(id_col, F.col("dl").alias("_len"))
+        .agg(*aggs)
+    )
 
     def _starts(col):
         return F.array_distinct(
@@ -313,18 +334,21 @@ def add_to_text_index(
     hard-link claim with no lost stats and no shared-directory append
     (pinned by the threaded race test). Per-term df is a window over
     the live postings at query time, so adds need no df rewrite. Id
-    uniqueness across adds is the caller's contract. Returns
-    {config..., n_docs, sum_dl} of the view after this add."""
+    uniqueness across adds is the caller's contract. An add of no
+    documents claims nothing. The segments keep the index's format
+    (see the module docstring). Returns {config..., n_docs, sum_dl} of
+    the view after this add."""
     meta = ic.read_meta(out_dir)
-    dirs, stats = _write_segment(
-        docs,
-        out_dir,
-        meta["id_col"],
-        text_col,
-        meta["n_buckets"],
-        bool(meta.get("positions")),
-    )
-    ic.claim(out_dir, {"kind": "add", "dirs": dirs, "stats": stats})
+    dirs, stats = _write_segment(docs, out_dir, meta, text_col)
+    if stats["n_docs"]:
+        # documents without a token write no postings file: commit
+        # their lengths alone, as no reader can scan an empty segment
+        ic.claim(
+            out_dir,
+            {"kind": "add", "dirs": ic.nonempty(out_dir, dirs), "stats": stats},
+        )
+    else:
+        ic.discard(out_dir, dirs)
     return meta | ic.view_stats(*ic.live_view(out_dir))
 
 

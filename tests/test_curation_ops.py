@@ -402,25 +402,34 @@ def test_assign_ivf_cells_np_matches_exact(spark):
     assert fast == exact
 
 
-def test_pq_encode_np_matches_exact(spark):
-    from rag_content_spark.functions.vector import (
-        pq_demo_codebook,
-        pq_encode,
-        pq_encode_np,
-    )
+def test_ann_segment_encoder_matches_exact(spark):
+    """The ANN index's one-pass encoder gives every vector the cell of
+    the exact IVF assignment and the codes of the exact PQ encode."""
+    from rag_content_spark.functions.vector import pq_demo_codebook, pq_encode
+    from rag_content_spark.operators.similarity import assign_ivf_cells
+    from rag_content_spark.plans.ann_index import encode_segment
 
     cb = pq_demo_codebook(4, 8, 16)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", "embedding"
     )
+    centroids = [
+        (r["vec_id"], list(r["embedding"]))
+        for r in emb.filter(F.col("vec_id") % 10 == 0).orderBy("vec_id").collect()
+    ]
+    cells = {
+        r["vec_id"]: r["centroid_id"]
+        for r in assign_ivf_cells(emb, centroids).collect()
+    }
     exact = {
-        r["vec_id"]: r["codes"]
+        r["vec_id"]: (cells[r["vec_id"]], r["codes"])
         for r in emb.select(
             "vec_id", pq_encode("embedding", cb).alias("codes")
         ).collect()
     }
     fast = {
-        r["vec_id"]: r["codes"] for r in pq_encode_np(emb, cb).collect()
+        r["vec_id"]: (r["cell"], r["codes"])
+        for r in encode_segment(emb, centroids, cb).collect()
     }
     assert fast == exact
 

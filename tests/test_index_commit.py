@@ -713,3 +713,73 @@ def test_ann_delete_racing_compact(spark, tmp_path):
     root2, adds2 = ic.live_view(d)
     assert adds2 == []
     assert root2["stats"]["n_vectors"] == meta0["n_vectors"] - 1
+
+
+def _small_index(spark, d, kind):
+    """A 40-row text or ANN index at ``d``; returns its (add, query)
+    calls and a frame of 4 more rows."""
+    from rag_content_spark.plans import ann_index as ai, text_index as ti
+
+    if kind == "text":
+        rows = spark.createDataFrame(
+            [(i, f"w{i % 5} common w{i % 3}") for i in range(44)],
+            "doc_id long, text string",
+        )
+        ti.build_text_index(rows.filter(F.col("doc_id") < 40), d, n_buckets=4)
+        return (
+            lambda df: ti.add_to_text_index(df, d),
+            lambda: sorted(ti.query_text_index(spark, d, ["common", "w1"]).collect()),
+            rows.filter(F.col("doc_id") >= 40),
+        )
+    rows = spark.createDataFrame(
+        [(i, [float((i * j) % 7) for j in range(4)]) for i in range(44)],
+        "vec_id long, embedding array<float>",
+    )
+    ai.build_ann_index(rows.filter(F.col("vec_id") < 40), d, nlist=2, m=2, k=4)
+    return (
+        lambda df: ai.add_to_ann_index(df, d),
+        lambda: ai.query_ann_index(spark, d, [1.0, 2.0, 3.0, 4.0], topk=50).collect(),
+        rows.filter(F.col("vec_id") >= 40),
+    )
+
+
+@pytest.mark.parametrize("kind", ["text", "ann"])
+def test_empty_add_claims_nothing(spark, tmp_path, kind):
+    """An add of no rows leaves the data dir and the commit log as they
+    were; the index then still reads, adds, deletes and compacts (a
+    claimed empty segment held no parquet file, and every later read
+    failed with UNABLE_TO_INFER_SCHEMA)."""
+    d = str(tmp_path / kind)
+    add, query, more = _small_index(spark, d, kind)
+    calls = _entry_points(spark, d)
+
+    def listing():
+        return {x: sorted(os.listdir(os.path.join(d, x))) for x in ("data", "commits")}
+
+    before, first = listing(), query()
+    n = add(more.limit(0))["n_docs" if kind == "text" else "n_vectors"]
+    assert n == 40
+    assert listing() == before
+    assert query() == first
+    assert add(more)["n_docs" if kind == "text" else "n_vectors"] == 44
+    calls[kind, "delete"]()
+    calls[kind, "compact"]()
+    assert len(query()) >= 40
+
+
+def test_add_of_tokenless_docs_commits_lengths_only(spark, tmp_path):
+    """Documents without a token write no postings file: the add commits
+    their lengths alone, so n_docs counts them and reads still run."""
+    from rag_content_spark.plans import index_commit as ic, text_index as ti
+
+    d = str(tmp_path / "ti")
+    add, query, _more = _small_index(spark, d, "text")
+    first = query()
+    blank = spark.createDataFrame([(50, ""), (51, "   ")], "doc_id long, text string")
+    assert add(blank)["n_docs"] == 42
+    assert ic.live_view(d)[1][-1]["dirs"].keys() == {"lengths"}
+    # the scores move with n_docs, the matching documents do not
+    assert [r[0] for r in query()] == [r[0] for r in first]
+    ti.delete_from_text_index(spark, d, [50])
+    assert ti.compact_text_index(spark, d)["n_rows"] > 0
+    assert ic.view_stats(*ic.live_view(d))["n_docs"] == 41

@@ -227,10 +227,11 @@ def test_query_text_index_plan_has_no_existing_rdd_scan(spark, tmp_path):
     assert df.count() > 0
 
 
-def test_steady_bm25_read_runs_at_most_four_jobs(spark, tmp_path):
+def test_steady_bm25_read_runs_at_most_three_jobs(spark, tmp_path):
     """A repeated BM25 read over a base and an add: the driver-known
     (n_docs, avgdl) are literals in the score, so no stats broadcast
-    runs (5 jobs when they were a one-row table joined in)."""
+    runs (5 jobs when they were a one-row table joined in), and dl rides
+    in the postings, so no lengths join runs (4 jobs with one)."""
     from rag_content_spark.plans.text_index import (
         add_to_text_index,
         build_text_index,
@@ -245,7 +246,49 @@ def test_steady_bm25_read_runs_at_most_four_jobs(spark, tmp_path):
     with _jobs(spark) as ids:
         again = sorted(query_text_index(spark, d, TERMS).collect())
     assert again == first and len(first) > 0
+    assert 1 <= len(ids) <= 3, ids
+
+
+def test_text_add_runs_at_most_four_jobs(spark, tmp_path):
+    """A small add runs its postings write (a shuffle AQE gives one
+    reducer) and its lengths write, with the stats observed during the
+    latter (7 jobs when the postings shuffled into a fixed 32 reducers
+    and the stats were read back from the staged lengths)."""
+    from rag_content_spark.plans.text_index import add_to_text_index, build_text_index
+
+    docs = _docs(spark)
+    d = str(tmp_path / "ti")
+    build_text_index(docs.filter(F.col("doc_id") >= 4), d)
+    with _jobs(spark) as ids:
+        meta = add_to_text_index(docs.filter(F.col("doc_id") < 4), d)
+    assert meta["n_docs"] == 500
     assert 1 <= len(ids) <= 4, ids
+
+
+def test_text_reads_of_v3_index_scan_no_lengths(spark, tmp_path):
+    """BM25 and proximity reads of a ``rag-spark-text/3`` index take dl
+    from the postings: no scan of theirs touches a lengths segment, over
+    a base, an add and a delete."""
+    from rag_content_spark.plans import text_index as ti
+
+    docs = _docs(spark)
+    d = str(tmp_path / "ti")
+    ti.build_text_index(
+        docs.filter(F.col("doc_id") % 2 == 0), d, n_buckets=8, positions=True
+    )
+    ti.add_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), d)
+    ti.delete_from_text_index(spark, d, [0, 1, 2])
+    with open(os.path.join(d, "meta.json")) as f:
+        assert json.load(f)["format"] == "rag-spark-text/3"
+    for df in (
+        ti.query_text_index(spark, d, TERMS),
+        ti.proximity_query_text_index(spark, d, ["index", "read"], 4),
+    ):
+        # every file of every relation in the plan, partition filters aside
+        files = df.inputFiles()
+        assert any("/data/p-" in f for f in files), files
+        assert not any("/data/l-" in f for f in files), files
+        assert df.count() > 0
 
 
 def test_ann_add_counts_during_its_write(spark, tmp_path):
@@ -368,6 +411,39 @@ def test_schema_reuse_sees_every_index_change(spark, tmp_path):
         assert got == want, name
 
 
+def test_written_segments_read_with_the_inferred_schema(spark, tmp_path):
+    """Every segment a writer stages (build, add, tombstone, compaction;
+    both indexes, positional postings included) is read with the schema
+    a fresh inference gives, and its first read runs no inference
+    job."""
+    from rag_content_spark.plans import ann_index as ai, index_commit as ic
+    from rag_content_spark.plans import text_index as ti
+
+    docs, emb = _docs(spark), _emb(spark)
+    t, a = str(tmp_path / "ti"), str(tmp_path / "ann")
+    ti.build_text_index(
+        docs.filter(F.col("doc_id") % 2 == 0), t, n_buckets=8, positions=True
+    )
+    ti.add_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), t)
+    ti.delete_from_text_index(spark, t, [0, 1])
+    ti.compact_text_index(spark, t)
+    ti.add_to_text_index(docs.filter(F.col("doc_id") < 4), t)
+    ai.build_ann_index(emb.filter(F.col("vec_id") % 2 == 0), a, nlist=4, m=4, k=16)
+    ai.add_to_ann_index(emb.filter(F.col("vec_id") % 2 == 1), a)
+    ai.delete_from_ann_index(spark, a, [0, 1])
+    segments = [
+        os.path.join(d, "data", x)
+        for d in (t, a)
+        for x in os.listdir(os.path.join(d, "data"))
+    ]
+    assert len(segments) == 12
+    with _jobs(spark) as ids:
+        seen = {p: ic.read_segment(spark, p).schema for p in segments}
+    assert ids == []
+    for p in segments:
+        assert seen[p] == spark.read.parquet(p).schema, p
+
+
 # ---- maintenance job budgets ------------------------------------------------
 
 # Jobs each maintenance call ran before delete and compact were shared by
@@ -405,3 +481,75 @@ def test_maintenance_runs_no_more_jobs_than_before(spark, tmp_path):
             call()
         ran[name] = len(ids)
     assert all(ran[k] <= MAINTENANCE_JOBS[k] for k in ran), ran
+
+
+# ---- rag-spark-text/2 indexes ------------------------------------------------
+
+
+def _as_v2(spark, d):
+    """Rewrite the ``rag-spark-text/3`` index at ``d`` as ``/2``: every
+    live postings segment without ``dl``, and meta.json saying so."""
+    from rag_content_spark.plans import index_commit as ic
+
+    for rel in ic.view_dirs(*ic.live_view(d), "postings"):
+        path = os.path.join(d, rel)
+        spark.read.parquet(path).drop("dl").write.partitionBy("bucket").parquet(
+            path + ".v2"
+        )
+        shutil.rmtree(path)
+        os.rename(path + ".v2", path)
+    with open(os.path.join(d, "meta.json")) as f:
+        meta = json.load(f)
+    with open(os.path.join(d, "meta.json"), "w") as f:
+        json.dump(meta | {"format": "rag-spark-text/2"}, f)
+
+
+def _text_results(spark, d) -> dict:
+    """BM25 (scores as float hex), phrase and proximity results."""
+    from rag_content_spark.plans import text_index as ti
+
+    out = {}
+    for terms in (TERMS, ["index", "query", "vector"], ["schema"]):
+        out[" ".join(terms)] = sorted(
+            (r[0], float(r[1]).hex())
+            for r in ti.query_text_index(spark, d, terms).collect()
+        )
+    out["phrase"] = sorted(
+        map(tuple, ti.phrase_query_text_index(spark, d, "the data").collect())
+    )
+    prox = ti.proximity_query_text_index(spark, d, ["index", "read"], 4)
+    out["proximity"] = sorted(map(tuple, prox.collect()))
+    return out
+
+
+def test_v2_index_reads_and_grows_like_v3(spark, tmp_path):
+    """A ``/2`` index (dl only in its lengths) gives the ``/3`` index's
+    BM25, phrase and proximity results bit for bit through an add, a
+    delete and a compaction, and stays ``/2``: its adds and its
+    compaction write postings without dl."""
+    from rag_content_spark.plans import index_commit as ic, text_index as ti
+
+    docs = _docs(spark)
+    v3, v2 = str(tmp_path / "v3"), str(tmp_path / "v2")
+    ti.build_text_index(
+        docs.filter(F.col("doc_id") % 3 == 0), v3, n_buckets=8, positions=True
+    )
+    shutil.copytree(v3, v2)
+    _as_v2(spark, v2)
+    more, victims = docs.filter(F.col("doc_id") % 3 == 1), list(range(0, 500, 7))
+    steps = [
+        ("base", lambda d: None),
+        ("add", lambda d: ti.add_to_text_index(more, d)),
+        ("delete", lambda d: ti.delete_from_text_index(spark, d, victims)),
+        ("compact", lambda d: ti.compact_text_index(spark, d)),
+    ]
+    for name, step in steps:
+        step(v3)
+        step(v2)
+        want = _text_results(spark, v3)
+        assert all(want.values()), name
+        assert _text_results(spark, v2) == want, name
+        for d, has_dl in ((v3, True), (v2, False)):
+            cols = ic.read_live(spark, d, "postings", "doc_id").columns
+            assert ("dl" in cols) == has_dl, (name, d)
+    assert ic.read_meta(v2)["format"] == "rag-spark-text/2"
