@@ -639,12 +639,13 @@ def cmd_ann_query(args: argparse.Namespace) -> int:
         qv = [float(x) for x in args.vector.split(",")]
     elif args.vec_id is not None:
         from rag_content_spark.plans import index_commit as ic
+        from rag_content_spark.plans.ann_index import FORMAT
 
-        meta = ic.read_meta(args.index_dir)
+        meta = ic.read_meta(args.index_dir, FORMAT)
         # live view WITH delete tombstones applied — a deleted vector
         # must not be usable as a query seed (round-8 ADVICE)
         hit = (
-            ic.read_live(spark, args.index_dir, "index", meta["id_col"])
+            ic.read_live(spark, args.index_dir, meta["id_col"])
             .filter(F.col(meta["id_col"]) == args.vec_id)
             .limit(1)
             .collect()

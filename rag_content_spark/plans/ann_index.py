@@ -14,7 +14,8 @@ The reference persists FAISS binaries that only FAISS can read; the
   optionally exact-refine the shortlist against the full vectors kept
   in the same rows (column pruning keeps them out of the ADC scan).
 
-Layout (commit-logged since round 8, same protocol as text_index):
+Layout (format ``rag-spark-ann/3``, commit-logged, same protocol as
+text_index):
 
     out_dir/
       meta.json                   static config {format, metric, dim,
@@ -22,15 +23,19 @@ Layout (commit-logged since round 8, same protocol as text_index):
                                   train_points}
       centroids.parquet           frozen IVF model
       codebook.json               frozen PQ model
-      data/i-<uuid>/cell=NN/...   index segments (one per writer)
+      data/s-<uuid>/cell=NN/...   index segments (one per writer)
       data/d-<uuid>/...           delete tombstones (ids)
       commits/snap-NNNNN.json     hard-link-claimed manifests
-                                  {kind, dirs, stats: {n_vectors}}
+                                  {kind, dir, schema, stats: {n_vectors}}
 
-plans/index_commit.py owns the live view — the tombstone anti-join,
-the delete and compact commits, vacuum — and this module states only
-its layout (:func:`_layout`): one index component partitioned by cell,
-sorted by id within it, carrying ``n_vectors``. Adds write unique
+An index of another format (``/2`` manifests record no schemas) is
+refused with a ``ValueError`` naming it (index_commit.read_meta).
+
+plans/index_commit.py owns the live view — the segment write, the
+tombstone anti-join, the delete and compact commits, vacuum — and this
+module states only its layout (:func:`_layout`): one component
+partitioned by cell, sorted by id within it, carrying ``n_vectors``
+over every row. Adds write unique
 staging segments and claim commits (no shared-dir appends, no
 meta.json read-modify-write — concurrent adds never lose an
 ``n_vectors`` update); a compaction racing an add or a delete keeps
@@ -57,13 +62,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from rag_content_spark.plans import index_commit as ic
 
 
-_STATS = {"n_vectors": "count(1)"}
+FORMAT = "rag-spark-ann/3"
 
 
-def _layout(meta: dict) -> list[ic.Component]:
-    return [
-        ic.Component("index", "cell", ("cell", meta["id_col"]), stats=_STATS)
-    ]
+def _layout(meta: dict) -> ic.Component:
+    return ic.Component("cell", ("cell", meta["id_col"]), {"n_vectors": "count(1)"})
 
 
 def encode_segment(
@@ -111,15 +114,6 @@ def encode_segment(
     return emb.mapInPandas(_encode, schema=schema)
 
 
-def _write_index_segment(encoded: DataFrame, out_dir: str) -> str:
-    i_dir = ic.staging_dir(out_dir, "i")
-    encoded.write.mode("errorifexists").partitionBy("cell").parquet(
-        os.path.join(out_dir, i_dir)
-    )
-    ic.remember_schema(out_dir, i_dir, encoded, "cell")
-    return i_dir
-
-
 def _codebook(out_dir: str) -> list:
     with open(os.path.join(out_dir, "codebook.json")) as f:
         return json.load(f)
@@ -130,7 +124,7 @@ def delete_from_ann_index(spark: SparkSession, out_dir: str, ids) -> dict:
     — one tombstone segment and one ``delete`` commit with an exact
     negative ``n_vectors`` delta; see index_commit.delete_ids. Returns
     the meta view after the delete."""
-    meta = ic.read_meta(out_dir)
+    meta = ic.read_meta(out_dir, FORMAT)
     return meta | ic.delete_ids(spark, out_dir, ids, meta["id_col"], _layout(meta))
 
 
@@ -182,8 +176,22 @@ def build_ann_index(
     codebook = train_pq_np(X, ids, m, k)
 
     os.makedirs(out_dir, exist_ok=True)
-    i_dir = _write_index_segment(
-        encode_segment(emb, centroids, codebook, id_col, embedding_col), out_dir
+    meta = {
+        "format": FORMAT,
+        "metric": "l2",
+        "dim": dim,
+        "nlist": nlist,
+        "m": m,
+        "k": k,
+        "id_col": id_col,
+        "embedding_col": embedding_col,
+        "train_points": train_points,
+    }
+    segment, _ = ic.write_segment(
+        out_dir,
+        encode_segment(emb, centroids, codebook, id_col, embedding_col),
+        _layout(meta),
+        shuffle=False,
     )
     c_path = os.path.join(out_dir, "centroids.parquet")
     if os.path.isdir(c_path):  # a Spark-written sidecar from an older build
@@ -197,31 +205,17 @@ def build_ann_index(
         ),
         c_path,
     )
-    meta = {
-        "format": "rag-spark-ann/2",
-        "metric": "l2",
-        "dim": dim,
-        "nlist": nlist,
-        "m": m,
-        "k": k,
-        "id_col": id_col,
-        "embedding_col": embedding_col,
-        "train_points": train_points,
-    }
     with open(os.path.join(out_dir, "codebook.json"), "w") as f:
         json.dump(codebook, f)
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=2)
-    ic.claim(
-        out_dir,
-        {"kind": "base", "dirs": {"index": i_dir}, "stats": {"n_vectors": n}},
-    )
+    ic.claim(out_dir, {"kind": "base", **segment, "stats": {"n_vectors": n}})
     return meta | {"n_vectors": n}
 
 
 def load_ann_meta(out_dir: str) -> tuple[dict, list]:
     """(meta, codebook); meta includes the live n_vectors."""
-    meta = ic.read_meta(out_dir)
+    meta = ic.read_meta(out_dir, FORMAT)
     return meta | ic.view_stats(*ic.live_view(out_dir)), _codebook(out_dir)
 
 
@@ -263,7 +257,7 @@ def query_ann_index(
         pq_adc_table,
     )
 
-    meta = ic.read_meta(out_dir)
+    meta = ic.read_meta(out_dir, FORMAT)
     codebook = _codebook(out_dir)
     id_col, embedding_col = meta["id_col"], meta["embedding_col"]
     import math
@@ -277,7 +271,7 @@ def query_ann_index(
     )[:n_probe]
     cells = [int(c) for _, c in probes]
 
-    index = ic.read_live(spark, out_dir, "index", id_col).filter(
+    index = ic.read_live(spark, out_dir, id_col).filter(
         F.col("cell").isin(cells)
     )
     table = pq_adc_table([float(x) for x in query_vec], codebook)
@@ -322,24 +316,20 @@ def add_to_ann_index(
     do not move centroids, so after heavy growth rebuild with
     :func:`build_ann_index`. Id uniqueness across adds is the caller's
     contract (use ``incremental_dedup``/``index_upsert`` upstream when
-    re-adds are possible). An add of no vectors claims nothing: its
-    partitioned segment would hold no parquet file for a reader.
+    re-adds are possible). An add of no vectors claims nothing.
     """
-    from rag_content_spark.observe import observe_count
-
-    meta = ic.read_meta(out_dir)
+    meta = ic.read_meta(out_dir, FORMAT)
     id_col, embedding_col = meta["id_col"], meta["embedding_col"]
-    # counted during the write, not by a count() job ahead of it
-    emb, n_new = observe_count(new_emb.select(id_col, embedding_col))
     encoded = encode_segment(
-        emb, load_centroids(out_dir), _codebook(out_dir), id_col, embedding_col
+        new_emb, load_centroids(out_dir), _codebook(out_dir), id_col, embedding_col
     )
-    dirs = {"index": _write_index_segment(encoded, out_dir)}
-    n = n_new()
-    if n:
-        ic.claim(out_dir, {"kind": "add", "dirs": dirs, "stats": {"n_vectors": n}})
+    # counted during the write, not by a count() job ahead of it
+    segment, counted = ic.write_segment(out_dir, encoded, _layout(meta), shuffle=False)
+    stats = {"n_vectors": counted["n_vectors"]}
+    if stats["n_vectors"]:
+        ic.claim(out_dir, {"kind": "add", **segment, "stats": stats})
     else:
-        ic.discard(out_dir, dirs)
+        ic.discard(out_dir, segment)
     return meta | ic.view_stats(*ic.live_view(out_dir))
 
 
@@ -355,5 +345,5 @@ def compact_ann_index(spark: SparkSession, out_dir: str) -> dict:
     are untouched — compaction moves bytes, not rows. The per-cell sort
     key is the RECORDED id column (round-7 ADVICE: no more inference).
     Returns {n_files_before, n_files_after, n_rows}."""
-    meta = ic.read_meta(out_dir)
+    meta = ic.read_meta(out_dir, FORMAT)
     return ic.compact(spark, out_dir, meta["id_col"], _layout(meta))

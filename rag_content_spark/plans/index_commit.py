@@ -29,19 +29,26 @@ data dir. This module ports versioned_table's protocol
   crash window at all (round-7 ADVICE on compact_text_index's two-rename
   recovery hole).
 
+Each commit claims ONE segment and records its ``dir`` and the
+``schema`` its rows were written with, so every read of a segment, in
+any process, runs no schema inference, and a segment of no rows (a
+compaction of an index whose rows were all deleted) reads as empty.
+
 The index modules (plans/text_index.py, plans/ann_index.py) state only
-their layout — which components they write, how each is partitioned and
-sorted, and which SQL aggregates give their stats (:class:`Component`).
+their layout: ONE :class:`Component` per index — how its segments are
+partitioned and sorted, and which SQL aggregates give its stats.
 Everything that follows from the live view is written once, here: the
-tombstone anti-join (:func:`read_live`), the delete commit
-(:func:`delete_ids`), the compact commit (:func:`compact`) and the
-reclaim of superseded segments (:func:`vacuum_index`). An index is its
-``meta.json`` plus this log; a directory without the log is rejected
-(:func:`read_meta`).
+segment write (:func:`write_segment`), the tombstone anti-join
+(:func:`read_live`), the delete commit (:func:`delete_ids`), the compact
+commit (:func:`compact`) and the reclaim of superseded segments
+(:func:`vacuum_index`). An index is its ``meta.json`` plus this log; a
+directory without the log, or whose ``meta.json`` names another format
+than the one its module writes, is rejected (:func:`read_meta`).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import random
@@ -109,20 +116,26 @@ def _no_log(index_dir: str) -> ValueError:
     )
 
 
-def read_meta(index_dir: str) -> dict:
+def read_meta(index_dir: str, fmt: str) -> dict:
     """The index's static config (``meta.json``). Raises ``ValueError``
-    naming ``index_dir`` when it has no commit log, before any data is
-    read or written."""
+    naming ``index_dir`` when it has no commit log or its format is not
+    ``fmt``, before any data is read or written. An index of an older
+    format is rebuilt, not read: no reader keeps a second layout."""
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
     if not _max_version(os.path.join(index_dir, "commits")):
         raise _no_log(index_dir)
+    if meta.get("format") != fmt:
+        raise ValueError(
+            f"{index_dir} holds a {meta.get('format')!r} index; this version "
+            f"reads only {fmt!r}: rebuild it"
+        )
     return meta
 
 
 def claim(index_dir: str, record: dict, attempts_out: list | None = None) -> int:
     """Claim the next version for ``record`` (hard-link commit); returns
-    the claimed version. ``record`` must carry kind/dirs/stats; version,
+    the claimed version. ``record`` must carry kind/dir/schema/stats; version,
     parent and (for non-compact kinds) base_version are filled in here.
     ``compact`` records must already carry ``base_version`` — the
     highest version whose data the compaction absorbed.
@@ -176,20 +189,12 @@ def staging_dir(index_dir: str, prefix: str) -> str:
     return f"data/{prefix}-{uuid.uuid4().hex[:12]}"
 
 
-def nonempty(index_dir: str, dirs: dict) -> dict:
-    """The staged ``{component: dir}`` entries that hold a parquet file.
-    A partitioned write of no rows leaves none, and a read of such a
-    segment fails to infer its schema."""
-    return {k: d for k, d in dirs.items() if parquet_files(index_dir, [d])}
-
-
-def discard(index_dir: str, dirs: dict) -> None:
-    """Remove staged ``{component: dir}`` segments that no commit will
-    claim (an add of no rows)."""
+def discard(index_dir: str, segment: dict) -> None:
+    """Remove a staged segment that no commit will claim (an add of no
+    rows)."""
     import shutil
 
-    for d in dirs.values():
-        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
+    shutil.rmtree(os.path.join(index_dir, segment["dir"]), ignore_errors=True)
 
 
 def live_view(index_dir: str) -> tuple[dict, list[dict]]:
@@ -223,160 +228,132 @@ def view_stats(root: dict, adds: list[dict]) -> dict:
     return out
 
 
-def view_dirs(root: dict, adds: list[dict], component: str) -> list[str]:
-    """Relative data dirs of ``component`` (e.g. 'postings') across the
-    live view, root first; commits without the component (e.g. delete
-    tombstones when asked for postings) contribute nothing."""
-    out = [root["dirs"][component]] if component in root["dirs"] else []
-    out += [a["dirs"][component] for a in adds if component in a["dirs"]]
-    return out
-
-
-# segment dir key -> schema of its first read; see read_segment
-_SEGMENT_SCHEMAS: dict[tuple, object] = {}
-_SEGMENT_SCHEMAS_MAX = 4096
-
-
-def _segment_key(path: str) -> tuple:
-    st = os.stat(path)
-    return (path, st.st_dev, st.st_ino, st.st_mtime_ns)
-
-
-def _remember(key: tuple, schema) -> None:
-    if len(_SEGMENT_SCHEMAS) >= _SEGMENT_SCHEMAS_MAX:
-        _SEGMENT_SCHEMAS.clear()
-    _SEGMENT_SCHEMAS[key] = schema
-
-
-def read_segment(spark, path: str):
-    """``spark.read.parquet(path)`` that infers the schema once per
-    segment. Inference is a Spark job over the footers, and every read
-    of a live view would pay it again for every segment. Segments are
-    write-once (:func:`staging_dir` names each with a uuid), so the
-    schema is reused under a key of the path plus the directory's
-    device, inode and mtime: a directory removed and rebuilt at the same
-    path (a rebuilt index, a test fixture) is a new key. A writer that
-    calls :func:`remember_schema` spares the first read its inference."""
-    try:
-        key = _segment_key(path)
-    except OSError:
-        return spark.read.parquet(path)  # Spark's own missing-path error
-    schema = _SEGMENT_SCHEMAS.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    _remember(key, df.schema)
-    return df
-
-
-def remember_schema(
-    index_dir: str, rel_dir: str, df: DataFrame, partition_col: str | None = None
-) -> None:
-    """Record for :func:`read_segment` the schema of the segment ``df``
-    was just written to at ``rel_dir``, as a read infers it: every field
-    nullable, the partition column last. The segment's first read then
-    runs no inference job. A segment with no parquet file is left to
-    inference, which fails on it here as in any other process."""
-    from pyspark.sql.types import StructField, StructType
-
-    if not parquet_files(index_dir, [rel_dir]):
-        return
-    fields = [f for f in df.schema.fields if f.name != partition_col]
-    if partition_col:
-        fields.append(df.schema[partition_col])
-    _remember(
-        _segment_key(os.path.join(index_dir, rel_dir)),
-        StructType([StructField(f.name, f.dataType, True) for f in fields]),
+def view_segments(root: dict, adds: list[dict]) -> tuple[list[dict], list[dict]]:
+    """(rows, tombstones): the live view's commits whose segment holds
+    index rows, root first, and those whose segment holds deleted
+    ids."""
+    live = [root] + adds
+    return (
+        [s for s in live if s["kind"] != "delete"],
+        [s for s in live if s["kind"] == "delete"],
     )
 
 
-def read_union(spark, index_dir: str, rel_dirs: list[str]):
-    """Union the parquet dirs of a live view with per-root reads —
-    ``spark.read.parquet(a, b)`` rejects multiple partitioned roots
-    (CONFLICTING_DIRECTORY_STRUCTURES), while per-root reads +
-    unionByName keep partition pruning in EVERY scan (pinned in
-    tests). Each segment's schema is inferred once (:func:`read_segment`)."""
-    dfs = [read_segment(spark, os.path.join(index_dir, d)) for d in rel_dirs]
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
+def _schema(df: DataFrame, partition_col: str | None = None) -> dict:
+    """``df``'s schema as a read of the segment it is written to infers
+    it — every field and array element nullable, the partition column
+    last — in the ``StructType.jsonValue()`` form a commit records."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    def nullable(t):
+        if isinstance(t, StructType):
+            return StructType(
+                [StructField(f.name, nullable(f.dataType), True) for f in t.fields]
+            )
+        if isinstance(t, ArrayType):
+            return ArrayType(nullable(t.elementType), True)
+        return t
+
+    fields = [f for f in df.schema.fields if f.name != partition_col]
+    if partition_col:
+        fields.append(df.schema[partition_col])
+    return nullable(StructType(fields)).jsonValue()
+
+
+def read_union(spark, index_dir: str, segments: list[dict]) -> DataFrame:
+    """Union the segments of commit records ``segments`` with per-root
+    reads — ``spark.read.parquet(a, b)`` rejects multiple partitioned
+    roots (CONFLICTING_DIRECTORY_STRUCTURES), while per-root reads +
+    unionByName keep partition pruning in EVERY scan (pinned in tests).
+    Each segment is read with the schema its commit records, so no read
+    infers one (a Spark job over the footers), and a segment of no rows,
+    which holds no parquet file, reads as empty."""
+    from pyspark.sql.types import StructType
+
+    dfs = [
+        spark.read.schema(StructType.fromJson(s["schema"])).parquet(
+            os.path.join(index_dir, s["dir"])
+        )
+        for s in segments
+    ]
+    return functools.reduce(DataFrame.unionByName, dfs)
 
 
 def read_live(
     spark,
     index_dir: str,
-    component: str,
     id_col: str,
     view: tuple[dict, list[dict]] | None = None,
 ) -> DataFrame:
-    """The live rows of ``component`` (e.g. 'postings', 'lengths',
-    'index'): the union of its live segments, anti-joined with the
-    distinct ids of the live delete tombstones when any are live.
-    ``view`` is a ``(root, adds)`` already listed by the caller, so a
-    read that needs several components parses the log once."""
-    root, adds = view or live_view(index_dir)
-    df = read_union(spark, index_dir, view_dirs(root, adds, component))
-    deletes = view_dirs(root, adds, "deletes")
-    if not deletes:
+    """The live rows of the index: the union of its live segments,
+    anti-joined with the distinct ids of the live delete tombstones
+    when any are live. ``view`` is a ``(root, adds)`` already listed by
+    the caller, so a read that also needs the stats parses the log
+    once."""
+    rows, tombstones = view_segments(*(view or live_view(index_dir)))
+    df = read_union(spark, index_dir, rows)
+    if not tombstones:
         return df
-    dels = read_union(spark, index_dir, deletes).select(id_col).distinct()
+    dels = read_union(spark, index_dir, tombstones).select(id_col).distinct()
     return df.join(dels, id_col, "left_anti")
 
 
-def segment_stats(spark, index_dir: str, rel_dir: str, aggs: dict) -> dict:
-    """Exact integer aggregates over one STAGED segment: ``aggs`` maps
-    each stat name to a SQL aggregate (``{"n_docs": "count(1)"}``); a
-    NULL sum (no rows) counts as 0. The read goes through
-    :func:`read_segment`."""
-    row = (
-        read_segment(spark, os.path.join(index_dir, rel_dir))
-        .agg(*[F.expr(e).alias(k) for k, e in aggs.items()])
-        .collect()[0]
-    )
-    return {k: int(row[k] or 0) for k in aggs}
-
-
 class Component(NamedTuple):
-    """One parquet component of an index layout. Compaction rewrites it
-    through :func:`cluster` when it has a ``partition_col``, or, with
-    none, as one unpartitioned file. ``stats`` maps the manifest stats
-    this component carries to the SQL aggregates that recount them over
-    its rows (:func:`segment_stats`). A component's segments stage under
-    ``data/<first letter>-<uuid>``."""
+    """The one parquet component of an index layout; every segment of
+    rows (build, add, compaction) is written by :func:`write_segment`.
+    ``stats`` maps the manifest stats to the SQL aggregates that count
+    them, exactly, over a segment's rows. ``stats_rows`` is a SQL
+    predicate on the rows those aggregates read (the text index's
+    length rows), or None for every row: a delete reads only those rows
+    for its negative stats."""
 
-    name: str
-    partition_col: str | None = None
-    sort_cols: tuple[str, ...] = ()
-    stats: dict | None = None
+    partition_col: str
+    sort_cols: tuple[str, ...]
+    stats: dict
+    stats_rows: str | None = None
 
 
-def cluster(df: DataFrame, c: Component):
-    """The writer of ``df`` as a segment of the partitioned component
-    ``c``: hash-partitioned on ``c.partition_col`` with no fixed count,
-    sorted within partitions by ``c.sort_cols``, and written partitioned
-    by that column. AQE sizes the reducers from the shuffle it observes:
-    a few rows take one reducer, a corpus up to
-    ``spark.sql.shuffle.partitions``. All rows of one partition value
-    meet in one task, so the segment holds one file per non-empty
-    value."""
-    return (
-        df.repartition(c.partition_col)
-        .sortWithinPartitions(*c.sort_cols)
-        .write.partitionBy(c.partition_col)
+def write_segment(
+    index_dir: str, df: DataFrame, c: Component, shuffle: bool = True
+) -> tuple[dict, dict]:
+    """Stage ``df`` as one segment of component ``c`` and count it on
+    the same write. Returns ``(segment, counts)``: ``segment`` is the
+    ``{dir, schema}`` a commit records, and ``counts`` holds ``n_rows``
+    and ``c.stats``, observed during the write (no job of their own).
+
+    The rows are hash-partitioned on ``c.partition_col`` with no fixed
+    count, sorted within partitions by ``c.sort_cols`` and written
+    partitioned by that column. AQE sizes the reducers from the shuffle
+    it observes: a few rows take one reducer, a corpus up to
+    ``spark.sql.shuffle.partitions``, and the segment holds one file per
+    non-empty value. ``shuffle=False`` skips the shuffle and the sort:
+    each task writes its own rows, one file per value it holds (an ANN
+    segment, whose one Python pass is its only stage)."""
+    from rag_content_spark.observe import observe
+
+    aggs = {"n_rows": "count(1)"} | c.stats
+    df, counted = observe(df, *[F.expr(e).alias(k) for k, e in aggs.items()])
+    if shuffle:
+        df = df.repartition(c.partition_col).sortWithinPartitions(*c.sort_cols)
+    segment = {
+        "dir": staging_dir(index_dir, "s"),
+        "schema": _schema(df, c.partition_col),
+    }
+    df.write.partitionBy(c.partition_col).mode("errorifexists").parquet(
+        os.path.join(index_dir, segment["dir"])
     )
+    return segment, {k: int(v or 0) for k, v in counted().items()}
 
 
-def delete_ids(
-    spark, index_dir: str, ids, id_col: str, layout: list[Component]
-) -> dict:
+def delete_ids(spark, index_dir: str, ids, id_col: str, c: Component) -> dict:
     """Delete rows by id: ``ids`` (a list or a one-column DataFrame)
     lands as a TOMBSTONE segment and one ``delete`` commit claims it,
     with the exact negative stats of the live rows it masks (so an
-    absent or already-deleted id is a no-op in the stats). Readers
-    anti-join live tombstones (:func:`read_live`); :func:`compact`
-    drops the masked rows physically; :func:`vacuum_index` reclaims
-    the tombstones. Id re-use after a delete is outside the contract.
+    absent or already-deleted id is a no-op in the stats); only the
+    rows ``c.stats_rows`` names are read for them. Readers anti-join
+    live tombstones (:func:`read_live`); :func:`compact` drops the
+    masked rows physically; :func:`vacuum_index` reclaims the
+    tombstones. Id re-use after a delete is outside the contract.
 
     Concurrency note: the negative delta is computed against the live
     view BEFORE the claim, so two concurrent deletes of overlapping ids
@@ -393,83 +370,72 @@ def delete_ids(
         # the optimizer to scan once per live segment
         ids = spark.createDataFrame(pa.table({id_col: pa.array(ids)}))
     ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    comp = next(c for c in layout if c.stats)
+    live = read_live(spark, index_dir, id_col)
+    if c.stats_rows:
+        live = live.filter(c.stats_rows)
     row = (
-        read_live(spark, index_dir, comp.name, id_col)
-        .join(ids, id_col, "leftsemi")
-        .agg(*[F.expr(e).alias(k) for k, e in comp.stats.items()])
+        live.join(ids, id_col, "leftsemi")
+        .agg(*[F.expr(e).alias(k) for k, e in c.stats.items()])
         .collect()[0]
     )
-    d_dir = staging_dir(index_dir, "d")
-    ids.write.mode("errorifexists").parquet(os.path.join(index_dir, d_dir))
-    remember_schema(index_dir, d_dir, ids)
+    segment = {"dir": staging_dir(index_dir, "d"), "schema": _schema(ids)}
+    ids.write.mode("errorifexists").parquet(os.path.join(index_dir, segment["dir"]))
     claim(
         index_dir,
         {
             "kind": "delete",
-            "dirs": {"deletes": d_dir},
-            "stats": {k: -int(row[k] or 0) for k in comp.stats},
+            **segment,
+            "stats": {k: -int(row[k] or 0) for k in c.stats},
         },
     )
     return view_stats(*live_view(index_dir))
 
 
-def parquet_files(index_dir: str, rel_dirs: list[str]) -> int:
+def parquet_files(index_dir: str, segments: list[dict]) -> int:
     n = 0
-    for rel in rel_dirs:
-        for _root, _dirs, files in os.walk(os.path.join(index_dir, rel)):
+    for s in segments:
+        for _root, _dirs, files in os.walk(os.path.join(index_dir, s["dir"])):
             n += sum(1 for fn in files if fn.endswith(".parquet"))
     return n
 
 
-def compact(spark, index_dir: str, id_col: str, layout: list[Component]) -> dict:
+def compact(spark, index_dir: str, id_col: str, c: Component) -> dict:
     """Rewrite the live view, net of its tombstones, into ONE segment
-    per component (the OPTIMIZE/small-files step every append-only lake
-    table needs — read latency grows with file count, not bytes), and
-    claim it as one ``compact`` commit recording ``base_version``, the
-    highest version absorbed. An add or delete claimed while the
-    compaction ran stays live on top of it; a crash at ANY point leaves
-    the old view untouched (there are no renames); the superseded
-    segments wait for :func:`vacuum_index`.
+    (the OPTIMIZE/small-files step every append-only lake table needs —
+    read latency grows with file count, not bytes), and claim it as one
+    ``compact`` commit recording ``base_version``, the highest version
+    absorbed. An add or delete claimed while the compaction ran stays
+    live on top of it; a crash at ANY point leaves the old view
+    untouched (there are no renames); the superseded segments wait for
+    :func:`vacuum_index`. An index with no live row compacts into a
+    segment of none, which its recorded schema keeps readable.
 
-    ``n_rows`` and the stats are COUNTED from the staged bytes, not
-    carried over from the accumulated deltas: concurrent overlapping
-    deletes can write-skew those (see :func:`delete_ids`), so every
-    compaction is a self-healing point for that drift. Returns
-    ``{n_files_before, n_files_after, n_rows}`` of the first component
-    over the live view."""
+    ``n_rows`` and the stats are COUNTED on the compaction's own write
+    (:func:`write_segment`), not carried over from the accumulated
+    deltas: concurrent overlapping deletes can write-skew those (see
+    :func:`delete_ids`), so every compaction is a self-healing point
+    for that drift. Returns ``{n_files_before, n_files_after, n_rows}``
+    over the live view's segments of rows."""
     root, adds = live_view(index_dir)
     base_version = max([root["version"]] + [a["version"] for a in adds])
-    main = layout[0].name
-    before = parquet_files(index_dir, view_dirs(root, adds, main))
-    dirs = {}
-    for c in layout:
-        df = read_live(spark, index_dir, c.name, id_col, (root, adds))
-        writer = cluster(df, c) if c.partition_col else df.coalesce(1).write
-        dirs[c.name] = staging_dir(index_dir, c.name[0])
-        writer.mode("errorifexists").parquet(os.path.join(index_dir, dirs[c.name]))
-        remember_schema(index_dir, dirs[c.name], df, c.partition_col)
-    # one aggregation per staged component: the first one's row count
-    # rides along with its own stats
-    counted = {}
-    for i, c in enumerate(layout):
-        aggs = ({"n_rows": "count(1)"} if i == 0 else {}) | (c.stats or {})
-        counted |= segment_stats(spark, index_dir, dirs[c.name], aggs)
+    before = parquet_files(index_dir, view_segments(root, adds)[0])
+    segment, counted = write_segment(
+        index_dir, read_live(spark, index_dir, id_col, (root, adds)), c
+    )
     n_rows = counted.pop("n_rows")
     claim(
         index_dir,
         {
             "kind": "compact",
             "base_version": base_version,
-            "dirs": dirs,
+            **segment,
             "stats": counted,
         },
     )
-    new_root, new_adds = live_view(index_dir)
     return {
         "n_files_before": before,
         "n_files_after": parquet_files(
-            index_dir, view_dirs(new_root, new_adds, main)
+            index_dir, view_segments(*live_view(index_dir))[0]
         ),
         "n_rows": n_rows,
     }
@@ -487,17 +453,15 @@ def vacuum_index(index_dir: str) -> int:
     if not snaps:
         return 0
     root, adds = live_view(index_dir)
-    live_versions = {root["version"]} | {a["version"] for a in adds}
-    live_dirs = set()
-    for s in [root] + adds:
-        live_dirs.update(s["dirs"].values())
+    live = [root] + adds
+    live_versions = {s["version"] for s in live}
+    live_dirs = {s["dir"] for s in live}
     removed = 0
     for s in snaps:
         if s["version"] in live_versions:
             continue
-        for d in s["dirs"].values():
-            if d in live_dirs or not d.startswith("data/"):
-                continue  # only dirs this log staged
+        d = s["dir"]
+        if d not in live_dirs and d.startswith("data/"):  # only dirs this log staged
             full = os.path.join(index_dir, d)
             if os.path.isdir(full):
                 shutil.rmtree(full)

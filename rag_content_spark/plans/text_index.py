@@ -1,44 +1,48 @@
 """Persisted inverted text index: token-bucket-partitioned postings on
-parquet + a lengths table + exact-integer corpus stats — keyword/BM25
-lookup that reads ONLY the buckets containing the queried terms instead
-of re-scanning the corpus per query (the text twin of the
-cell-partitioned ANN index in plans/ann_index.py).
+parquet + exact-integer corpus stats — keyword/BM25 lookup that reads
+ONLY the buckets containing the queried terms instead of re-scanning
+the corpus per query (the text twin of the cell-partitioned ANN index
+in plans/ann_index.py).
 
-Layout (format ``rag-spark-text/3``, commit-logged):
+Layout (format ``rag-spark-text/4``, commit-logged):
 
     index_dir/
       meta.json                       static config {format, n_buckets,
                                       id_col, positions}
-      data/p-<uuid>/bucket=NN/...     postings segments (one per writer):
+      data/s-<uuid>/bucket=NN/...     postings segments (one per writer):
                                       (id, dl, token, tf[, positions])
-      data/l-<uuid>/...parquet        lengths segments (id, dl)
+      data/s-<uuid>/bucket=-1/...     the same segment's length rows:
+                                      (id, dl, NULL, 1[, [dl]])
       data/d-<uuid>/...parquet        delete tombstones (ids)
       commits/snap-NNNNN.json         hard-link-claimed manifests:
                                       {kind: base|add|delete|compact,
-                                      dirs, stats: {n_docs, sum_dl}, ...}
+                                      dir, schema, stats: {n_docs,
+                                      sum_dl}, ...}
 
-Every postings row carries its document's length ``dl``, so a BM25 or
-proximity read scans only the postings buckets of its terms and never a
-lengths segment. The lengths component stays for the commit stats, the
-negative stats of a delete and compaction.
+Every postings row carries its document's length ``dl``, and every
+document, one without a token included, has one LENGTH ROW — token
+NULL, tf 1 — in the reserved partition ``bucket=-1``. A segment is
+therefore one write of one tokenizing pass (:func:`_postings_of`), and
+its stats are observed on that write. A term read's ``bucket IN
+(...)`` filter never names the reserved partition, so a BM25, phrase or
+proximity read scans only the buckets of its terms; a delete's negative
+stats read only the length rows (the layout's ``stats_rows``).
 
-Format rule: an index keeps the format its build recorded in
-``meta.json``. A ``rag-spark-text/2`` index (postings without ``dl``)
-is read by joining its lengths, and its adds keep writing ``/2``
-segments, so no live view mixes formats. Two functions know the
-format: :func:`_pruned_read` when reading and :func:`_postings_of` when
-writing; plans/index_commit.py stays layout-agnostic.
+Format rule: this module reads and writes ``rag-spark-text/4`` only.
+An index of an older format is refused with a ``ValueError`` naming its
+directory and format, before any Spark job (index_commit.read_meta):
+rebuild it with :func:`build_text_index`.
 
-plans/index_commit.py owns the live view — the tombstone anti-join,
-the delete and compact commits, vacuum — and this module states only
-its layout (:func:`_layout`): postings partitioned and sorted by token
-bucket, lengths as one file carrying the BM25 stats. Maintenance is
-CONCURRENCY-SAFE through that commit log: each add writes unique
-staging dirs and claims a commit — no shared-directory appends, no
-meta.json read-modify-write, so concurrent adds never lose a stats
-update and BM25 idf/avgdl stay exact; a compaction racing an add or a
-delete keeps it live, and a crash mid-compact leaves the old view
-intact.
+plans/index_commit.py owns the live view — the segment write, the
+tombstone anti-join, the delete and compact commits, vacuum — and this
+module states only its layout (:func:`_layout`): one component
+partitioned and sorted by token bucket, whose length rows carry the
+BM25 stats. Maintenance is CONCURRENCY-SAFE through that commit log:
+each add writes a unique staging dir and claims a commit — no
+shared-directory appends, no meta.json read-modify-write, so concurrent
+adds never lose a stats update and BM25 idf/avgdl stay exact; a
+compaction racing an add or a delete keeps it live, and a crash
+mid-compact leaves the old view intact.
 
 Scale shape: the build is one corpus scan -> explode -> groupBy
 (doc, token) with map-side combine, then a single partitioned write
@@ -76,76 +80,72 @@ def _bucket_of(token: str, n_buckets: int) -> int:
     return h % n_buckets
 
 
-FORMAT = "rag-spark-text/3"
-# postings without dl: the format before dl rode in the postings
-FORMAT_2 = "rag-spark-text/2"
+FORMAT = "rag-spark-text/4"
+# the partition of the length rows; no term hashes to it
+LENGTHS_BUCKET = -1
 
 
 def _postings_of(docs: DataFrame, meta: dict, text_col: str) -> DataFrame:
-    """(id[, dl], token, tf[, positions]) under ``meta``'s format: a
-    ``/3`` index stores the document length ``dl`` in every row, taken
-    from the projection that tokenizes, and a ``/2`` index does not.
-    The positional variant stores each term's sorted in-document
-    position array, enabling index-served phrase/proximity retrieval
-    (operators/search.phrase_search / proximity_search run the same
-    intersection algebra over these arrays instead of a corpus scan)."""
+    """(id, dl, token, tf[, positions], bucket) of one segment: every
+    (doc, token) posting plus one length row per document. The
+    tokenizing projection is exploded with one NULL token appended, so
+    the ``groupBy`` yields each document's ``(id, dl, NULL, 1)`` row
+    next to its postings from the one tokenization. The positional
+    variant stores each term's sorted in-document position array
+    (a length row's is ``[dl]``), enabling index-served
+    phrase/proximity retrieval (operators/search.phrase_search /
+    proximity_search run the same intersection algebra over these
+    arrays instead of a corpus scan)."""
     id_col = meta["id_col"]
-    keys = [id_col] if meta["format"] == FORMAT_2 else [id_col, "dl"]
-    # tokenized once: dl and the explode both read _tk
     tk = docs.select(F.col(id_col), tokens(text_col).alias("_tk"))
+    # a NULL text has no token but still a length row
+    with_end = F.concat(
+        F.coalesce("_tk", F.array().cast("array<string>")),
+        F.array(F.lit(None).cast("string")),
+    )
     aggs = [F.count(F.lit(1)).alias("tf")]
-    if meta.get("positions"):
-        exploded = F.posexplode("_tk").alias("pos", "token")
+    if meta["positions"]:
+        exploded = F.posexplode(with_end).alias("pos", "token")
         aggs.append(F.sort_array(F.collect_list("pos")).alias("positions"))
     else:
-        exploded = F.explode("_tk").alias("token")
+        exploded = F.explode(with_end).alias("token")
+    bucket = stable_hash64(F.col("token"), salt=_SALT) % meta["n_buckets"]
     return (
         tk.select(F.col(id_col), F.size("_tk").alias("dl"), exploded)
-        .groupBy(*keys, "token")
+        .groupBy(id_col, "dl", "token")
         .agg(*aggs)
+        .withColumn(
+            "bucket",
+            F.when(F.col("token").isNull(), LENGTHS_BUCKET)
+            .otherwise(bucket)
+            .cast("int"),
+        )
     )
 
 
-# the BM25 corpus stats, as aggregates over the lengths component
-_STATS = {"n_docs": "count(1)", "sum_dl": "sum(dl)"}
+# the BM25 corpus stats, as aggregates over a segment's length rows
+_STATS = {
+    "n_docs": "count(CASE WHEN token IS NULL THEN 1 END)",
+    "sum_dl": "sum(CASE WHEN token IS NULL THEN dl END)",
+}
 
 
-def _layout(meta: dict) -> list[ic.Component]:
-    return [
-        ic.Component("postings", "bucket", ("bucket", "token", meta["id_col"])),
-        ic.Component("lengths", stats=_STATS),
-    ]
+def _layout(meta: dict) -> ic.Component:
+    return ic.Component(
+        "bucket",
+        ("bucket", "token", meta["id_col"]),
+        _STATS,
+        f"bucket = {LENGTHS_BUCKET}",
+    )
 
 
 def _write_segment(docs: DataFrame, out_dir: str, meta: dict, text_col: str):
-    """Write one (postings, lengths) segment pair into unique staging
-    dirs; returns (dirs, stats) for the commit record. The postings go
-    through the layout's clustered writer (index_commit.cluster); the
-    stats are observed during the lengths write, with no job of their
-    own, and both schemas are recorded for the first read."""
-    from rag_content_spark.observe import observe
-
-    id_col = meta["id_col"]
-    post = _postings_of(docs, meta, text_col).withColumn(
-        "bucket",
-        (stable_hash64(F.col("token"), salt=_SALT) % meta["n_buckets"]).cast("int"),
+    """Write one segment into a unique staging dir; returns (segment,
+    stats) for the commit record, the stats observed on the write."""
+    segment, counted = ic.write_segment(
+        out_dir, _postings_of(docs, meta, text_col), _layout(meta)
     )
-    p_dir = ic.staging_dir(out_dir, "p")
-    ic.cluster(post, _layout(meta)[0]).mode("errorifexists").parquet(
-        os.path.join(out_dir, p_dir)
-    )
-    ic.remember_schema(out_dir, p_dir, post, "bucket")
-    lengths, stats = observe(
-        docs.select(F.col(id_col), F.size(tokens(text_col)).alias("dl")),
-        *[F.expr(e).alias(k) for k, e in _STATS.items()],
-    )
-    l_dir = ic.staging_dir(out_dir, "l")
-    lengths.write.mode("errorifexists").parquet(os.path.join(out_dir, l_dir))
-    ic.remember_schema(out_dir, l_dir, lengths)
-    return (
-        {"postings": p_dir, "lengths": l_dir},
-        {k: int(v or 0) for k, v in stats().items()},
-    )
+    return segment, {k: counted[k] for k in _STATS}
 
 
 def build_text_index(
@@ -156,7 +156,7 @@ def build_text_index(
     text_col: str = "text",
     positions: bool = False,
 ) -> dict:
-    """Build + write a ``rag-spark-text/3`` index; returns {config...,
+    """Build + write a ``rag-spark-text/4`` index; returns {config...,
     n_docs, sum_dl}. ``positions=True`` stores per-(doc, token) sorted
     position arrays alongside tf (meta records the flag; BM25 lookup
     ignores the extra column, phrase/proximity lookup requires it)."""
@@ -167,11 +167,20 @@ def build_text_index(
         "id_col": id_col,
         "positions": bool(positions),
     }
-    dirs, stats = _write_segment(docs, out_dir, meta, text_col)
+    segment, stats = _write_segment(docs, out_dir, meta, text_col)
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=2)
-    ic.claim(out_dir, {"kind": "base", "dirs": dirs, "stats": stats})
+    ic.claim(out_dir, {"kind": "base", **segment, "stats": stats})
     return meta | stats
+
+
+def live_postings(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The live term postings (id, dl, token, tf[, positions], bucket):
+    every live segment net of tombstones, without the length rows."""
+    meta = ic.read_meta(out_dir, FORMAT)
+    return ic.read_live(spark, out_dir, meta["id_col"]).filter(
+        F.col("bucket") != LENGTHS_BUCKET
+    )
 
 
 def _pruned_read(
@@ -179,12 +188,10 @@ def _pruned_read(
 ) -> tuple[DataFrame, dict, tuple[dict, list[dict]]]:
     """(postings for ``terms`` as (id, token, *cols), meta, live view):
     every live segment's scan carries the ``bucket IN (...)`` partition
-    filter, and the rows are net of tombstones. ``dl`` comes from the
-    postings of a ``/3`` index and from the lengths of a ``/2`` one,
-    joined against the pruned postings only. Asking for ``positions``
-    raises if the index was built without them."""
-    meta = ic.read_meta(out_dir)
-    if "positions" in cols and not meta.get("positions"):
+    filter, and the rows are net of tombstones. Asking for
+    ``positions`` raises if the index was built without them."""
+    meta = ic.read_meta(out_dir, FORMAT)
+    if "positions" in cols and not meta["positions"]:
         raise ValueError(
             "index was built without positions=True — phrase/proximity "
             "lookup needs the positional postings"
@@ -193,15 +200,10 @@ def _pruned_read(
     view = ic.live_view(out_dir)
     buckets = sorted({_bucket_of(t, meta["n_buckets"]) for t in terms})
     post = (
-        ic.read_live(spark, out_dir, "postings", id_col, view)
+        ic.read_live(spark, out_dir, id_col, view)
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("token").isin(terms))
     )
-    if "dl" in cols and meta["format"] == FORMAT_2:
-        # the postings side is already net of tombstones, so the inner
-        # join needs no second anti-join
-        lengths = ic.read_union(spark, out_dir, ic.view_dirs(*view, "lengths"))
-        post = post.join(lengths.select(id_col, "dl"), id_col)
     return post.select(id_col, "token", *cols), meta, view
 
 
@@ -278,7 +280,7 @@ def proximity_query_text_index(
     """Index-served unordered proximity match (the slop-window sibling;
     operators/search.proximity_search semantics): valid-start interval
     expansion over the stored position arrays, doc length from the
-    postings (the lengths of a ``/2`` index, see :func:`_pruned_read`)."""
+    postings."""
     terms = list(dict.fromkeys(t for t in terms if t))
     if not terms:
         raise ValueError("terms must contain at least one token")
@@ -329,26 +331,21 @@ def add_to_text_index(
     text_col: str = "text",
 ) -> dict:
     """Incremental add (sibling of ann_index.add_to_ann_index): the new
-    documents' postings + lengths land in UNIQUE staging dirs and one
-    ``add`` commit claims them — concurrent adds serialize through the
-    hard-link claim with no lost stats and no shared-directory append
-    (pinned by the threaded race test). Per-term df is a window over
-    the live postings at query time, so adds need no df rewrite. Id
-    uniqueness across adds is the caller's contract. An add of no
-    documents claims nothing. The segments keep the index's format
-    (see the module docstring). Returns {config..., n_docs, sum_dl} of
-    the view after this add."""
-    meta = ic.read_meta(out_dir)
-    dirs, stats = _write_segment(docs, out_dir, meta, text_col)
+    documents' postings and length rows land in a UNIQUE staging dir
+    and one ``add`` commit claims it — concurrent adds serialize through
+    the hard-link claim with no lost stats and no shared-directory
+    append (pinned by the threaded race test). Per-term df is a window
+    over the live postings at query time, so adds need no df rewrite.
+    Id uniqueness across adds is the caller's contract. An add of no
+    documents claims nothing; documents without a token still add
+    their length rows. Returns {config..., n_docs, sum_dl} of the view
+    after this add."""
+    meta = ic.read_meta(out_dir, FORMAT)
+    segment, stats = _write_segment(docs, out_dir, meta, text_col)
     if stats["n_docs"]:
-        # documents without a token write no postings file: commit
-        # their lengths alone, as no reader can scan an empty segment
-        ic.claim(
-            out_dir,
-            {"kind": "add", "dirs": ic.nonempty(out_dir, dirs), "stats": stats},
-        )
+        ic.claim(out_dir, {"kind": "add", **segment, "stats": stats})
     else:
-        ic.discard(out_dir, dirs)
+        ic.discard(out_dir, segment)
     return meta | ic.view_stats(*ic.live_view(out_dir))
 
 
@@ -359,21 +356,21 @@ def delete_from_text_index(
 ) -> dict:
     """Delete documents by id (``ids``: a list or a one-column
     DataFrame) — one tombstone segment and one ``delete`` commit with
-    exact negative n_docs/sum_dl deltas; see index_commit.delete_ids for
-    the protocol and its write-skew note (overlapping concurrent deletes
-    drift the BM25 normalizers until the next
-    :func:`compact_text_index`). Returns {config..., n_docs, sum_dl} of
-    the view after the delete."""
-    meta = ic.read_meta(out_dir)
+    exact negative n_docs/sum_dl deltas, read from the length rows only;
+    see index_commit.delete_ids for the protocol and its write-skew note
+    (overlapping concurrent deletes drift the BM25 normalizers until the
+    next :func:`compact_text_index`). Returns {config..., n_docs,
+    sum_dl} of the view after the delete."""
+    meta = ic.read_meta(out_dir, FORMAT)
     return meta | ic.delete_ids(spark, out_dir, ids, meta["id_col"], _layout(meta))
 
 
 def compact_text_index(spark: SparkSession, out_dir: str) -> dict:
     """Compact the postings after many :func:`add_to_text_index` appends:
     rewrite the live view, net of tombstones, into ONE segment with one
-    sorted file per token bucket and one lengths file, with n_docs and
-    sum_dl recounted from the survivors; see index_commit.compact for
-    the protocol. Returns {n_files_before, n_files_after, n_rows} of the
-    postings."""
-    meta = ic.read_meta(out_dir)
+    sorted file per token bucket (the length rows' bucket included),
+    with n_docs and sum_dl recounted from the survivors on the write;
+    see index_commit.compact for the protocol. Returns {n_files_before,
+    n_files_after, n_rows} of the segments (length rows included)."""
+    meta = ic.read_meta(out_dir, FORMAT)
     return ic.compact(spark, out_dir, meta["id_col"], _layout(meta))

@@ -9792,16 +9792,13 @@ def q_text_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from rag_content_spark.plans.text_index import build_text_index
+    from rag_content_spark.plans.text_index import build_text_index, live_postings
 
     d = tempfile.mkdtemp(prefix="sgraft_text_index_")
     build_text_index(_docs(spark, sf_dir), d, n_buckets=32)
     _TEXT_INDEX_MEMO[sf_dir] = d  # lookups amortize against this build
-    from rag_content_spark.plans import index_commit as ic
-
-    root, adds = ic.live_view(d)
     return (
-        ic.read_union(spark, d, ic.view_dirs(root, adds, "postings"))
+        live_postings(spark, d)
         .groupBy("bucket")
         .agg(
             F.count_distinct("token").alias("n_tokens"),

@@ -167,7 +167,7 @@ def test_compact_crash_leaves_live_view_intact(spark, tmp_path):
     # the staged-but-unclaimed segment is debris, not corruption; a
     # real compact afterwards still works
     stats = ti.compact_text_index(spark, d)
-    assert stats["n_files_after"] <= 8
+    assert stats["n_files_after"] <= 8 + 1  # and the length rows' bucket
     final = sorted(
         (r["doc_id"], r["bm25"])
         for r in query_text_index(spark, d, terms).collect()
@@ -195,8 +195,8 @@ def test_vacuum_reclaims_superseded_segments(spark, tmp_path):
         for r in query_text_index(spark, d, terms).collect()
     )
     removed = ic.vacuum_index(d)
-    # base postings+lengths and add postings+lengths = 4 dirs reclaimed
-    assert removed == 4
+    # the base and the add segment reclaimed
+    assert removed == 2
     assert [s["kind"] for s in ic.commits(d)] == ["compact"]
     after = sorted(
         (r["doc_id"], r["bm25"])
@@ -343,8 +343,8 @@ def test_text_index_delete_tombstones(spark, tmp_path):
         for r in query_text_index(spark, d, terms).collect()
     }
     assert after == ref
-    # base (postings+lengths) + add (postings+lengths) + 2 tombstones
-    assert ic.vacuum_index(d) == 6
+    # the base and the add segment + 2 tombstones
+    assert ic.vacuum_index(d) == 4
     assert {
         r["doc_id"] for r in query_text_index(spark, d, terms).collect()
     } == set(ref)
@@ -437,33 +437,60 @@ _NO_LOG_META = {
     "ann": {"format": "rag-spark-ann/1", "metric": "l2", "dim": 4, "nlist": 1,
             "m": 1, "k": 1, "n_vectors": 1},
 }
+# formats an earlier version wrote, each with a commit log: text without
+# length rows (/3: dl in the postings, /2: dl in lengths only), and ANN
+# commits that record no segment schema (/2)
+_STALE_FORMATS = {
+    "text": ["rag-spark-text/2", "rag-spark-text/3"],
+    "ann": ["rag-spark-ann/2"],
+}
+_STALE_COMMIT = {
+    "text": {"kind": "base", "version": 1, "parent": None, "base_version": 1,
+             "dirs": {"postings": "data/p-0", "lengths": "data/l-0"},
+             "stats": {"n_docs": 1, "sum_dl": 2}},
+    "ann": {"kind": "base", "version": 1, "parent": None, "base_version": 1,
+            "dirs": {"index": "data/i-0"}, "stats": {"n_vectors": 1}},
+}
 
 
 @pytest.mark.parametrize("kind", ["text", "ann"])
 @pytest.mark.parametrize("fn", ["query", "add", "delete", "compact"])
 def test_index_without_commit_log_is_rejected(spark, tmp_path, kind, fn):
     """A directory holding ``meta.json`` but no ``commits/`` (no writer
-    makes one) is refused with a ValueError naming it, before any Spark
-    job runs."""
+    makes one), or a logged index of a format this version does not
+    write, is refused with a ValueError naming it, before any Spark job
+    runs and without a file written."""
     import uuid
 
     d = str(tmp_path / kind)
     os.makedirs(d)
     with open(os.path.join(d, "meta.json"), "w") as f:
         json.dump(_NO_LOG_META[kind], f)
-    call = _entry_points(spark, d)[kind, fn]
-    sc = spark.sparkContext
-    group = f"no-log-{uuid.uuid4().hex[:12]}"
-    sc.setJobGroup(group, group)
-    try:
-        with pytest.raises(ValueError, match=re.escape(d)):
-            call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert sorted(os.listdir(d)) == ["meta.json"]
+    inputs = [("no log", None)] + [(fmt, fmt) for fmt in _STALE_FORMATS[kind]]
+    for name, fmt in inputs:
+        if fmt is not None:
+            os.makedirs(os.path.join(d, "commits"), exist_ok=True)
+            with open(os.path.join(d, "meta.json"), "w") as f:
+                json.dump(_NO_LOG_META[kind] | {"format": fmt}, f)
+            with open(os.path.join(d, "commits", "snap-00001.json"), "w") as f:
+                json.dump(_STALE_COMMIT[kind], f)
+        before = sorted(os.listdir(d))
+        call = _entry_points(spark, d)[kind, fn]
+        sc = spark.sparkContext
+        group = f"no-log-{uuid.uuid4().hex[:12]}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match=re.escape(d)) as err:
+                call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert fmt is None or fmt in str(err.value), name
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        assert sorted(os.listdir(d)) == before, name
+        if fmt is None:
+            assert before == ["meta.json"]
 
 
 def test_delete_racing_add_keeps_rows_exact(spark, tmp_path):
@@ -715,10 +742,25 @@ def test_ann_delete_racing_compact(spark, tmp_path):
     assert root2["stats"]["n_vectors"] == meta0["n_vectors"] - 1
 
 
+def _small_index_query(spark, d, kind):
+    """The rows a query of the :func:`_small_index` at ``d`` returns,
+    sorted, as JSON values."""
+    from rag_content_spark.plans import ann_index as ai, text_index as ti
+
+    if kind == "text":
+        rows = ti.query_text_index(spark, d, ["common", "w1"]).collect()
+    else:
+        rows = ai.query_ann_index(spark, d, [1.0, 2.0, 3.0, 4.0], topk=50).collect()
+    return sorted(list(r) for r in rows)
+
+
 def _small_index(spark, d, kind):
     """A 40-row text or ANN index at ``d``; returns its (add, query)
     calls and a frame of 4 more rows."""
     from rag_content_spark.plans import ann_index as ai, text_index as ti
+
+    def query():
+        return _small_index_query(spark, d, kind)
 
     if kind == "text":
         rows = spark.createDataFrame(
@@ -728,7 +770,7 @@ def _small_index(spark, d, kind):
         ti.build_text_index(rows.filter(F.col("doc_id") < 40), d, n_buckets=4)
         return (
             lambda df: ti.add_to_text_index(df, d),
-            lambda: sorted(ti.query_text_index(spark, d, ["common", "w1"]).collect()),
+            query,
             rows.filter(F.col("doc_id") >= 40),
         )
     rows = spark.createDataFrame(
@@ -738,7 +780,7 @@ def _small_index(spark, d, kind):
     ai.build_ann_index(rows.filter(F.col("vec_id") < 40), d, nlist=2, m=2, k=4)
     return (
         lambda df: ai.add_to_ann_index(df, d),
-        lambda: ai.query_ann_index(spark, d, [1.0, 2.0, 3.0, 4.0], topk=50).collect(),
+        query,
         rows.filter(F.col("vec_id") >= 40),
     )
 
@@ -767,9 +809,10 @@ def test_empty_add_claims_nothing(spark, tmp_path, kind):
     assert len(query()) >= 40
 
 
-def test_add_of_tokenless_docs_commits_lengths_only(spark, tmp_path):
-    """Documents without a token write no postings file: the add commits
-    their lengths alone, so n_docs counts them and reads still run."""
+def test_add_of_blank_docs_adds_length_rows(spark, tmp_path):
+    """Documents without a token add their length rows to the one
+    segment (its reserved partition, no term bucket), so n_docs counts
+    them and reads still run."""
     from rag_content_spark.plans import index_commit as ic, text_index as ti
 
     d = str(tmp_path / "ti")
@@ -777,9 +820,66 @@ def test_add_of_tokenless_docs_commits_lengths_only(spark, tmp_path):
     first = query()
     blank = spark.createDataFrame([(50, ""), (51, "   ")], "doc_id long, text string")
     assert add(blank)["n_docs"] == 42
-    assert ic.live_view(d)[1][-1]["dirs"].keys() == {"lengths"}
+    seg = ic.live_view(d)[1][-1]
+    assert [x for x in os.listdir(os.path.join(d, seg["dir"])) if "=" in x] == [
+        "bucket=-1"
+    ]
+    assert sorted(
+        tuple(r) for r in ic.read_union(spark, d, [seg]).select("doc_id", "dl", "token", "tf").collect()
+    ) == [(50, 0, None, 1), (51, 0, None, 1)]
     # the scores move with n_docs, the matching documents do not
     assert [r[0] for r in query()] == [r[0] for r in first]
     ti.delete_from_text_index(spark, d, [50])
     assert ti.compact_text_index(spark, d)["n_rows"] > 0
     assert ic.view_stats(*ic.live_view(d))["n_docs"] == 41
+
+
+_FRESH_QUERY = r"""
+import json, sys
+from rag_content_spark.session import get_spark
+from tests.test_index_commit import _small_index_query
+
+spark = get_spark("fresh-query", master="local[1]", shuffle_partitions=2)
+print(json.dumps(_small_index_query(spark, sys.argv[1], sys.argv[2])))
+"""
+
+
+@pytest.mark.parametrize("kind", ["text", "ann"])
+def test_compact_of_fully_deleted_index(spark, tmp_path, kind):
+    """Compacting an index whose every row is deleted claims a segment
+    of no rows: no staged dir is left unclaimed, a query returns no
+    rows here and in a fresh process, and a later add is read with exact
+    stats (the text case failed with UNABLE_TO_INFER_SCHEMA when a read
+    had to infer the empty segment's schema)."""
+    import subprocess
+    import sys
+
+    from rag_content_spark.plans import index_commit as ic, text_index as ti
+    from rag_content_spark.plans import ann_index as ai
+
+    d = str(tmp_path / kind)
+    add, query, more = _small_index(spark, d, kind)
+    delete = {"text": ti.delete_from_text_index, "ann": ai.delete_from_ann_index}[kind]
+    compact = {"text": ti.compact_text_index, "ann": ai.compact_ann_index}[kind]
+    delete(spark, d, list(range(40)))
+    assert compact(spark, d)["n_rows"] == 0
+    root, adds = ic.live_view(d)
+    assert root["kind"] == "compact" and adds == []
+    assert sorted(os.listdir(os.path.join(d, "data"))) == sorted(
+        os.path.basename(s["dir"]) for s in ic.commits(d)
+    )
+    assert query() == []
+    root_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _FRESH_QUERY, d, kind],
+        capture_output=True, text=True, cwd=root_dir, timeout=600,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="1", PYTHONPATH=root_dir),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == []
+    meta = add(more)
+    if kind == "text":
+        assert (meta["n_docs"], meta["sum_dl"]) == (4, 12)
+    else:
+        assert meta["n_vectors"] == 4
+    assert sorted(r[0] for r in query()) == [40, 41, 42, 43]

@@ -35,7 +35,7 @@ def _writer(index_dir: str, m: int, q) -> None:
     for i in range(m):
         claim(
             index_dir,
-            {"kind": "add", "dirs": [f"data/w{os.getpid()}-{i}"],
+            {"kind": "add", "dir": f"data/w{os.getpid()}-{i}",
              "stats": {"rows": 0}},
             attempts_out=attempts,
         )
