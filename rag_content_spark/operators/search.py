@@ -32,6 +32,14 @@ def postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     )
 
 
+def _avgdl() -> Column:
+    """``sum(dl) / count(1)``: a NULL text counts as a document of no
+    tokens, as in the persisted index's ``sum_dl / n_docs``, the
+    registry's DuckDB oracles and SQLite FTS5 (``avg(dl)`` would skip
+    it)."""
+    return (F.sum("dl") / F.count(F.lit(1))).alias("avgdl")
+
+
 def corpus_stats(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -43,8 +51,7 @@ def corpus_stats(
     round-trip. Computed in-plan here when the caller doesn't supply it.
     """
     return docs.select(F.size(tokens(text_col)).alias("dl")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
+        F.count(F.lit(1)).alias("n_docs"), _avgdl()
     )
 
 
@@ -82,9 +89,7 @@ def term_postings_one_scan(
         F.size(tk).alias("dl"),
         F.filter(tk, lambda t: t.isin(terms)).alias("_mt"),
     )
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
+    stats = base.agg(F.count(F.lit(1)).alias("n_docs"), _avgdl())
     per_term = F.transform(
         F.array_distinct("_mt"),
         lambda t: F.struct(

@@ -9,10 +9,10 @@ The reference persists FAISS binaries that only FAISS can read; the
   the index parquet PARTITIONED BY cell.
   Sidecars: ``centroids.parquet``, ``codebook.json``, ``meta.json``.
 - ``query_ann_index``   — pick the ``n_probe`` nearest cells
-  driver-side (tiny centroid table), read ONLY those partitions
-  (partition pruning on the cell directory), ADC-score the codes, and
-  optionally exact-refine the shortlist against the full vectors kept
-  in the same rows (column pruning keeps them out of the ADC scan).
+  driver-side (tiny centroid table), read ONLY those cell directories,
+  ADC-score the codes, and optionally exact-refine the shortlist
+  against the full vectors kept in the same rows, carried through the
+  shortlist of the same scan.
 
 Layout (format ``rag-spark-ann/3``, commit-logged, same protocol as
 text_index):
@@ -246,10 +246,15 @@ def query_ann_index(
 ) -> DataFrame:
     """Probe -> pruned scan -> ADC -> (optional) exact refine.
 
-    The returned plan's scans carry a ``cell IN (...)`` partition
-    filter (every live segment's scan — per-segment reads keep the
-    filter); with ``refine`` the full vectors are read ONLY for the
-    ``4 * topk`` ADC shortlist (broadcast self-join on the id)."""
+    Each live segment is read from the probed ``cell=NN`` directories
+    only, and the returned plan's scans carry a ``cell IN (...)``
+    partition filter. With ``refine`` the one scan carries each row's
+    vector through the ADC shortlist: every scan task keeps its
+    ``4 * topk`` best rows by ``(adc, id)``, vectors included, the
+    shortlist task keeps the best ``4 * topk`` of those, and the exact
+    distance ranks them to ``topk``: one job that reads the probed
+    cells once. The gather into the shortlist task is bounded: ``4 * topk``
+    vectors per scan task."""
     from rag_content_spark.functions.vector import (
         double_array_lit,
         euclidean,
@@ -271,22 +276,22 @@ def query_ann_index(
     )[:n_probe]
     cells = [int(c) for _, c in probes]
 
-    index = ic.read_live(spark, out_dir, id_col).filter(
+    index = ic.read_live(spark, out_dir, id_col, partitions=("cell", cells)).filter(
         F.col("cell").isin(cells)
     )
     table = pq_adc_table([float(x) for x in query_vec], codebook)
     adc = F.round(pq_adc_score("codes", table), 6)
-    shortlist = (
-        index.select(id_col, adc.alias("adc"))
-        .orderBy(F.asc("adc"), F.asc(id_col))
-        .limit(4 * topk if refine else topk)
-    )
     if not refine:
-        return shortlist
+        return (
+            index.select(id_col, adc.alias("adc"))
+            .orderBy(F.asc("adc"), F.asc(id_col))
+            .limit(topk)
+        )
     qlit = double_array_lit(query_vec)
-    exact = (
-        index.select(id_col, embedding_col)
-        .join(F.broadcast(shortlist), id_col)
+    return (
+        index.select(id_col, adc.alias("adc"), embedding_col)
+        .orderBy(F.asc("adc"), F.asc(id_col))
+        .limit(4 * topk)
         .select(
             id_col,
             "adc",
@@ -295,7 +300,6 @@ def query_ann_index(
         .orderBy(F.asc("exact"), F.asc(id_col))
         .limit(topk)
     )
-    return exact
 
 
 def add_to_ann_index(

@@ -33,6 +33,12 @@ Each commit claims ONE segment and records its ``dir`` and the
 ``schema`` its rows were written with, so every read of a segment, in
 any process, runs no schema inference, and a segment of no rows (a
 compaction of an index whose rows were all deleted) reads as empty.
+A serve read or a delete names the partition directories it needs
+(``bucket=NN``, ``cell=NN``), checked with ``os.path.isdir`` (the log
+is local-FS only: claims are ``os.link``), instead of handing Spark
+the segment root: Spark lists a path of more than 32 subdirectories
+with a distributed job, once per segment per read, and a text segment
+at the default 32 buckets holds 33. Compaction reads whole segments.
 
 The index modules (plans/text_index.py, plans/ann_index.py) state only
 their layout: ONE :class:`Component` per index — how its segments are
@@ -55,6 +61,7 @@ import random
 import re
 import time
 import uuid
+from collections.abc import Sequence
 from typing import NamedTuple
 
 import pyarrow as pa
@@ -260,22 +267,51 @@ def _schema(df: DataFrame, partition_col: str | None = None) -> dict:
     return nullable(StructType(fields)).jsonValue()
 
 
-def read_union(spark, index_dir: str, segments: list[dict]) -> DataFrame:
+def read_union(
+    spark,
+    index_dir: str,
+    segments: list[dict],
+    partitions: tuple[str, Sequence] | None = None,
+) -> DataFrame:
     """Union the segments of commit records ``segments`` with per-root
     reads — ``spark.read.parquet(a, b)`` rejects multiple partitioned
     roots (CONFLICTING_DIRECTORY_STRUCTURES), while per-root reads +
     unionByName keep partition pruning in EVERY scan (pinned in tests).
     Each segment is read with the schema its commit records, so no read
     infers one (a Spark job over the footers), and a segment of no rows,
-    which holds no parquet file, reads as empty."""
+    which holds no parquet file, reads as empty.
+
+    ``partitions``, a ``(column, values)`` pair, names the partition
+    directories the read needs: each segment is read from those of its
+    ``column=value`` directories that exist, with ``basePath`` at the
+    segment so the column stays a partition column, and a segment that
+    holds none of them is not read. Spark lists the subdirectories of a
+    path with a distributed job when there are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) of
+    them, and a segment root at the default 32 text buckets holds 33;
+    a few named directories are listed on the driver. When no segment
+    holds any, the read is an empty relation of the recorded schema,
+    which runs no job."""
     from pyspark.sql.types import StructType
 
-    dfs = [
-        spark.read.schema(StructType.fromJson(s["schema"])).parquet(
-            os.path.join(index_dir, s["dir"])
-        )
-        for s in segments
-    ]
+    dfs = []
+    for s in segments:
+        root = os.path.join(index_dir, s["dir"])
+        reader = spark.read.schema(StructType.fromJson(s["schema"]))
+        if partitions is None:
+            dfs.append(reader.parquet(root))
+            continue
+        col, values = partitions
+        paths = [os.path.join(root, f"{col}={v}") for v in values]
+        paths = [p for p in paths if os.path.isdir(p)]
+        if paths:
+            dfs.append(reader.option("basePath", root).parquet(*paths))
+    if not dfs:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        # an empty local relation: the plan over it folds to no job
+        schema = StructType.fromJson(segments[0]["schema"])
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table())
     return functools.reduce(DataFrame.unionByName, dfs)
 
 
@@ -284,14 +320,16 @@ def read_live(
     index_dir: str,
     id_col: str,
     view: tuple[dict, list[dict]] | None = None,
+    partitions: tuple[str, Sequence] | None = None,
 ) -> DataFrame:
     """The live rows of the index: the union of its live segments,
     anti-joined with the distinct ids of the live delete tombstones
     when any are live. ``view`` is a ``(root, adds)`` already listed by
     the caller, so a read that also needs the stats parses the log
-    once."""
+    once; ``partitions`` names the partition directories of the rows
+    to read (:func:`read_union`), None for every row."""
     rows, tombstones = view_segments(*(view or live_view(index_dir)))
-    df = read_union(spark, index_dir, rows)
+    df = read_union(spark, index_dir, rows, partitions)
     if not tombstones:
         return df
     dels = read_union(spark, index_dir, tombstones).select(id_col).distinct()
@@ -302,15 +340,16 @@ class Component(NamedTuple):
     """The one parquet component of an index layout; every segment of
     rows (build, add, compaction) is written by :func:`write_segment`.
     ``stats`` maps the manifest stats to the SQL aggregates that count
-    them, exactly, over a segment's rows. ``stats_rows`` is a SQL
-    predicate on the rows those aggregates read (the text index's
-    length rows), or None for every row: a delete reads only those rows
-    for its negative stats."""
+    them, exactly, over a segment's rows. ``stats_rows`` holds the
+    values of ``partition_col`` whose directories hold the rows those
+    aggregates read (the text index's length rows), or None for every
+    row: a delete reads only those directories for its negative
+    stats."""
 
     partition_col: str
     sort_cols: tuple[str, ...]
     stats: dict
-    stats_rows: str | None = None
+    stats_rows: Sequence | None = None
 
 
 def write_segment(
@@ -350,7 +389,7 @@ def delete_ids(spark, index_dir: str, ids, id_col: str, c: Component) -> dict:
     lands as a TOMBSTONE segment and one ``delete`` commit claims it,
     with the exact negative stats of the live rows it masks (so an
     absent or already-deleted id is a no-op in the stats); only the
-    rows ``c.stats_rows`` names are read for them. Readers anti-join
+    partitions ``c.stats_rows`` names are read for them. Readers anti-join
     live tombstones (:func:`read_live`); :func:`compact` drops the
     masked rows physically; :func:`vacuum_index` reclaims the
     tombstones. Id re-use after a delete is outside the contract.
@@ -370,9 +409,8 @@ def delete_ids(spark, index_dir: str, ids, id_col: str, c: Component) -> dict:
         # the optimizer to scan once per live segment
         ids = spark.createDataFrame(pa.table({id_col: pa.array(ids)}))
     ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    live = read_live(spark, index_dir, id_col)
-    if c.stats_rows:
-        live = live.filter(c.stats_rows)
+    parts = None if c.stats_rows is None else (c.partition_col, c.stats_rows)
+    live = read_live(spark, index_dir, id_col, partitions=parts)
     row = (
         live.join(ids, id_col, "leftsemi")
         .agg(*[F.expr(e).alias(k) for k, e in c.stats.items()])

@@ -51,10 +51,19 @@ one reducer); a query computes its term buckets DRIVER-SIDE from the
 same stable hash (no data touched), so every postings scan carries a
 ``bucket IN (...)`` partition filter — |terms| buckets read, not the
 corpus (per-segment reads keep the filter in every scan; pinned in
-tests). All of a term's postings live in exactly one bucket per
-segment, so the per-term df window over the pruned read is the true
-corpus df and scores are bit-identical to the on-the-fly scorer
-(operators/search.bm25_scores shares bm25_from_postings).
+tests). The read names those ``bucket=NN`` directories
+(index_commit.read_union), not the segment roots: Spark lists a path
+of more than 32 subdirectories
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``) with a
+distributed job, and a segment at the default 32 buckets holds 33: a
+read of the roots would run one listing job per segment on every query
+and delete. A segment that holds none of the query's buckets is not read
+at all. The cliff remains for a query whose terms fall in more than 32
+distinct buckets: it names more than 32 paths of a segment, and Spark
+lists those with a job. All of a term's postings live in exactly one
+bucket per segment, so the per-term df window over the pruned read is
+the true corpus df and scores are bit-identical to the on-the-fly
+scorer (operators/search.bm25_scores shares bm25_from_postings).
 """
 
 from __future__ import annotations
@@ -135,7 +144,7 @@ def _layout(meta: dict) -> ic.Component:
         "bucket",
         ("bucket", "token", meta["id_col"]),
         _STATS,
-        f"bucket = {LENGTHS_BUCKET}",
+        (LENGTHS_BUCKET,),
     )
 
 
@@ -187,7 +196,8 @@ def _pruned_read(
     spark: SparkSession, out_dir: str, terms: list[str], cols: tuple[str, ...]
 ) -> tuple[DataFrame, dict, tuple[dict, list[dict]]]:
     """(postings for ``terms`` as (id, token, *cols), meta, live view):
-    every live segment's scan carries the ``bucket IN (...)`` partition
+    each live segment is read from the directories of the terms'
+    buckets only, every scan carries the ``bucket IN (...)`` partition
     filter, and the rows are net of tombstones. Asking for
     ``positions`` raises if the index was built without them."""
     meta = ic.read_meta(out_dir, FORMAT)
@@ -200,7 +210,7 @@ def _pruned_read(
     view = ic.live_view(out_dir)
     buckets = sorted({_bucket_of(t, meta["n_buckets"]) for t in terms})
     post = (
-        ic.read_live(spark, out_dir, id_col, view)
+        ic.read_live(spark, out_dir, id_col, view, ("bucket", buckets))
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("token").isin(terms))
     )

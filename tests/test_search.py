@@ -532,6 +532,32 @@ def test_text_index_pruned_read_and_score_parity(spark, tmp_path):
     assert m and "bucket" in m.group(1), m.group(0) if m else plan[:800]
 
 
+def test_null_text_counts_as_zero_tokens_in_both_scorers(spark, tmp_path):
+    """A NULL text is a document of no tokens for avgdl, in the
+    persisted index (``sum_dl / n_docs``) and in the on-the-fly scorer
+    alike (FTS5's rule and the registry oracles'): N = 4, avgdl = 3/4,
+    so both give 0.412142 and 0.60997, bit for bit (``avg(dl)`` would
+    skip the NULL and give 0.491911 and 0.693147)."""
+    import struct
+
+    from rag_content_spark.plans.text_index import build_text_index, query_text_index
+
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, None), (3, ""), (4, "a")], "doc_id long, text string"
+    )
+    d = str(tmp_path / "ti")
+    build_text_index(docs, d, n_buckets=4)
+
+    def bits(df):
+        return sorted(
+            (r["doc_id"], struct.pack(">d", r["bm25"])) for r in df.collect()
+        )
+
+    got = bits(query_text_index(spark, d, ["a"]))
+    assert got == bits(bm25_scores(docs, ["a"]))
+    assert got == [(1, struct.pack(">d", 0.412142)), (4, struct.pack(">d", 0.60997))]
+
+
 def test_text_index_incremental_add_matches_full_build(spark, tmp_path):
     from pyspark.sql import functions as F
 

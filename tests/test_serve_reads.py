@@ -349,6 +349,174 @@ def test_term_reads_skip_length_rows_and_delete_stats_read_only_them(
     assert stats == expect and stats["n_docs"] == 497
 
 
+def test_query_ann_index_runs_one_job_with_the_two_step_rows(spark, tmp_path):
+    """The ANN refine carries the embedding through the ADC shortlist:
+    one scan of the probed cells and one job (two when the shortlist
+    was broadcast and joined back to the vectors), with the rows of
+    that two-step reference over a base and an add."""
+    from rag_content_spark.functions.vector import double_array_lit, euclidean
+    from rag_content_spark.plans import index_commit as ic
+    from rag_content_spark.plans.ann_index import (
+        add_to_ann_index,
+        build_ann_index,
+        query_ann_index,
+    )
+
+    emb = _emb(spark)
+    d = str(tmp_path / "ann")
+    build_ann_index(emb.filter(F.col("vec_id") % 2 == 0), d, nlist=4, m=4, k=16)
+    add_to_ann_index(emb.filter(F.col("vec_id") % 2 == 1), d)
+    topk = 5
+    for q_id in (3, 10):
+        q = list(emb.filter(F.col("vec_id") == q_id).first()["embedding"])
+        query_ann_index(spark, d, q, topk=topk, n_probe=2).collect()
+        with _jobs(spark) as ids:
+            got = query_ann_index(spark, d, q, topk=topk, n_probe=2).collect()
+        assert len(ids) == 1, ids
+        shortlist = query_ann_index(
+            spark, d, q, topk=4 * topk, n_probe=2, refine=False
+        )
+        vecs = ic.read_live(spark, d, "vec_id").select("vec_id", "embedding")
+        want = (
+            shortlist.join(vecs, "vec_id")
+            .select(
+                "vec_id",
+                "adc",
+                F.round(euclidean(F.col("embedding"), double_array_lit(q)), 6)
+                .alias("exact"),
+            )
+            .orderBy("exact", "vec_id")
+            .limit(topk)
+            .collect()
+        )
+        assert got == want and len(got) == topk
+        assert got[0]["vec_id"] == q_id and got[0]["exact"] == 0.0
+
+
+# ---- reads at the default layout -------------------------------------------
+
+
+def _wide_docs(spark, n=500):
+    """(doc_id, text) over a vocabulary wide enough that each of the
+    default 32 token buckets holds a term."""
+    import random
+
+    rng = random.Random(3)
+    vocab = WORDS * 25 + [f"w{i}" for i in range(300)]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(5, 40))))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _listing_jobs(spark) -> int:
+    """Parallel file-listing jobs run so far in this JVM: Spark lists
+    the subdirectories of a read path with a job of its own when there
+    are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+    return metrics.METRIC_PARALLEL_LISTING_JOB_COUNT().getCount()
+
+
+def _partition_dirs(d, segment) -> list[str]:
+    root = os.path.join(d, segment["dir"])
+    return [x for x in os.listdir(root) if "=" in x]
+
+
+@pytest.fixture
+def default_index(spark, tmp_path):
+    """A positional text index at the default 32 buckets over a base
+    and an add: each segment holds 33 partition directories, the
+    length rows' included."""
+    from rag_content_spark.plans import index_commit as ic
+    from rag_content_spark.plans import text_index as ti
+
+    docs = _wide_docs(spark)
+    d = str(tmp_path / "ti")
+    ti.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), d, positions=True)
+    ti.add_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), d)
+    assert [len(_partition_dirs(d, s)) for s in ic.commits(d)] == [33, 33]
+    return d
+
+
+@pytest.mark.parametrize("read", ["bm25", "phrase"])
+def test_default_layout_term_read_runs_at_most_three_jobs(
+    spark, default_index, read
+):
+    """A steady BM25 or phrase read at the default layout names the
+    partition directories of its terms, so Spark lists no segment root
+    of 33 directories with a job of its own (5 and 4 jobs when each of
+    the two segments was listed that way)."""
+    from rag_content_spark.plans import text_index as ti
+
+    d = default_index
+    run = {
+        "bm25": lambda: ti.query_text_index(spark, d, TERMS),
+        "phrase": lambda: ti.phrase_query_text_index(spark, d, "the data"),
+    }[read]
+    first = sorted(run().collect())
+    listed = _listing_jobs(spark)
+    with _jobs(spark) as ids:
+        again = sorted(run().collect())
+    assert again == first and len(first) > 0
+    assert _listing_jobs(spark) == listed
+    assert 1 <= len(ids) <= 3, ids
+
+
+def test_default_layout_text_delete_runs_no_listing_job(spark, default_index):
+    """A delete reads its negative stats from the named ``bucket=-1``
+    directories only: no listing job, and the stats a fresh read of the
+    surviving rows counts."""
+    from rag_content_spark.plans import index_commit as ic
+    from rag_content_spark.plans import text_index as ti
+
+    d = default_index
+    listed = _listing_jobs(spark)
+    with _jobs(spark) as ids:
+        stats = ti.delete_from_text_index(spark, d, list(range(0, 500, 7)))
+    assert _listing_jobs(spark) == listed
+    assert 1 <= len(ids) <= MAINTENANCE_JOBS["delete_from_text_index"], ids
+    want = (
+        ic.read_live(spark, d, "doc_id")
+        .filter(F.col("bucket") == ti.LENGTHS_BUCKET)
+        .agg(F.count(F.lit(1)), F.sum("dl"))
+        .first()
+    )
+    assert (stats["n_docs"], stats["sum_dl"]) == tuple(want)
+    assert stats["n_docs"] == 500 - len(range(0, 500, 7))
+
+
+def test_read_of_absent_buckets_runs_no_job(spark, tmp_path):
+    """Terms whose buckets no segment holds read no segment: the read is
+    an empty relation of the recorded schema, and neither building it
+    nor collecting it runs a job, a live tombstone included."""
+    from rag_content_spark.plans import index_commit as ic
+    from rag_content_spark.plans import text_index as ti
+
+    docs = _docs(spark)
+    d = str(tmp_path / "ti")
+    ti.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), d, positions=True)
+    ti.add_to_text_index(docs.filter(F.col("doc_id") % 2 == 1), d)
+    ti.delete_from_text_index(spark, d, [0, 1])
+    held = {x for s in ic.commits(d) if s["kind"] != "delete"
+            for x in _partition_dirs(d, s)}
+    absent = [t for t in (f"zz{i}" for i in range(200))
+              if f"bucket={ti._bucket_of(t, 32)}" not in held][:2]
+    assert len(held) < 33 and len(absent) == 2
+    reads = {
+        "bm25": lambda ts: ti.query_text_index(spark, d, ts),
+        "phrase": lambda ts: ti.phrase_query_text_index(spark, d, " ".join(ts)),
+        "proximity": lambda ts: ti.proximity_query_text_index(spark, d, ts, 4),
+    }
+    for name, read in reads.items():
+        with _jobs(spark) as ids:
+            df = read(absent)
+            rows = df.collect()
+        assert ids == [] and rows == [], name
+        assert df.schema == read(TERMS).schema, name
+
+
 def test_ann_add_counts_during_its_write(spark, tmp_path):
     """An add runs no count() job ahead of its write (3 jobs when it
     did), and its n_vectors stays exact for an empty add."""

@@ -8,7 +8,11 @@ Why the curve: every read assembles the live view by scanning
 live segment). The round-8 verdict asked where that starts to matter
 and whether snapshot pinning is needed. This probe appends K small adds
 one at a time and times a phrase lookup after each, so the per-segment
-overhead is measured, not asserted.
+overhead is measured, not asserted. Each point also records the
+Spark jobs and tasks the lookup ran (statusTracker, through a job
+group): at 64 buckets a segment holds 65 partition directories, which
+Spark lists with a job of its own whenever a read hands it the
+segment root.
 
 Usage: python tools/probe_index_100x.py [sf_dir] [out.json]
 """
@@ -23,6 +27,27 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _counted(spark, fn):
+    """``(fn(), seconds, jobs, tasks)``: the Spark jobs and tasks
+    ``fn`` ran, through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group)
+    t0 = time.time()
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    elapsed = time.time() - t0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds]
+    return out, elapsed, len(jobs), sum(s.numTasks for s in stages if s)
 
 
 def main() -> int:
@@ -81,15 +106,17 @@ def main() -> int:
         t0 = time.time()
         add_to_text_index(batch, d)
         t_add = time.time() - t0
-        t0 = time.time()
-        k = phrase_query_text_index(spark, d, "the spark").count()
-        t_lookup = time.time() - t0
+        k, t_lookup, jobs, tasks = _counted(
+            spark, lambda: phrase_query_text_index(spark, d, "the spark").count()
+        )
         n_commits = len(ic.commits(d))
         curve.append(
             {
                 "n_commits": n_commits,
                 "add_s": round(t_add, 2),
                 "lookup_s": round(t_lookup, 2),
+                "lookup_jobs": jobs,
+                "lookup_tasks": tasks,
                 "rows": k,
             }
         )
